@@ -375,11 +375,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // count Spark jobs per query: eager driver-side jobs (collect/isEmpty
     // during plan construction) are invisible in wall time alone
-    val jobCounter = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCounter.incrementAndGet()
-    })
+    val queryJobs = graft.obs.QueryJobs.attach(spark)
     // unrecorded warmup: JIT-compile the parquet scan / shuffle / codegen
     // machinery so the chunk's first real query isn't billed for it
     if (!sys.env.get("SPARK_GRAFT_BENCH_WARMUP").contains("0")) {
@@ -418,13 +414,13 @@ object Bench {
     val warmThisPass = pass <= warmPasses
     val names = selectedNames
     for (name <- names if !errors.contains(name)) {
+      queryJobs.take() // drop earlier jobs: warmup, canary, last warm rerun
       val t0 = System.nanoTime()
-      val j0 = jobCounter.get()
       try {
         SparkEntry.queries(name)(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
         times(name) = dt
-        jobs(name) = jobCounter.get() - j0
+        jobs(name) = queryJobs.take().size.toLong
         System.err.println(f"[bench] pass $pass $name%-26s$dt%9.2fs  ${jobs(name)}%4d jobs")
       } catch {
         case e: Throwable =>

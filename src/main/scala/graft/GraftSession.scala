@@ -18,10 +18,7 @@ object GraftSession {
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
-      // SPARK_GRAFT_AQE=false flips AQE off for A/B job-overhead
-      // experiments; default on (runtime coalesce + skew-join)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // let AQE pick the output partitioning INSIDE cached plans too:

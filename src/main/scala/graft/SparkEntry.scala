@@ -48,7 +48,8 @@ object SparkEntry {
       // their SHAPE (id arithmetic is periodic) at ~16x fewer true
       // pairs (5.0M -> 311k at sf0.1) — the full-density fixture was a
       // bench-budget problem, not a better test (round-9/10 postmortem;
-      // the realistic-corpus scale evidence lives in GraphSimScale)
+      // the realistic-corpus scale evidence is the tools.Scale
+      // dhashNearDups leg)
       val pairs = Multimodal.dhashNearDups(
         Multimodal.syntheticPixelAssets(
           t(s, dir, "documents").filter(col("doc_id") % 4 === 0)),

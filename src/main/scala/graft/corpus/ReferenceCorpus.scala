@@ -72,7 +72,7 @@ object ReferenceCorpus {
     * `mult` replicates every driving key `mult`× (k -> k*mult+i), which
     * multiplies fixture LINE counts while keeping the file/recipe layout
     * — the growth regime of real benchmark-log corpora (logs get longer,
-    * the recipe tree doesn't). Used by [[graft.tools.DagScale]] for
+    * the recipe tree doesn't). Used by the `dag` leg of [[graft.tools.Scale]] for
     * wall-vs-data curves; the oracle suite always runs at mult=1. */
   def ensure(spark: SparkSession, sfDir: String, mult: Int = 1): String = synchronized {
     require(mult >= 1)

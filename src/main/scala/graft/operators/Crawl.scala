@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *   3. the seen-set anti-join is url-keyed — declared after the
   *      aggregate so it never inflates the shuffle, and because the
   *      join key IS the aggregate key Catalyst is free to re-place it:
-  *      the executed plan (ExplainOne q132) pushes a broadcast
+  *      the executed plan (Inspect plan q132) pushes a broadcast
   *      LeftAnti BELOW the aggregate, filtering seen URLs before the
   *      shuffle; a corpus-scale seen set degrades to a url-keyed SMJ
   *      anti that reuses the dedup partitioning — either way no second

@@ -491,8 +491,8 @@ object Dedup {
   /** 60-bit SimHash ([[graft.expressions.SimHash60]]) — the wide sketch
     * for corpora where the 32-bit space saturates (chance Hamming<=3
     * collisions overtake true near-dups around 10^5 documents; measured
-    * in tools/ScaleSmoke). Same md5-prefix token hash as hash60, so the
-    * ANSI-SQL mirror is exact. */
+    * by the tools.Scale simhash legs). Same md5-prefix token hash as
+    * hash60, so the ANSI-SQL mirror is exact. */
   def simhash60(text: Column): Column =
     call_function("graft_simhash60", TextAnalysis.tokens(text))
 

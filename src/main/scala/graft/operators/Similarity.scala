@@ -225,7 +225,7 @@ object Similarity {
     * at scale: a struct aggregation buffer is not UnsafeRow-mutable, so
     * Spark plans a SortAggregate, which materializes and SORTS all
     * n × nlist joined struct rows before the partial min (measured on
-    * the ScaleSmoke annTopK leg: 4.8 GB sorted, ~600 s of pipeline
+    * the tools.Scale annTopK leg: 4.8 GB sorted, ~600 s of pipeline
     * time, for a 128 k × 357 assignment whose cosines cost ~15 s).
     * Packing the same ordering into ONE long —
     *   packed = round(cos, 6)·1e6 · 2²¹ + (2²¹-1 − cellIdx)
@@ -305,7 +305,7 @@ object Similarity {
     * [[Dedup.semDedup]], and for the same reason: the literal-table
     * `transform` form interprets its lambda per cell per row, and at
     * the sqrt(n) nlist sizing every real corpus uses it inverts the
-    * whole point of IVF (measured on the ScaleSmoke annTopK leg:
+    * whole point of IVF (measured on the tools.Scale annTopK leg:
     * 64 s vs brute force's 0.8 s at 128 k vectors, nlist = 357).
     * [[assignCells]] keeps cellsNearestFirst's exact contract (argmax
     * 6-decimal cosine, ties toward the smaller cell) as a packed-long

@@ -224,10 +224,8 @@ object CsvSource {
         val cores = spark.sparkContext.defaultParallelism.toLong
         val lineParts = math.min(
           math.max(1L, totalBytes / (1L << 20) + 1), cores * 4).toInt
-        // SPARK_GRAFT_LINE_REPART=0 disables the shuffle (dev A/B only)
-        val repartOn = !sys.env.get("SPARK_GRAFT_LINE_REPART").contains("0")
         val lines2 =
-          if (repartOn && lineParts >= files.size * 2 &&
+          if (lineParts >= files.size * 2 &&
               totalBytes < cores * (2L << 20))
             lines.repartition(lineParts)
           else lines

@@ -1,9 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.obs.QueryJobs
 
 /** Spark-job budgets for representative queries: every driver job is a
   * full pass over (some of) the data at cluster scale, so a creeping
@@ -16,32 +15,8 @@ class JobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
 
-  private def jobsOf(q: String): Long = {
-    val counter = new AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      SparkEntry.queries(q)(spark, dir).count()
-      // job-start events are delivered asynchronously; every job has
-      // completed by the time count() returns, but on a loaded machine
-      // the bus can drain late — poll until the count is stable instead
-      // of trusting a fixed sleep (listenerBus.waitUntilEmpty is
-      // private[spark], so stability is the observable proxy)
-      var prev = -1L
-      var stable = 0
-      var rounds = 0
-      while (stable < 3 && rounds < 100) {
-        Thread.sleep(100)
-        val c = counter.get
-        if (c == prev) stable += 1 else { stable = 0; prev = c }
-        rounds += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    counter.get
-  }
+  private def jobsOf(q: String): Long =
+    QueryJobs.of(spark)(SparkEntry.queries(q)(spark, dir).count())._2.size.toLong
 
   // (query, ceiling): generous — see scaladoc
   private val budgets = Seq(
@@ -58,7 +33,7 @@ class JobBudgetSpec extends AnyFunSuite {
     // levels, no per-file task storms) without pinning planner noise
     "q64_corpus_sklearn_summary" -> 90L,
     // full 11-recipe summary DAG: 195 jobs measured, constant across
-    // passes and across 16x data (DagScale) — the DAG's scale story
+    // passes and across 16x data (the Scale dag leg) — the DAG's scale story
     // rests on that constancy, so pin it like q64
     "q46_corpus_summary_dag" -> 230L,
     "q59_corpus_bs_summary" -> 25L, // 1-child summary chain, 11 measured

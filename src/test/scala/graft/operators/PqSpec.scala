@@ -126,8 +126,8 @@ class PqSpec extends AnyFunSuite {
   test("trained ADC recall@10 beats the seed codebook and a floor; training is deterministic") {
     // the synthetic embeddings are clusterless — PQ's worst case — so
     // recall wants fine subspaces: m=16, ksub=32 measures 0.455 trained
-    // vs 0.27x seeded (tools.PqProbe); everything is deterministic, the
-    // floors only leave margin for fixture regeneration
+    // vs 0.27x seeded (a one-off m/ksub/iters sweep); everything is
+    // deterministic, the floors only leave margin for fixture regeneration
     val q = emb.filter(col("vec_id") < 20)
     val exact = Similarity.bruteForceL2TopK(q, emb, "vec_id", "embedding", k = 10)
       .select("query_id", "neighbor_id")

@@ -71,23 +71,13 @@ class RecipePipelineSpec extends AnyFunSuite {
          |series: [impl]
          |axis: [size]
          |""".stripMargin
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val out =
-      try {
-        val o = Benchmark.fromString(spark, recipe).getAggregatedData().collect()
-        Thread.sleep(500)
-        o
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (out, jobs) = graft.obs.QueryJobs.of(spark)(
+      Benchmark.fromString(spark, recipe).getAggregatedData().collect())
     assert(out.length == 6) // 2 impls x 3 sizes
     // driver-side header peeks are plain file reads, not Spark jobs; the
     // data path is ONE multi-file csv scan + inference + aggregate —
     // far fewer jobs than files
-    assert(jobs.get() <= 12, s"120-file recipe launched ${jobs.get()} jobs")
+    assert(jobs.size <= 12, s"120-file recipe launched ${jobs.size} jobs")
   }
 
   test("the reference's 'precompute:' typo key is silently ignored (quirk parity)") {
