@@ -1334,19 +1334,9 @@ object SparkEntry {
     //      the tasks, rows never on the driver); fixture = 3 copies of
     //      nation.db, so the oracle is nation × 3
     "q117_sqlite_glob" -> ((s, dir) => {
-      val root = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_sqlite_shards_v1")
-      synchronized {
-        if (!new java.io.File(root, ".complete").isFile) {
-          root.mkdirs()
-          val src = sqliteFixture
-          for (i <- 0 until 3)
-            java.nio.file.Files.copy(src,
-              root.toPath.resolve(s"shard$i.db"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          java.nio.file.Files.write(
-            root.toPath.resolve(".complete"), Array.emptyByteArray)
-        }
+      val root = graft.sources.Shards.fixture("graft_sqlite_shards_v1") { d =>
+        for (i <- 0 until 3)
+          java.nio.file.Files.copy(sqliteFixture, java.nio.file.Paths.get(d, s"shard$i.db"))
       }
       graft.sources.Sqlite.scanGlob(s, s"$root/shard*.db", "nation")
         .groupBy(col("n_regionkey").cast("int").as("n_regionkey"))

@@ -7,6 +7,8 @@ import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.Shards
+
 /** Deterministic fixture trees for the ported reference recipe corpus
   * (test scaffolding, not an operator: the driver-side writes here are
   * bounded file generation that happens once per sf directory).
@@ -74,16 +76,16 @@ object ReferenceCorpus {
     * — the growth regime of real benchmark-log corpora (logs get longer,
     * the recipe tree doesn't). Used by the `dag` leg of [[graft.tools.Scale]] for
     * wall-vs-data curves; the oracle suite always runs at mult=1. */
-  def ensure(spark: SparkSession, sfDir: String, mult: Int = 1): String = synchronized {
+  def ensure(spark: SparkSession, sfDir: String, mult: Int = 1): String = {
     require(mult >= 1)
-    val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_") +
-      (if (mult > 1) s"_x$mult" else "")
+    val tag = Shards.sfTag(sfDir) + (if (mult > 1) s"_x$mult" else "")
     // bump the version suffix whenever fixture content changes — the
-    // marker below caches the tree across JVMs
-    val root = new File(sys.props("java.io.tmpdir"), s"graft_corpus_v9_$tag")
-    val marker = new File(root, ".complete")
-    if (marker.isFile) return root.getPath
+    // fixture marker caches the tree across JVMs
+    Shards.fixture(s"graft_corpus_v9_$tag")(write(spark, sfDir, mult, _))
+  }
 
+  /** Writes the fixture tree of `sfDir` × `mult` into `dir`. */
+  private def write(spark: SparkSession, sfDir: String, mult: Int, dir: String): Unit = {
     val files = scala.collection.mutable.LinkedHashMap.empty[String, StringBuilder]
     def line(path: String, s: String): Unit =
       files.getOrElseUpdate(path, new StringBuilder).append(s).append('\n')
@@ -376,29 +378,22 @@ object ReferenceCorpus {
       line(f, s"${fmt(med - 0.25)}, ${fmt(med)}, ${fmt(med + 0.5)}")
     }
 
-    // ---- write everything, then recipes, then the marker ----
-    val tmp = new File(root.getParent, root.getName + ".tmp")
-    if (tmp.exists()) deleteRecursively(tmp)
+    // ---- write everything, then recipes ----
     for ((rel, sb) <- files) {
-      val f = new File(tmp, rel)
+      val f = new File(dir, rel)
       f.getParentFile.mkdirs()
       Files.write(f.toPath, sb.toString.getBytes(StandardCharsets.UTF_8))
     }
     for ((rel, text) <- recipeFiles) {
-      val f = new File(tmp, rel)
+      val f = new File(dir, rel)
       f.getParentFile.mkdirs()
       Files.write(f.toPath, text.getBytes(StandardCharsets.UTF_8))
     }
     // reference globs are CWD-relative ('runs/...'), ours are
     // recipe-dir-relative: a raw/runs -> ../runs symlink keeps the raw
     // recipes byte-verbatim
-    Files.createSymbolicLink(Paths.get(tmp.getPath, "raw", "runs"),
+    Files.createSymbolicLink(Paths.get(dir, "raw", "runs"),
       Paths.get("..", "runs"))
-    if (root.exists()) deleteRecursively(root)
-    if (!tmp.renameTo(root))
-      throw new java.io.IOException(s"could not move $tmp to $root")
-    Files.write(marker.toPath, Array.emptyByteArray)
-    root.getPath
   }
 
   /** Ensures the fixture tree, then writes the derived
@@ -415,11 +410,5 @@ object ReferenceCorpus {
     if (!f.isFile)
       Files.write(f.toPath, text.getBytes(StandardCharsets.UTF_8))
     f.getPath
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory && !Files.isSymbolicLink(f.toPath))
-      f.listFiles().foreach(deleteRecursively)
-    f.delete()
   }
 }

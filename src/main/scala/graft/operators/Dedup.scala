@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.cosine
-import graft.operators.TextAnalysis.{fingerprint, hash32, hash60, wordShingles}
+import graft.operators.TextAnalysis.{fingerprint, hash60, wordShingles}
 
 /** Deduplication operators for large-scale document corpora: exact
   * (hash-groupBy), MinHash+LSH banding, SimHash, exact n-gram Jaccard,
@@ -774,6 +774,16 @@ object Dedup {
       .distinct()
   }
 
+  /** The convergence signature of a CC edge multiset (u, v): its size
+    * and the exact SUM of the edges' 64-bit hashes. Star rounds emit
+    * duplicate edges, so the state is a multiset; a sum counts every
+    * copy, where an XOR cancels each edge present an even number of
+    * times ({a,a,b} and {b,c,c} would share a signature). DECIMAL(38,0)
+    * holds the sum of 10^19 hashes, so it cannot overflow under ANSI. */
+  private[operators] def ccSignature(e: DataFrame): Row =
+    e.agg(count(lit(1)),
+      sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
+
   /** Connected components over an undirected near-dup edge list — the
     * step that turns pairwise candidates into dedup clusters (every
     * document maps to its cluster's minimum id, the canonical
@@ -807,7 +817,6 @@ object Dedup {
     * layout, which costs more than the "redundant" dedup exchange saves.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = pairs.sparkSession
     import org.apache.spark.storage.StorageLevel
 
     def canon(e: DataFrame): DataFrame =
@@ -849,13 +858,10 @@ object Dedup {
         .unionAll(mins.select(col("u"), col("m").as("v")))
     }
 
-    def sig(e: DataFrame) =
-      e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
-
     var e = canon(pairs.select(col(pairs.columns.head).as("u"),
       col(pairs.columns(1)).as("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var signature = sig(e)
+    var signature = ccSignature(e)
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
@@ -867,7 +873,7 @@ object Dedup {
       // signature aggregate below — ONE driver job per round where the
       // old eager-checkpoint + signature pair was two.
       val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val nextSig = sig(next)
+      val nextSig = ccSignature(next)
       converged = nextSig == signature
       signature = nextSig
       e.unpersist()

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Scale-adaptive input spread for CPU-heavy operator entry maps
   * (shingle md5, codec decode, vector math).
@@ -32,25 +34,34 @@ import org.apache.spark.sql.DataFrame
   * LogicalRDD) defaults to `spark.sql.defaultSizeInBytes` (huge) and
   * would silently never spread. So when the estimate says throughput,
   * the verdict is confirmed against the plan's ACTUAL partition count
-  * (`df.rdd.getNumPartitions`) — but ONLY for shuffle-free plans
-  * (scan/project/filter/generate shapes, which is exactly where the
-  * hole lives): on a plan that already contains a shuffle-inducing
-  * operator, materializing the RDD under AQE would EXECUTE the upstream
-  * query stages driver-eagerly, and the shuffle's own partitioning
-  * (AQE-coalesced) already spreads the data. The probe runs only in the
-  * (rare locally) big-estimate branch, so the latency path pays nothing
-  * extra.
+  * (`df.rdd.getNumPartitions`) — but ONLY for plans built wholly from
+  * an allowlist of exchange-free nodes (scan/project/filter/generate
+  * shapes, which is exactly where the hole lives) with no subquery in
+  * any expression. Anything else might make the probe a job: under AQE,
+  * materializing the RDD EXECUTES the upstream query stages and
+  * subqueries driver-eagerly, and a shuffle's own partitioning
+  * (AQE-coalesced) already spreads the data. An allowlist fails safe —
+  * a node it does not know keeps the natural layout instead of running
+  * a job. The probe runs only in the (rare locally) big-estimate
+  * branch, so the latency path pays nothing extra.
   */
 private[graft] object Spread {
   import org.apache.spark.sql.catalyst.plans.logical._
 
-  /** True when physically planning `plan` cannot insert an exchange —
-    * i.e. `df.rdd` is pure driver-side planning, never a job. */
+  /** True when `plan` holds only nodes that physical planning maps
+    * without an exchange, and no subquery — i.e. `df.rdd` is pure
+    * driver-side planning, never a job. The object nodes are the 1:1
+    * per-partition maps a typed `Dataset` adds around them. A cached
+    * relation not yet filled counts as the plan it caches: AQE fills it
+    * as a query stage. */
   private def shuffleFree(plan: LogicalPlan): Boolean = !plan.exists {
-    case _: Aggregate | _: Join | _: Window | _: Sort | _: Distinct |
-         _: RepartitionOperation | _: GlobalLimit | _: SetOperation |
-         _: Deduplicate => true
-    case _ => false
+    case r: InMemoryRelation => !r.cacheBuilder.isCachedColumnBuffersLoaded &&
+      !shuffleFree(r.cacheBuilder.logicalPlan)
+    case n @ (_: LeafNode | _: Project | _: Filter | _: Generate | _: Union |
+              _: LocalLimit | _: SerializeFromObject | _: DeserializeToObject |
+              _: MapElements | _: MapPartitions | _: TypedFilter) =>
+      n.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]]))
+    case _ => true
   }
 
   def scan(df: DataFrame): DataFrame = {

@@ -429,8 +429,6 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     (typed, Some(row.getAs[Long]("__nrows")), badOf)
   }
 
-  private def inferTypes(df: DataFrame): DataFrame = inferTypesCounting(df)._1
-
   private def aggExpr(fn: String, c: Column): Column = fn match {
     case "min" => min(c)
     case "max" => max(c)

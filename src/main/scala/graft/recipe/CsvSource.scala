@@ -1,7 +1,7 @@
 package graft.recipe
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -373,16 +373,5 @@ object CsvSource {
         .sortBy(_._2.head.path)
         .map { case ((names, _), fis) => readGroup(spark, recipe, names, fis) }
     }
-  }
-
-  /** Full scan: child frames first (matching the reference's input
-    * order, aggregate.py:167-173), then file groups, union by name. */
-  def scan(spark: SparkSession, recipe: Recipe,
-           extraFrames: Seq[DataFrame] = Seq.empty,
-           inputs: Option[Seq[String]] = None): DataFrame = {
-    val all = extraFrames ++ scanFiles(spark, recipe, inputs)
-    if (all.isEmpty)
-      throw RecipeError("recipe has no inputs (no path matches, no child configs)")
-    all.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 }

@@ -39,8 +39,8 @@ import org.apache.spark.sql.types._
   * DataFileReader#sync algorithm) and a block belongs to the split
   * where its first byte lies, so every block is read exactly once and
   * a single 10 GB shard fans out across executors — the one-task-per-
-  * file ceiling of the gzip family doesn't apply. Writes shard like
-  * [[Warc]]/[[TfRecord]] (salt-routed, temp+rename commit) with a
+  * file ceiling of the gzip family doesn't apply. Writes shard through
+  * [[Shards.write]] (salt-routed, temp+rename commit) with a
   * per-shard sync marker derived deterministically from schema+shard
   * (two builds of one corpus are byte-identical). */
 object Avro {
@@ -509,7 +509,7 @@ object Avro {
 
   /** Write `df` as `files` Avro object-container shards
     * (`part-NNNNN.avro`), salt-routed on `saltCol`, temp+rename
-    * committed (the [[Warc]] posture). `codec` ∈ {"null", "deflate"}.
+    * committed ([[Shards.write]]). `codec` ∈ {"null", "deflate"}.
     * Rows buffer into blocks of ≤ `blockRows` rows / ~`blockBytes`
     * uncompressed bytes, whichever binds first — bounded memory per
     * task, many sync points per shard (what makes the read side
@@ -517,61 +517,38 @@ object Avro {
   def write(df: DataFrame, path: String, files: Int, saltCol: String,
             codec: String = "deflate", blockRows: Int = 4096,
             blockBytes: Int = 1 << 18): Unit = {
-    require(files >= 1, s"files must be >= 1, got $files")
     require(codec == "null" || codec == "deflate",
       s"codec must be null|deflate, got $codec")
     require(blockRows >= 1 && blockBytes >= 1, "block bounds must be positive")
-    import org.apache.spark.sql.functions._
     val fields = fieldsOf(df.schema)
     val schema = schemaJson(fields)
-    val spark = df.sparkSession
-    val confEntries = TaskConf.snapshot(spark)
-    val out = new Path(path)
-    out.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(out)
-    df.withColumn("__shard", pmod(xxhash64(col(saltCol)), lit(files.toLong)))
-      .repartition(files, col("__shard"))
-      .drop("__shard")
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val tc = org.apache.spark.TaskContext.get()
-          val pid = tc.partitionId()
-          val shard = new Path(path, f"part-$pid%05d.avro")
-          val tmp = new Path(path,
-            f".part-$pid%05d.attempt-${tc.taskAttemptId()}%d.tmp")
-          val fs = shard.getFileSystem(TaskConf.rebuild(confEntries))
-          val sync = syncFor(schema, pid)
-          try {
-            val os = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-            try {
-              os.write(headerBytes(schema, codec, sync))
-              val block = new ByteArrayOutputStream(blockBytes + 1024)
-              var rows = 0
-              def flush(): Unit = if (rows > 0) {
-                val raw = block.toByteArray
-                val payload = if (codec == "deflate") deflate(raw) else raw
-                val head = new ByteArrayOutputStream(20)
-                writeZigZag(head, rows.toLong)
-                writeZigZag(head, payload.length.toLong)
-                os.write(head.toByteArray)
-                os.write(payload)
-                os.write(sync, 0, 16)
-                block.reset(); rows = 0
-              }
-              it.foreach { r =>
-                fields.zipWithIndex.foreach { case ((_, t), iCol) =>
-                  writeValue(block, t, if (r.isNullAt(iCol)) null else r.get(iCol))
-                }
-                rows += 1
-                if (rows >= blockRows || block.size() >= blockBytes) flush()
-              }
-              flush()
-            } finally os.close()
-            if (fs.exists(shard)) fs.delete(shard, false)
-            if (!fs.rename(tmp, shard) && !fs.exists(shard))
-              throw AvroError(s"could not commit $tmp -> $shard")
-          } finally fs.delete(tmp, false)
+    Shards.write(df, path, files, saltCol, AvroError(_)) { (shard, it) =>
+      val sync = syncFor(schema, shard.id)
+      shard.commit(shard.name("avro")) { os =>
+        os.write(headerBytes(schema, codec, sync))
+        val block = new ByteArrayOutputStream(blockBytes + 1024)
+        var rows = 0
+        def flush(): Unit = if (rows > 0) {
+          val raw = block.toByteArray
+          val payload = if (codec == "deflate") deflate(raw) else raw
+          val head = new ByteArrayOutputStream(20)
+          writeZigZag(head, rows.toLong)
+          writeZigZag(head, payload.length.toLong)
+          os.write(head.toByteArray)
+          os.write(payload)
+          os.write(sync, 0, 16)
+          block.reset(); rows = 0
         }
+        it.foreach { r =>
+          fields.zipWithIndex.foreach { case ((_, t), iCol) =>
+            writeValue(block, t, if (r.isNullAt(iCol)) null else r.get(iCol))
+          }
+          rows += 1
+          if (rows >= blockRows || block.size() >= blockBytes) flush()
+        }
+        flush()
       }
+    }
   }
 
   // ------------------------------------------------------------- read
@@ -651,11 +628,8 @@ object Avro {
            splitBytes: Long = 32L << 20): DataFrame = {
     require(splitBytes >= (1L << 16),
       s"splitBytes must be >= 64 KiB, got $splitBytes")
-    val p = new Path(pattern)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-      .filter(_.isFile).sortBy(_.getPath.toString)
-    if (stats.isEmpty) throw AvroError(s"no files match $pattern")
+    val stats = Shards.list(spark, pattern, AvroError(_))
+    val fs = stats.head.getPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val heads = stats.map { st =>
       val in = fs.open(st.getPath)
       try {
@@ -680,21 +654,12 @@ object Avro {
       starts.map(s => (h.path, s, math.min(s + splitBytes, h.len),
         h.headerEnd, h.codec, h.sync))
     }
-    val confEntries = TaskConf.snapshot(spark)
-    val rdd = spark.sparkContext
-      .parallelize(splits, math.max(1, splits.length))
-      .flatMap { case (pathStr, start, end, headerEnd, codec, sync) =>
-        val conf = TaskConf.rebuild(confEntries)
-        val hp = new Path(pathStr)
-        val in = hp.getFileSystem(conf).open(hp)
-        var closed = false
-        def closeQuietly(): Unit = if (!closed) {
-          closed = true
-          try in.close() catch { case _: Exception => () }
-        }
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => closeQuietly()))
-        val fname = new java.io.File(hp.toUri.getPath).getName
+    val rdd = Shards.perFile(spark, splits) { (conf, split) =>
+      val (pathStr, start, end, headerEnd, codec, sync) = split
+      val hp = new Path(pathStr)
+      val in = hp.getFileSystem(conf).open(hp)
+      val fname = new java.io.File(hp.toUri.getPath).getName
+      Shards.closing(in) {
         // seek BEFORE wrapping in a buffer (a post-wrap seek would
         // leave stale buffered bytes). A mid-file split starts its
         // sync scan 16 bytes early so a marker ending exactly at
@@ -712,9 +677,9 @@ object Avro {
           private var exhausted = !aligned
           private def loadBlock(): Unit = {
             // block ownership: its first byte must lie in [start, end)
-            if (r.pos >= end) { exhausted = true; closeQuietly(); return }
+            if (r.pos >= end) { exhausted = true; return }
             val probe = r.tryReadByte()
-            if (probe < 0) { exhausted = true; closeQuietly(); return }
+            if (probe < 0) { exhausted = true; return }
             // un-consume semantics: varint first byte already read
             var v = (probe & 0x7FL)
             var shift = 7
@@ -760,6 +725,7 @@ object Avro {
           }
         }
       }
+    }
     spark.createDataFrame(rdd, outSchema)
   }
 
@@ -770,12 +736,8 @@ object Avro {
     * `["null",double]` union) and k/8-exact otherwise; `marks` is
     * 0..3 longs (exercises arrays incl. empty). Marker-cached. */
   def ensureDocumentsFixture(spark: SparkSession, sfDir: String): String =
-    synchronized {
+    Shards.fixture(s"graft_avro_v1_${Shards.sfTag(sfDir)}") { dir =>
       import org.apache.spark.sql.functions._
-      val tag = new java.io.File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_avro_v1_$tag")
-      val marker = new java.io.File(root, ".complete")
-      if (marker.isFile) return root.getPath
       val docs = graft.Tables(spark, sfDir, "documents")
         .select(col("doc_id"), col("lang"), col("text"),
           when(col("doc_id") % 7 === 0, lit(null).cast("double"))
@@ -785,13 +747,11 @@ object Avro {
           // because sequence(1, 0) counts DOWN instead of going empty
           slice(sequence(lit(1L), lit(3L)), lit(1),
             (col("doc_id") % 4).cast("int")).as("marks"))
-      write(docs.filter(col("doc_id") % 2 === 0), s"${root.getPath}/d",
+      write(docs.filter(col("doc_id") % 2 === 0), s"$dir/d",
         files = 2, saltCol = "doc_id", codec = "deflate",
         blockRows = 256, blockBytes = 1 << 15)
-      write(docs.filter(col("doc_id") % 2 =!= 0), s"${root.getPath}/n",
+      write(docs.filter(col("doc_id") % 2 =!= 0), s"$dir/n",
         files = 2, saltCol = "doc_id", codec = "null",
         blockRows = 256, blockBytes = 1 << 15)
-      java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-      root.getPath
     }
 }

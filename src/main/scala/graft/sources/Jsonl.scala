@@ -1,8 +1,5 @@
 package graft.sources
 
-import java.io.File
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -46,19 +43,12 @@ object Jsonl {
     spark.read.schema(schema).json(path)
 
   /** Test/bench fixture: the documents table exported once per sf dir
-    * as gzipped JSONL (marker-cached across JVMs, like the recipe
-    * corpus fixtures), so JSONL-scan queries exercise the real
-    * text-source path while the oracle reads the same rows from
-    * parquet. */
+    * as gzipped JSONL ([[Shards.fixture]]), so JSONL-scan queries
+    * exercise the real text-source path while the oracle reads the same
+    * rows from parquet. */
   def ensureDocsFixture(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-      val root = new File(sys.props("java.io.tmpdir"), s"graft_jsonl_v1_$tag")
-      val marker = new File(root, ".complete")
-      if (marker.isFile) return root.getPath
-      val docs = graft.Tables(spark, sfDir, "documents")
-      writeJsonl(docs, root.getPath, files = 4, saltCol = "doc_id")
-      Files.write(marker.toPath, Array.emptyByteArray)
-      root.getPath
+    Shards.fixture(s"graft_jsonl_v1_${Shards.sfTag(sfDir)}") { dir =>
+      writeJsonl(graft.Tables(spark, sfDir, "documents"), dir, files = 4,
+        saltCol = "doc_id")
     }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, DataOutputStream, EOFException, File, InputStream}
+import java.io.{BufferedInputStream, File}
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.fs.Path
@@ -22,9 +22,9 @@ import org.apache.spark.sql.types._
   * F32/I64/I32 bytes round-trip BIT-EXACTLY (no re-encoding), so two
   * builds of one corpus are byte-identical files.
   *
-  * Scale posture — the [[Warc]]/[[IndexedTokens]] contract: shards
-  * write one per executor task (attempt-unique temp + rename), read
-  * one task per file with a `maxFileBytes` pre-flight; rows salt by id
+  * Scale posture — the [[Shards]] contract: shards write one per
+  * executor task (attempt-unique temp + rename), read one task per
+  * file with a `maxFileBytes` pre-flight; rows salt by id
   * and sort within the shard; the driver never sees a vector.
   *
   * No reference counterpart — bearysta has no tensor I/O; this extends
@@ -187,83 +187,62 @@ object Safetensors {
     * rows salt by id and sort within the shard. */
   def writeEmbeddings(df: DataFrame, idCol: String, labelCol: String,
                       vecCol: String, path: String, files: Int): Unit = {
-    require(files >= 1, s"files must be >= 1, got $files")
-    import org.apache.spark.sql.functions._
-    val spark = df.sparkSession
-    val confEntries = TaskConf.snapshot(spark)
-    val out = new Path(path)
-    out.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(out)
-    df.select(col(idCol).cast("long").as("i"),
-        col(labelCol).cast("int").as("l"),
-        col(vecCol).cast("array<float>").as("v"))
-      .repartition(files, pmod(xxhash64(col("i")), lit(files.toLong)))
-      .sortWithinPartitions("i")
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val tc = org.apache.spark.TaskContext.get()
-          val pid = tc.partitionId()
-          // the shard materializes per task (ids/labels buffer while the
-          // vector bytes stream through a growing buffer) — bounded by
-          // the same per-task sizing discipline as the parquet writers
-          val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-          val labels = new scala.collection.mutable.ArrayBuffer[Int]()
-          val vecBytes = new java.io.ByteArrayOutputStream(1 << 20)
-          var dim = -1
-          it.foreach { r =>
-            if (r.isNullAt(2)) throw SafetensorsError(
-              s"null embedding at id=${r.getLong(0)} — filter nulls upstream")
-            // the shard buffers per task: bound LOUDLY (a declared
-            // limit beats an allocator OOM) — 1 GiB of vector bytes or
-            // 64 M rows, whichever first; raise `files` to shrink shards
-            if (vecBytes.size() > (1 << 30) || ids.length >= (1 << 26))
-              throw SafetensorsError(
-                s"shard ${ids.length} rows / ${vecBytes.size()} vector " +
-                  "bytes exceeds the per-task buffer bound — write more " +
-                  "shards (raise files)")
-            val v = r.getSeq[Float](2)
-            if (dim < 0) dim = v.length
-            else if (v.length != dim) throw SafetensorsError(
-              s"ragged embeddings: id=${r.getLong(0)} has dim ${v.length}, " +
-                s"shard started at $dim — one dimension per dataset")
-            ids += r.getLong(0)
-            labels += r.getInt(1)
-            val bb = ByteBuffer.allocate(v.length * 4).order(ByteOrder.LITTLE_ENDIAN)
-            var j = 0
-            while (j < v.length) { bb.putFloat(v(j)); j += 1 }
-            vecBytes.write(bb.array())
-          }
-          val n = ids.length
-          val idsEnd = n.toLong * 8
-          val labelsEnd = idsEnd + n.toLong * 4
-          val vecsEnd = labelsEnd + vecBytes.size().toLong
-          val header = renderHeader(Seq(
-            "ids" -> TensorMeta("I64", Seq(n.toLong), 0L, idsEnd),
-            "labels" -> TensorMeta("I32", Seq(n.toLong), idsEnd, labelsEnd),
-            "embeddings" -> TensorMeta("F32", Seq(n.toLong, dim.toLong),
-              labelsEnd, vecsEnd)))
-          val dest = new Path(path, f"part-$pid%05d.safetensors")
-          val tmp = new Path(path,
-            f".part-$pid%05d.attempt-${tc.taskAttemptId()}%d.tmp")
-          val fs = dest.getFileSystem(TaskConf.rebuild(confEntries))
-          try {
-            val os = new DataOutputStream(
-              new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16))
-            try {
-              os.write(header)
-              val ib = ByteBuffer.allocate(n * 8).order(ByteOrder.LITTLE_ENDIAN)
-              ids.foreach(ib.putLong)
-              os.write(ib.array())
-              val lb = ByteBuffer.allocate(n * 4).order(ByteOrder.LITTLE_ENDIAN)
-              labels.foreach(lb.putInt)
-              os.write(lb.array())
-              vecBytes.writeTo(os)
-            } finally os.close()
-            if (fs.exists(dest)) fs.delete(dest, false)
-            if (!fs.rename(tmp, dest) && !fs.exists(dest))
-              throw SafetensorsError(s"could not commit $tmp -> $dest")
-          } finally fs.delete(tmp, false)
-        }
+    import org.apache.spark.sql.functions.col
+    val cols = df.select(col(idCol).cast("long").as("i"),
+      col(labelCol).cast("int").as("l"),
+      col(vecCol).cast("array<float>").as("v"))
+    Shards.write(cols, path, files, "i", SafetensorsError(_),
+        sortBySalt = true) { (shard, it) =>
+      // the shard materializes per task (ids/labels buffer while the
+      // vector bytes stream through a growing buffer) — bounded by
+      // the same per-task sizing discipline as the parquet writers
+      val ids = new scala.collection.mutable.ArrayBuffer[Long]()
+      val labels = new scala.collection.mutable.ArrayBuffer[Int]()
+      val vecBytes = new java.io.ByteArrayOutputStream(1 << 20)
+      var dim = -1
+      it.foreach { r =>
+        if (r.isNullAt(2)) throw SafetensorsError(
+          s"null embedding at id=${r.getLong(0)} — filter nulls upstream")
+        // the shard buffers per task: bound LOUDLY (a declared
+        // limit beats an allocator OOM) — 1 GiB of vector bytes or
+        // 64 M rows, whichever first; raise `files` to shrink shards
+        if (vecBytes.size() > (1 << 30) || ids.length >= (1 << 26))
+          throw SafetensorsError(
+            s"shard ${ids.length} rows / ${vecBytes.size()} vector " +
+              "bytes exceeds the per-task buffer bound — write more " +
+              "shards (raise files)")
+        val v = r.getSeq[Float](2)
+        if (dim < 0) dim = v.length
+        else if (v.length != dim) throw SafetensorsError(
+          s"ragged embeddings: id=${r.getLong(0)} has dim ${v.length}, " +
+            s"shard started at $dim — one dimension per dataset")
+        ids += r.getLong(0)
+        labels += r.getInt(1)
+        val bb = ByteBuffer.allocate(v.length * 4).order(ByteOrder.LITTLE_ENDIAN)
+        var j = 0
+        while (j < v.length) { bb.putFloat(v(j)); j += 1 }
+        vecBytes.write(bb.array())
       }
+      val n = ids.length
+      val idsEnd = n.toLong * 8
+      val labelsEnd = idsEnd + n.toLong * 4
+      val vecsEnd = labelsEnd + vecBytes.size().toLong
+      val header = renderHeader(Seq(
+        "ids" -> TensorMeta("I64", Seq(n.toLong), 0L, idsEnd),
+        "labels" -> TensorMeta("I32", Seq(n.toLong), idsEnd, labelsEnd),
+        "embeddings" -> TensorMeta("F32", Seq(n.toLong, dim.toLong),
+          labelsEnd, vecsEnd)))
+      shard.commit(shard.name("safetensors")) { os =>
+        os.write(header)
+        val ib = ByteBuffer.allocate(n * 8).order(ByteOrder.LITTLE_ENDIAN)
+        ids.foreach(ib.putLong)
+        os.write(ib.array())
+        val lb = ByteBuffer.allocate(n * 4).order(ByteOrder.LITTLE_ENDIAN)
+        labels.foreach(lb.putInt)
+        os.write(lb.array())
+        vecBytes.writeTo(os)
+      }
+    }
   }
 
   // ----------------------------------------------------------------- read
@@ -276,17 +255,6 @@ object Safetensors {
     StructField("Path", StringType, nullable = false),
     StructField("File", StringType, nullable = false)))
 
-  private def readFully(in: InputStream, n: Int, what: String): Array[Byte] = {
-    val out = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val k = in.read(out, off, n - off)
-      if (k < 0) throw new EOFException(s"EOF reading $what ($off/$n bytes)")
-      off += k
-    }
-    out
-  }
-
   /** Distributed scan of `.safetensors` embedding shards matched by
     * `pattern`: one executor task per file, vectors streamed row by row
     * off the `embeddings` tensor. Header, dtypes, shapes, offsets and
@@ -294,100 +262,79 @@ object Safetensors {
     * contract and the file's actual size. */
   def readEmbeddings(spark: SparkSession, pattern: String,
                      maxFileBytes: Long = 4L << 30): DataFrame = {
-    val p = new Path(pattern)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-      .filter(_.isFile).sortBy(_.getPath.toString)
-    if (stats.isEmpty) throw SafetensorsError(s"no files match $pattern")
-    for (s <- stats if s.getLen > maxFileBytes) throw SafetensorsError(
-      s"${s.getPath} is ${s.getLen} bytes > maxFileBytes=$maxFileBytes: " +
-        "readEmbeddings runs ONE task per file — write more/smaller shards " +
+    val matches = Shards.list(spark, pattern, SafetensorsError(_), maxFileBytes,
+      "readEmbeddings runs ONE task per file — write more/smaller shards " +
         "or raise maxFileBytes explicitly")
-    val matches = stats.map(s => (s.getPath.toString, s.getLen))
-    val confEntries = TaskConf.snapshot(spark)
-    val rdd = spark.sparkContext
-      .parallelize(matches, matches.length)
-      .mapPartitions { paths =>
-        val conf = TaskConf.rebuild(confEntries)
-        paths.flatMap { case (pathStr, fileLen) =>
-          val hp = new Path(pathStr)
-          val in = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 1 << 16)
-          def closeQuietly(): Unit =
-            try in.close() catch { case _: Exception => () }
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => closeQuietly()))
-          def bad(msg: String): Nothing =
-            throw SafetensorsError(s"$pathStr: $msg")
-          val lenBytes = readFully(in, 8, s"$pathStr header length")
-          val headerLen = ByteBuffer.wrap(lenBytes)
-            .order(ByteOrder.LITTLE_ENDIAN).getLong
-          if (headerLen <= 0 || headerLen > (100L << 20))
-            bad(s"implausible header length $headerLen")
-          val header = parseHeader(new String(
-            readFully(in, headerLen.toInt, s"$pathStr header"), "UTF-8"))
-          def tensor(name: String, dtype: String, rank: Int): TensorMeta = {
-            val m = header.getOrElse(name, bad(s"missing tensor '$name'"))
-            if (m.dtype != dtype) bad(s"tensor '$name' is ${m.dtype}, expected $dtype")
-            if (m.shape.length != rank)
-              bad(s"tensor '$name' has rank ${m.shape.length}, expected $rank")
-            if (m.begin < 0 || m.end < m.begin) bad(s"tensor '$name' bad offsets")
-            m
-          }
-          val mi = tensor("ids", "I64", 1)
-          val ml = tensor("labels", "I32", 1)
-          val mv = tensor("embeddings", "F32", 2)
-          val n = mi.shape.head
-          if (ml.shape.head != n || mv.shape.head != n)
-            bad(s"tensor row counts disagree: ids=$n labels=${ml.shape.head} " +
-              s"embeddings=${mv.shape.head}")
-          if (n > Int.MaxValue) bad(s"implausible row count $n")
-          val dim = mv.shape(1)
-          if (mi.end - mi.begin != n * 8) bad("ids offsets disagree with shape")
-          if (ml.end - ml.begin != n * 4) bad("labels offsets disagree with shape")
-          if (mv.end - mv.begin != n * dim * 4)
-            bad("embeddings offsets disagree with shape")
-          // this writer's layout: ids, labels, embeddings contiguous
-          if (mi.begin != 0 || ml.begin != mi.end || mv.begin != ml.end)
-            bad("tensors are not in this writer's contiguous layout " +
-              "(ids, labels, embeddings)")
-          if (fileLen != 8 + headerLen + mv.end)
-            bad(s"file is $fileLen bytes, header expects ${8 + headerLen + mv.end}")
-          val nI = n.toInt
-          val dimI = dim.toInt
-          val ids = ByteBuffer.wrap(readFully(in, nI * 8, s"$pathStr ids"))
+      .map(s => (s.getPath.toString, s.getLen))
+    val rdd = Shards.perFile(spark, matches) { case (conf, (pathStr, fileLen)) =>
+      val hp = new Path(pathStr)
+      val in = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 1 << 16)
+      Shards.closing(in) {
+        def bad(msg: String): Nothing =
+          throw SafetensorsError(s"$pathStr: $msg")
+        val lenBytes = Shards.readFully(in, 8, s"$pathStr header length")
+        val headerLen = ByteBuffer.wrap(lenBytes)
+          .order(ByteOrder.LITTLE_ENDIAN).getLong
+        if (headerLen <= 0 || headerLen > (100L << 20))
+          bad(s"implausible header length $headerLen")
+        val header = parseHeader(new String(
+          Shards.readFully(in, headerLen.toInt, s"$pathStr header"), "UTF-8"))
+        def tensor(name: String, dtype: String, rank: Int): TensorMeta = {
+          val m = header.getOrElse(name, bad(s"missing tensor '$name'"))
+          if (m.dtype != dtype) bad(s"tensor '$name' is ${m.dtype}, expected $dtype")
+          if (m.shape.length != rank)
+            bad(s"tensor '$name' has rank ${m.shape.length}, expected $rank")
+          if (m.begin < 0 || m.end < m.begin) bad(s"tensor '$name' bad offsets")
+          m
+        }
+        val mi = tensor("ids", "I64", 1)
+        val ml = tensor("labels", "I32", 1)
+        val mv = tensor("embeddings", "F32", 2)
+        val n = mi.shape.head
+        if (ml.shape.head != n || mv.shape.head != n)
+          bad(s"tensor row counts disagree: ids=$n labels=${ml.shape.head} " +
+            s"embeddings=${mv.shape.head}")
+        if (n > Int.MaxValue) bad(s"implausible row count $n")
+        val dim = mv.shape(1)
+        if (mi.end - mi.begin != n * 8) bad("ids offsets disagree with shape")
+        if (ml.end - ml.begin != n * 4) bad("labels offsets disagree with shape")
+        if (mv.end - mv.begin != n * dim * 4)
+          bad("embeddings offsets disagree with shape")
+        // this writer's layout: ids, labels, embeddings contiguous
+        if (mi.begin != 0 || ml.begin != mi.end || mv.begin != ml.end)
+          bad("tensors are not in this writer's contiguous layout " +
+            "(ids, labels, embeddings)")
+        if (fileLen != 8 + headerLen + mv.end)
+          bad(s"file is $fileLen bytes, header expects ${8 + headerLen + mv.end}")
+        val nI = n.toInt
+        val dimI = dim.toInt
+        val ids = ByteBuffer.wrap(Shards.readFully(in, nI * 8, s"$pathStr ids"))
+          .order(ByteOrder.LITTLE_ENDIAN)
+        val labels = ByteBuffer.wrap(Shards.readFully(in, nI * 4, s"$pathStr labels"))
+          .order(ByteOrder.LITTLE_ENDIAN)
+        val fname = new File(hp.toUri.getPath).getName
+        (0 until nI).iterator.map { r =>
+          val vb = ByteBuffer.wrap(
+            Shards.readFully(in, dimI * 4, s"$pathStr embedding row $r"))
             .order(ByteOrder.LITTLE_ENDIAN)
-          val labels = ByteBuffer.wrap(readFully(in, nI * 4, s"$pathStr labels"))
-            .order(ByteOrder.LITTLE_ENDIAN)
-          val fname = new File(hp.toUri.getPath).getName
-          (0 until nI).iterator.map { r =>
-            val vb = ByteBuffer.wrap(
-              readFully(in, dimI * 4, s"$pathStr embedding row $r"))
-              .order(ByteOrder.LITTLE_ENDIAN)
-            val vec = new Array[AnyRef](dimI)
-            var j = 0
-            while (j < dimI) { vec(j) = Float.box(vb.getFloat); j += 1 }
-            if (r == nI - 1) closeQuietly()
-            Row(ids.getLong(r * 8), labels.getInt(r * 4),
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(vec),
-              pathStr, fname)
-          }
+          val vec = new Array[AnyRef](dimI)
+          var j = 0
+          while (j < dimI) { vec(j) = Float.box(vb.getFloat); j += 1 }
+          Row(ids.getLong(r * 8), labels.getInt(r * 4),
+            scala.collection.immutable.ArraySeq.unsafeWrapArray(vec),
+            pathStr, fname)
         }
       }
+    }
     spark.createDataFrame(rdd, Schema)
   }
 
   /** Test/bench fixture: the `embeddings` table exported once per sf dir
-    * through [[writeEmbeddings]], marker-cached like the WARC/indexed
-    * fixtures. */
+    * through [[writeEmbeddings]], built once by [[Shards.fixture]]. */
   def ensureEmbeddingsFixture(spark: SparkSession, sfDir: String,
-                              files: Int = 4): String = synchronized {
-    val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new File(sys.props("java.io.tmpdir"), s"graft_safet_v1_$tag")
-    val marker = new File(root, ".complete")
-    if (marker.isFile) return root.getPath
-    writeEmbeddings(graft.Tables(spark, sfDir, "embeddings"),
-      "vec_id", "label", "embedding", root.getPath, files)
-    java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-    root.getPath
-  }
+                              files: Int = 4): String =
+    Shards.fixture(s"graft_safet_v1_${Shards.sfTag(sfDir)}") { dir =>
+      writeEmbeddings(graft.Tables(spark, sfDir, "embeddings"),
+        "vec_id", "label", "embedding", dir, files)
+    }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -359,18 +359,11 @@ object Sqlite {
     * arrives in at scale anyway) or raise the cap deliberately. */
   def scanGlob(spark: SparkSession, pattern: String, table: String,
                maxFileBytes: Long = 1L << 30): DataFrame = {
-    val p = new Path(pattern)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-      .filter(_.isFile).sortBy(_.getPath.toString)
-    if (stats.isEmpty) throw SqliteError(s"no files match $pattern")
-    // pre-flight the size contract on the driver (glob already has stats)
-    for (s <- stats if s.getLen > maxFileBytes) throw SqliteError(
-      s"${s.getPath} is ${s.getLen} bytes > maxFileBytes=$maxFileBytes: " +
-        "scanGlob runs ONE task per .db file (sequential b-tree walk, " +
+    val matches = Shards.list(spark, pattern, SqliteError(_), maxFileBytes,
+      "scanGlob runs ONE task per .db file (sequential b-tree walk, " +
         "full in-task materialization) — split the export into per-shard " +
         "files or raise maxFileBytes explicitly to accept the straggler")
-    val matches = stats.map(_.getPath.toString)
+      .map(_.getPath.toString)
     // schema contract from the first file (driver-side, header-sized work)
     val first = readTable(spark, matches.head, table)
     val cols = first.columns
@@ -378,45 +371,39 @@ object Sqlite {
       StructField(c, promote(first.rows, i), nullable = true)
     })
     val dataTypes = schema.fields.map(_.dataType)
-    val confEntries = TaskConf.snapshot(spark)
-    val rdd = spark.sparkContext
-      .parallelize(matches, matches.length)
-      .mapPartitions { paths =>
-        val conf = TaskConf.rebuild(confEntries)
-        paths.flatMap { pathStr =>
-          val hp = new Path(pathStr)
-          val pfs = hp.getFileSystem(conf)
-          val len = pfs.getFileStatus(hp).getLen
-          if (len > Int.MaxValue - 8)
-            throw SqliteError(s"SQLite file too large to materialize: $pathStr")
-          val raw = new Array[Byte](len.toInt)
-          val in = pfs.open(hp)
-          try in.readFully(0, raw) finally in.close()
-          val t = decodeTable(raw, table, pathStr)
-          if (t.columns != cols)
-            throw SqliteError(
-              s"schema mismatch in $pathStr: ${t.columns} vs $cols")
-          val f = new java.io.File(hp.toUri.getPath)
-          val dir = Option(f.getParent).getOrElse(".")
-          t.rows.iterator.map { r =>
-            val vals = r.indices.map { i =>
-              val c = coerce(r(i), dataTypes(i))
-              // a later file wider than the first file's promotion (e.g.
-              // doubles where file 1 held only ints) must fail loudly,
-              // not corrupt the relation — order the widest file first
-              (c, dataTypes(i)) match {
-                case (null, _) | (_: Long, LongType) | (_: Double, DoubleType) |
-                     (_: String, StringType) | (_: Array[Byte], BinaryType) => ()
-                case (bad, dt) => throw SqliteError(
-                  s"$pathStr column ${cols(i)}: ${bad.getClass.getSimpleName} " +
-                    s"does not fit first-file type $dt — widest file first")
-              }
-              c
-            }
-            Row.fromSeq(vals ++ Seq(pathStr, f.getName, dir))
+    val rdd = Shards.perFile(spark, matches) { (conf, pathStr) =>
+      val hp = new Path(pathStr)
+      val pfs = hp.getFileSystem(conf)
+      val len = pfs.getFileStatus(hp).getLen
+      if (len > Int.MaxValue - 8)
+        throw SqliteError(s"SQLite file too large to materialize: $pathStr")
+      val raw = new Array[Byte](len.toInt)
+      val in = pfs.open(hp)
+      try in.readFully(0, raw) finally in.close()
+      val t = decodeTable(raw, table, pathStr)
+      if (t.columns != cols)
+        throw SqliteError(
+          s"schema mismatch in $pathStr: ${t.columns} vs $cols")
+      val f = new java.io.File(hp.toUri.getPath)
+      val dir = Option(f.getParent).getOrElse(".")
+      t.rows.iterator.map { r =>
+        val vals = r.indices.map { i =>
+          val c = coerce(r(i), dataTypes(i))
+          // a later file wider than the first file's promotion (e.g.
+          // doubles where file 1 held only ints) must fail loudly,
+          // not corrupt the relation — order the widest file first
+          (c, dataTypes(i)) match {
+            case (null, _) | (_: Long, LongType) | (_: Double, DoubleType) |
+                 (_: String, StringType) | (_: Array[Byte], BinaryType) => ()
+            case (bad, dt) => throw SqliteError(
+              s"$pathStr column ${cols(i)}: ${bad.getClass.getSimpleName} " +
+                s"does not fit first-file type $dt — widest file first")
           }
+          c
         }
+        Row.fromSeq(vals ++ Seq(pathStr, f.getName, dir))
       }
+    }
     spark.createDataFrame(rdd, StructType(schema.fields ++ Seq(
       StructField("Path", StringType, nullable = false),
       StructField("File", StringType, nullable = false),

@@ -36,9 +36,9 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: TFRecord has NO sync marker, so a file is not
   * splittable — the published convention shards into MANY files and so
-  * does [[write]] (`files` shards, salt-routed, temp+rename commits,
-  * the [[Warc]] machinery); [[read]] runs one task per file with the
-  * same `maxFileBytes` guard as `readWarc`. A 100 TB corpus is
+  * does [[write]] (`files` shards, salt-routed, temp+rename commits);
+  * [[read]] runs one task per file behind a `maxFileBytes` pre-flight
+  * (both from [[Shards]]). A 100 TB corpus is
   * thousands of bounded shards read in parallel, never one giant
   * record stream. */
 object TfRecord {
@@ -231,15 +231,13 @@ object TfRecord {
 
   /** Write every row of `df` as one `tf.train.Example` per record into
     * `files` TFRecord shards (`part-NNNNN.tfrecord`), salt-routed on
-    * `saltCol`, temp+rename committed (the [[Warc]] posture: losers of
-    * a concurrent attempt accept the winner's complete shard). Every
+    * `saltCol`, temp+rename committed ([[Shards.Shard.commit]]: losers
+    * of a concurrent attempt accept the winner's complete shard). Every
     * column becomes a feature named after it; supported Spark types:
     * string, binary, int, long, float, double, and arrays of each
     * (others fail loudly at plan time — silent drops corrupt training
     * data). */
   def write(df: DataFrame, path: String, files: Int, saltCol: String): Unit = {
-    require(files >= 1, s"files must be >= 1, got $files")
-    import org.apache.spark.sql.functions._
     val schema = df.schema
     val plans: Seq[(String, Int, Any => Seq[Any])] = schema.fields.toSeq.map { f =>
       def bad() = throw TfRecordError(
@@ -267,35 +265,16 @@ object TfRecord {
           (f.name, kind, (v: Any) => Seq(conv(v)))
       }
     }
-    val spark = df.sparkSession
-    val confEntries = TaskConf.snapshot(spark)
-    val out = new Path(path)
-    out.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(out)
-    df.withColumn("__shard", pmod(xxhash64(col(saltCol)), lit(files.toLong)))
-      .repartition(files, col("__shard"))
-      .drop("__shard")
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val tc = org.apache.spark.TaskContext.get()
-          val pid = tc.partitionId()
-          val shard = new Path(path, f"part-$pid%05d.tfrecord")
-          val tmp = new Path(path,
-            f".part-$pid%05d.attempt-${tc.taskAttemptId()}%d.tmp")
-          val fs = shard.getFileSystem(TaskConf.rebuild(confEntries))
-          try {
-            val os = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-            try it.foreach { r =>
-              val feats = plans.zipWithIndex.map { case ((name, kind, conv), i) =>
-                (name, kind, if (r.isNullAt(i)) Seq.empty[Any] else conv(r.get(i)))
-              }
-              os.write(frame(exampleBytes(feats)))
-            } finally os.close()
-            if (fs.exists(shard)) fs.delete(shard, false)
-            if (!fs.rename(tmp, shard) && !fs.exists(shard))
-              throw TfRecordError(s"could not commit $tmp -> $shard")
-          } finally fs.delete(tmp, false)
+    Shards.write(df, path, files, saltCol, TfRecordError(_)) { (shard, rows) =>
+      shard.commit(shard.name("tfrecord")) { os =>
+        rows.foreach { r =>
+          val feats = plans.zipWithIndex.map { case ((name, kind, conv), i) =>
+            (name, kind, if (r.isNullAt(i)) Seq.empty[Any] else conv(r.get(i)))
+          }
+          os.write(frame(exampleBytes(feats)))
         }
       }
+    }
   }
 
   // ---- distributed read ----
@@ -322,80 +301,55 @@ object TfRecord {
       }
       (n, kind)
     }
-    val p = new Path(pattern)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-      .filter(_.isFile).sortBy(_.getPath.toString)
-    if (stats.isEmpty) throw TfRecordError(s"no files match $pattern")
-    for (s <- stats if s.getLen > maxFileBytes) throw TfRecordError(
-      s"${s.getPath} is ${s.getLen} bytes > maxFileBytes=$maxFileBytes: " +
-        "tfrecord runs ONE task per file (no sync marker) — shard into " +
+    val matches = Shards.list(spark, pattern, TfRecordError(_), maxFileBytes,
+      "tfrecord runs ONE task per file (no sync marker) — shard into " +
         "bounded files or raise maxFileBytes explicitly")
-    val matches = stats.map(_.getPath.toString)
-    val confEntries = TaskConf.snapshot(spark)
-    val rdd = spark.sparkContext
-      .parallelize(matches, matches.length)
-      .mapPartitions { paths =>
-        val conf = TaskConf.rebuild(confEntries)
-        paths.flatMap { pathStr =>
-          val hp = new Path(pathStr)
-          val in = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 1 << 16)
-          def closeQuietly(): Unit = try in.close() catch { case _: Exception => () }
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => closeQuietly()))
-          val fname = new File(hp.toUri.getPath).getName
-          def readFully(n: Int): Option[Array[Byte]] = {
-            val buf = new Array[Byte](n)
-            var off = 0
-            while (off < n) {
-              val r = in.read(buf, off, n - off)
-              if (r < 0) {
-                if (off == 0) return None
-                throw TfRecordError(s"$fname: truncated record (EOF mid-frame)")
-              }
-              off += r
-            }
-            Some(buf)
+      .map(_.getPath.toString)
+    val rdd = Shards.perFile(spark, matches) { (conf, pathStr) =>
+      val hp = new Path(pathStr)
+      val in = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 1 << 16)
+      val fname = new File(hp.toUri.getPath).getName
+      def readFully(n: Int): Option[Array[Byte]] = {
+        val buf = new Array[Byte](n)
+        var off = 0
+        while (off < n) {
+          val r = in.read(buf, off, n - off)
+          if (r < 0) {
+            if (off == 0) return None
+            throw TfRecordError(s"$fname: truncated record (EOF mid-frame)")
           }
-          new Iterator[Row] {
-            private var nextRow: Row = fetch()
-            private def fetch(): Row = {
-              readFully(12) match {
-                case None => closeQuietly(); null
-                case Some(head) =>
-                  val bb = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
-                  val len = bb.getLong()
-                  val lenCrc = bb.getInt()
-                  if (maskCrc(crc32c(head, 0, 8)) != lenCrc)
-                    throw TfRecordError(s"$fname: length CRC mismatch")
-                  if (len < 0 || len > Int.MaxValue - 16)
-                    throw TfRecordError(s"$fname: absurd record length $len")
-                  val data = readFully(len.toInt + 4).getOrElse(
-                    throw TfRecordError(s"$fname: truncated record body"))
-                  val dataCrc = ByteBuffer.wrap(data, len.toInt, 4)
-                    .order(ByteOrder.LITTLE_ENDIAN).getInt
-                  if (maskCrc(crc32c(data, 0, len.toInt)) != dataCrc)
-                    throw TfRecordError(s"$fname: data CRC mismatch")
-                  val parsed = parseExample(
-                    java.util.Arrays.copyOfRange(data, 0, len.toInt))
-                  val cols: Seq[Any] = kinds.map { case (n, kind) =>
-                    parsed.get(n) match {
-                      case Some((k, vs)) if k == kind => vs
-                      case Some((k, _)) => throw TfRecordError(
-                        s"$fname: feature $n has kind $k, expected $kind")
-                      case None => Vector.empty[Any]
-                    }
-                  }
-                  Row.fromSeq(fname +: cols)
-              }
-            }
-            override def hasNext: Boolean = nextRow != null
-            override def next(): Row = {
-              val r = nextRow; nextRow = fetch(); r
-            }
+          off += r
+        }
+        Some(buf)
+      }
+      // a frame is [u64 len][masked crc32c of len][data][masked crc32c of data]
+      Shards.closing(in)(Iterator.continually(readFully(12)).takeWhile(_.isDefined).map { h =>
+        val head = h.get
+        val bb = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
+        val len = bb.getLong()
+        val lenCrc = bb.getInt()
+        if (maskCrc(crc32c(head, 0, 8)) != lenCrc)
+          throw TfRecordError(s"$fname: length CRC mismatch")
+        if (len < 0 || len > Int.MaxValue - 16)
+          throw TfRecordError(s"$fname: absurd record length $len")
+        val data = readFully(len.toInt + 4).getOrElse(
+          throw TfRecordError(s"$fname: truncated record body"))
+        val dataCrc = ByteBuffer.wrap(data, len.toInt, 4)
+          .order(ByteOrder.LITTLE_ENDIAN).getInt
+        if (maskCrc(crc32c(data, 0, len.toInt)) != dataCrc)
+          throw TfRecordError(s"$fname: data CRC mismatch")
+        val parsed = parseExample(java.util.Arrays.copyOfRange(data, 0, len.toInt))
+        val cols: Seq[Any] = kinds.map { case (n, kind) =>
+          parsed.get(n) match {
+            case Some((k, vs)) if k == kind => vs
+            case Some((k, _)) => throw TfRecordError(
+              s"$fname: feature $n has kind $k, expected $kind")
+            case None => Vector.empty[Any]
           }
         }
-      }
+        Row.fromSeq(fname +: cols)
+      })
+    }
     val schema = StructType(
       StructField("file", StringType, nullable = false) +:
         kinds.map { case (n, kind) =>
@@ -411,20 +365,15 @@ object TfRecord {
 
   /** Test/bench fixture: `documents` exported once per sf dir as 4
     * TFRecord shards (doc_id int64, lang/text bytes, a derived f32
-    * score) — marker-cached like the Safetensors fixture. */
+    * score), built once by [[Shards.fixture]]. */
   def ensureDocumentsFixture(spark: SparkSession, sfDir: String,
-                             files: Int = 4): String = synchronized {
-    import org.apache.spark.sql.functions._
-    val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new File(sys.props("java.io.tmpdir"), s"graft_tfrec_v1_$tag")
-    val marker = new File(root, ".complete")
-    if (marker.isFile) return root.getPath
-    val docs = graft.Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), col("lang"), col("text"),
-        // f32-exact by construction: k/8 for k < 2^20
-        (col("doc_id") % 97).cast("float") / 8f as "score")
-    write(docs, root.getPath, files, saltCol = "doc_id")
-    java.nio.file.Files.write(marker.toPath, Array.emptyByteArray)
-    root.getPath
-  }
+                             files: Int = 4): String =
+    Shards.fixture(s"graft_tfrec_v1_${Shards.sfTag(sfDir)}") { dir =>
+      import org.apache.spark.sql.functions._
+      val docs = graft.Tables(spark, sfDir, "documents")
+        .select(col("doc_id"), col("lang"), col("text"),
+          // f32-exact by construction: k/8 for k < 2^20
+          (col("doc_id") % 97).cast("float") / 8f as "score")
+      write(docs, dir, files, saltCol = "doc_id")
+    }
 }

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.io.{BufferedInputStream, ByteArrayOutputStream, EOFException, File, InputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import org.apache.hadoop.fs.Path
@@ -222,62 +221,35 @@ object Warc {
   def readWarc(spark: SparkSession, pattern: String,
                maxFileBytes: Long = 4L << 30,
                tolerateTruncation: Boolean = false): DataFrame = {
-    val p = new Path(pattern)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-      .filter(_.isFile).sortBy(_.getPath.toString)
-    if (stats.isEmpty) throw WarcError(s"no files match $pattern")
-    for (s <- stats if s.getLen > maxFileBytes) throw WarcError(
-      s"${s.getPath} is ${s.getLen} bytes > maxFileBytes=$maxFileBytes: " +
-        "readWarc runs ONE task per file (gzip is unsplittable) — ship " +
+    val matches = Shards.list(spark, pattern, WarcError(_), maxFileBytes,
+      "readWarc runs ONE task per file (gzip is unsplittable) — ship " +
         "crawl segments as bounded files or raise maxFileBytes explicitly")
-    val matches = stats.map(_.getPath.toString)
-    val confEntries = TaskConf.snapshot(spark)
-    val rdd = spark.sparkContext
-      .parallelize(matches, matches.length)
-      .mapPartitions { paths =>
-        val conf = TaskConf.rebuild(confEntries)
-        paths.flatMap { pathStr =>
-          val hp = new Path(pathStr)
-          val in0 = new BufferedInputStream(
-            hp.getFileSystem(conf).open(hp), 1 << 16)
-          // gzip sniff: 1f 8b magic
-          in0.mark(2)
-          val m1 = in0.read(); val m2 = in0.read()
-          in0.reset()
-          val in = if (m1 == 0x1f && m2 == 0x8b) new GZIPInputStream(in0, 1 << 16)
-            else in0
-          // the stream must close on BOTH exits: eagerly when the record
-          // iterator drains (thousands of files over a long-lived
-          // executor would otherwise exhaust fds / S3 connections), and
-          // at task end for the error path (parse failure, task kill)
-          def closeQuietly(): Unit =
-            try in.close() catch { case _: Exception => () }
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => closeQuietly()))
-          val fname = new File(hp.toUri.getPath).getName
-          val base = readRecords(in, tolerateTruncation)
-          val records = new Iterator[Record] {
-            override def hasNext: Boolean = {
-              val h = base.hasNext
-              if (!h) closeQuietly()
-              h
-            }
-            override def next(): Record = base.next()
-          }
-          records.map { r =>
-            val ct = r.headers.getOrElse("content-type", null)
-            val (status, body) = httpSplit(ct, r.payload)
-            Row(r.headers.getOrElse("warc-type", null),
-              r.headers.getOrElse("warc-target-uri", null),
-              r.headers.getOrElse("warc-date", null),
-              ct, status.map(Int.box).orNull,
-              r.headers.getOrElse("warc-truncated", null),
-              body, pathStr, fname)
-          }
-        }
-      }
+      .map(_.getPath.toString)
+    val rdd = Shards.perFile(spark, matches) { (conf, pathStr) =>
+      val hp = new Path(pathStr)
+      val in0 = new BufferedInputStream(hp.getFileSystem(conf).open(hp), 1 << 16)
+      // gzip sniff: 1f 8b magic
+      in0.mark(2)
+      val m1 = in0.read(); val m2 = in0.read()
+      in0.reset()
+      val in = if (m1 == 0x1f && m2 == 0x8b) new GZIPInputStream(in0, 1 << 16)
+        else in0
+      val fname = new File(hp.toUri.getPath).getName
+      Shards.closing(in)(readRecords(in, tolerateTruncation))
+        .map(rowOf(_, pathStr, fname))
+    }
     spark.createDataFrame(rdd, Schema)
+  }
+
+  /** A record as a [[Schema]] row, `provenance` last. */
+  private def rowOf(r: Record, provenance: String*): Row = {
+    val ct = r.headers.getOrElse("content-type", null)
+    val (status, body) = httpSplit(ct, r.payload)
+    Row.fromSeq(Seq(r.headers.getOrElse("warc-type", null),
+      r.headers.getOrElse("warc-target-uri", null),
+      r.headers.getOrElse("warc-date", null),
+      ct, status.map(Int.box).orNull,
+      r.headers.getOrElse("warc-truncated", null), body) ++ provenance)
   }
 
   // ---------------------------------------------------------------- write
@@ -291,40 +263,23 @@ object Warc {
     * Content-Length on read — both fail loudly here instead, matching
     * the reader's no-silent-resync posture. */
   private[sources] def renderResponses(
-      recs: Iterator[(String, String, Array[Byte])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(1 << 16)
-    def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
-    def clean(v: String, what: String): Unit = {
-      if (v == null) throw WarcError(s"null WARC $what")
-      if (v.exists(Character.isISOControl)) throw WarcError(
-        s"control character in WARC $what '${v.take(60)}' — would corrupt " +
-          "record framing / inject headers; sanitize upstream")
-    }
-    for ((uri, date, body) <- recs) {
-      clean(uri, "Target-URI"); clean(date, "Date")
-      val http = ("HTTP/1.1 200 OK\r\nContent-Type: text/html; " +
-        "charset=utf-8\r\n\r\n").getBytes(StandardCharsets.ISO_8859_1)
-      val payloadLen = http.length + body.length
-      w("WARC/1.0\r\n")
-      w("WARC-Type: response\r\n")
-      w(s"WARC-Target-URI: $uri\r\n")
-      w(s"WARC-Date: $date\r\n")
-      w("Content-Type: application/http;msgtype=response\r\n")
-      w(s"Content-Length: $payloadLen\r\n")
-      w("\r\n")
-      out.write(http)
-      out.write(body)
-      w("\r\n\r\n")
-    }
-    out.toByteArray
-  }
+      recs: Iterator[(String, String, Array[Byte])]): Array[Byte] =
+    render(recs, "response", "application/http;msgtype=response",
+      ("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n\r\n")
+        .getBytes(StandardCharsets.ISO_8859_1))
 
   /** Serialize extracted-text records in the WET convention (ISO 28500
     * `conversion` records, `Content-Type: text/plain`, no HTTP message —
     * the body IS the text). Same framing and control-character
     * rejection as [[renderResponses]]. */
   private[sources] def renderConversions(
-      recs: Iterator[(String, String, Array[Byte])]): Array[Byte] = {
+      recs: Iterator[(String, String, Array[Byte])]): Array[Byte] =
+    render(recs, "conversion", "text/plain", Array.emptyByteArray)
+
+  /** One `warcType` record per (uri, date, body); the payload is
+    * `prefix` followed by the body. */
+  private def render(recs: Iterator[(String, String, Array[Byte])], warcType: String,
+                     contentType: String, prefix: Array[Byte]): Array[Byte] = {
     val out = new ByteArrayOutputStream(1 << 16)
     def w(s: String): Unit = out.write(s.getBytes(StandardCharsets.ISO_8859_1))
     def clean(v: String, what: String): Unit = {
@@ -336,12 +291,13 @@ object Warc {
     for ((uri, date, body) <- recs) {
       clean(uri, "Target-URI"); clean(date, "Date")
       w("WARC/1.0\r\n")
-      w("WARC-Type: conversion\r\n")
+      w(s"WARC-Type: $warcType\r\n")
       w(s"WARC-Target-URI: $uri\r\n")
       w(s"WARC-Date: $date\r\n")
-      w("Content-Type: text/plain\r\n")
-      w(s"Content-Length: ${body.length}\r\n")
+      w(s"Content-Type: $contentType\r\n")
+      w(s"Content-Length: ${prefix.length + body.length}\r\n")
       w("\r\n")
+      out.write(prefix)
       out.write(body)
       w("\r\n\r\n")
     }
@@ -356,20 +312,8 @@ object Warc {
     * bound, like the JSONL writer's); each shard streams through ONE
     * gzip member written inside its own executor task — the driver
     * never sees a record. `date` is caller-provided (a corpus export is
-    * stamped once, not per-JVM-clock).
-    *
-    * Commit protocol: each task writes an attempt-unique
-    * `.part-NNNNN.attempt-M.tmp` and RENAMES it into place on success —
-    * a task that dies mid-write leaves only a dot-ignored temp (cleaned
-    * on its own failure path), never a truncated shard. Concurrent
-    * attempts of the same partition (speculation, zombies) race on the
-    * delete+rename pair; the loser detects a complete sibling shard
-    * already in place and accepts it (same partition data — last
-    * complete writer wins), so neither attempt fails a healthy write.
-    * Note the replace is delete-then-rename, not one atomic op — on
-    * copy-based object stores (S3A) a reader globbing DURING the
-    * replace can see the shard missing; publish to a fresh directory
-    * when readers overlap writers. */
+    * stamped once, not per-JVM-clock). Shards commit by temp + rename
+    * ([[Shards.Shard.commit]] holds the protocol). */
   def writeWarc(df: DataFrame, uriCol: String, bodyCol: String,
                 path: String, files: Int, date: String): Unit =
     writeRecordShards(df, uriCol, bodyCol, path, files) { (uri, body) =>
@@ -401,73 +345,42 @@ object Warc {
     * the data shard commits BEFORE its index, so a visible index always
     * points at complete data. */
   def writeWarcIndexed(df: DataFrame, uriCol: String, bodyCol: String,
-                       path: String, files: Int, date: String): Unit = {
-    require(files >= 1, s"files must be >= 1, got $files")
-    import org.apache.spark.sql.functions._
-    val spark = df.sparkSession
-    val confEntries = TaskConf.snapshot(spark)
-    val out = new Path(path)
-    out.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(out)
-    df.select(col(uriCol).cast("string").as("u"),
-        col(bodyCol).cast("string").as("b"))
-      .repartition(files, pmod(xxhash64(col("u")), lit(files.toLong)))
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val tc = org.apache.spark.TaskContext.get()
-          val pid = tc.partitionId()
-          val conf = TaskConf.rebuild(confEntries)
-          def commit(name: String, tmpName: String)(
-              write: java.io.OutputStream => Unit): Unit = {
-            val dest = new Path(path, name)
-            val tmp = new Path(path, tmpName)
-            val fs = dest.getFileSystem(conf)
-            try {
-              val os = fs.create(tmp, true)
-              try write(os) finally os.close()
-              if (fs.exists(dest)) fs.delete(dest, false)
-              if (!fs.rename(tmp, dest) && !fs.exists(dest))
-                throw WarcError(s"could not commit $tmp -> $dest")
-            } finally fs.delete(tmp, false)
-          }
-          val fname = f"part-$pid%05d.warc.gz"
-          val att = tc.taskAttemptId()
-          val index = new scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-          commit(fname, f".part-$pid%05d.warc.attempt-$att%d.tmp") { raw =>
-            val bos = new java.io.BufferedOutputStream(raw, 1 << 16)
-            var offset = 0L
-            it.foreach { r =>
-              val uri = r.getString(0)
-              val member = new ByteArrayOutputStream(1 << 14)
-              val gz = new GZIPOutputStream(member, 1 << 14)
-              gz.write(renderResponses(Iterator((uri, date,
-                r.getString(1).getBytes(StandardCharsets.UTF_8)))))
-              gz.finish()
-              val bytes = member.toByteArray
-              bos.write(bytes)
-              index += ((uri, offset, bytes.length.toLong))
-              offset += bytes.length
-            }
-            bos.flush()
-          }
-          commit(f"part-$pid%05d.cdx.gz",
-            f".part-$pid%05d.cdx.attempt-$att%d.tmp") { raw =>
-            val gz = new GZIPOutputStream(raw, 1 << 14)
-            def jesc(s: String): String = s.flatMap {
-              case '"' => "\\\""
-              case '\\' => "\\\\"
-              case c if c < ' ' => f"\\u${c.toInt}%04x"
-              case c => c.toString
-            }
-            index.foreach { case (uri, off, len) =>
-              gz.write((s"""{"url":"${jesc(uri)}","offset":$off,""" +
-                s""""length":$len,"filename":"$fname"}""" + "\n")
-                .getBytes(StandardCharsets.UTF_8))
-            }
-            gz.finish()
-          }
+                       path: String, files: Int, date: String): Unit =
+    Shards.write(uriBody(df, uriCol, bodyCol), path, files, "u",
+        WarcError(_)) { (shard, rows) =>
+      val fname = shard.name("warc.gz")
+      val index = new scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
+      shard.commit(fname) { os =>
+        var offset = 0L
+        rows.foreach { r =>
+          val uri = r.getString(0)
+          val member = new ByteArrayOutputStream(1 << 14)
+          val gz = new GZIPOutputStream(member, 1 << 14)
+          gz.write(renderResponses(Iterator((uri, date,
+            r.getString(1).getBytes(StandardCharsets.UTF_8)))))
+          gz.finish()
+          val bytes = member.toByteArray
+          os.write(bytes)
+          index += ((uri, offset, bytes.length.toLong))
+          offset += bytes.length
         }
       }
-  }
+      shard.commit(shard.name("cdx.gz")) { os =>
+        val gz = new GZIPOutputStream(os, 1 << 14)
+        def jesc(s: String): String = s.flatMap {
+          case '"' => "\\\""
+          case '\\' => "\\\\"
+          case c if c < ' ' => f"\\u${c.toInt}%04x"
+          case c => c.toString
+        }
+        index.foreach { case (uri, off, len) =>
+          gz.write((s"""{"url":"${jesc(uri)}","offset":$off,""" +
+            s""""length":$len,"filename":"$fname"}""" + "\n")
+            .getBytes(StandardCharsets.UTF_8))
+        }
+        gz.finish()
+      }
+    }
 
   private val CdxSchema = StructType(Seq(
     StructField("url", StringType),
@@ -495,8 +408,6 @@ object Warc {
     * http_status, body) row shape as [[readWarc]]. */
   def fetchRecords(cdx: DataFrame, warcDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val spark = cdx.sparkSession
-    val confEntries = TaskConf.snapshot(spark)
     val rows = cdx
       .select(col("filename").cast("string"), col("offset").cast("long"),
         col("length").cast("long"))
@@ -504,20 +415,17 @@ object Warc {
       .sortWithinPartitions("filename", "offset")
     val schema = StructType(Schema.dropRight(2) :+
       StructField("File", StringType, nullable = false))
-    val rdd = rows.rdd.mapPartitions { it =>
-      val conf = TaskConf.rebuild(confEntries)
+    val rdd = Shards.mapWithConf(rows.rdd) { (conf, it) =>
       var curName: String = null
       var in: org.apache.hadoop.fs.FSDataInputStream = null
-      def closeQuietly(): Unit =
-        if (in != null) { try in.close() catch { case _: Exception => () } }
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit](_ => closeQuietly()))
+      var open: Shards.Once = null
       it.map { r =>
         val (fname, off, len) = (r.getString(0), r.getLong(1), r.getLong(2))
         if (fname != curName) {
-          closeQuietly()
+          if (open != null) open.close()
           val p = new Path(warcDir, fname)
           in = p.getFileSystem(conf).open(p)
+          open = new Shards.Once(in)
           curName = fname
         }
         if (len > (64L << 20)) throw WarcError(
@@ -530,121 +438,72 @@ object Warc {
         if (recs.size != 1) throw WarcError(
           s"member $fname@$off holds ${recs.size} records — a CDX entry " +
             "must address exactly one")
-        val rec = recs.head
-        val ct = rec.headers.getOrElse("content-type", null)
-        val (status, body) = httpSplit(ct, rec.payload)
-        Row(rec.headers.getOrElse("warc-type", null),
-          rec.headers.getOrElse("warc-target-uri", null),
-          rec.headers.getOrElse("warc-date", null),
-          ct, status.map(Int.box).orNull,
-          rec.headers.getOrElse("warc-truncated", null),
-          body, fname)
+        rowOf(recs.head, fname)
       }
     }
-    spark.createDataFrame(rdd, schema)
+    cdx.sparkSession.createDataFrame(rdd, schema)
+  }
+
+  /** The (u, b) string pair every WARC sink salts by `u`. */
+  private def uriBody(df: DataFrame, uriCol: String, bodyCol: String): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    df.select(col(uriCol).cast("string").as("u"), col(bodyCol).cast("string").as("b"))
+  }
+
+  /** Shared sink machinery of [[writeWarc]] and [[writeWet]]: salt rows
+    * into at most `files` gzip shards by `uriCol`, render each row with
+    * `renderOne` inside its own executor task, one gzip member a
+    * shard. */
+  private def writeRecordShards(df: DataFrame, uriCol: String,
+                                bodyCol: String, path: String, files: Int)(
+      renderOne: (String, Array[Byte]) => Array[Byte]): Unit =
+    Shards.write(uriBody(df, uriCol, bodyCol), path, files, "u",
+        WarcError(_)) { (shard, rows) =>
+      shard.commit(shard.name("warc.gz")) { os =>
+        val gz = new GZIPOutputStream(os, 1 << 16)
+        try rows.foreach { r =>
+          gz.write(renderOne(r.getString(0),
+            r.getString(1).getBytes(StandardCharsets.UTF_8)))
+        } finally gz.close()
+      }
+    }
+
+  /** The q125 synthetic pages of `docs` as (uri, html). */
+  private[graft] def syntheticPages(docs: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    graft.operators.Html.syntheticPages(docs)
+      .select(concat(lit("https://corpus.local/"), col("lang"), lit("/"),
+        col("doc_id")).as("uri"), col("html"))
   }
 
   /** Test/bench fixture: the synthetic pages exported once per sf dir
-    * in the per-record-gzip + CDX convention via [[writeWarcIndexed]].
-    */
+    * in the per-record-gzip + CDX convention via [[writeWarcIndexed]]. */
   def ensureIndexedPagesFixture(spark: SparkSession, sfDir: String,
-                                files: Int = 4): String = synchronized {
-    val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new File(sys.props("java.io.tmpdir"), s"graft_warccdx_v1_$tag")
-    val marker = new File(root, ".complete")
-    if (marker.isFile) return root.getPath
-    import org.apache.spark.sql.functions._
-    val pages = graft.operators.Html
-      .syntheticPages(graft.Tables(spark, sfDir, "documents"))
-      .select(concat(lit("https://corpus.local/"), col("lang"), lit("/"),
-        col("doc_id")).as("uri"), col("html"))
-    writeWarcIndexed(pages, "uri", "html", root.getPath, files,
-      date = "2026-01-01T00:00:00Z")
-    Files.write(marker.toPath, Array.emptyByteArray)
-    root.getPath
-  }
-
-  /** Shared sink machinery (see [[writeWarc]] for the commit-protocol
-    * contract): salt rows into at most `files` gzip shards by `uriCol`,
-    * render each row with `renderOne` inside its own executor task,
-    * commit via attempt-unique temp + rename. */
-  private def writeRecordShards(df: DataFrame, uriCol: String,
-                                bodyCol: String, path: String, files: Int)(
-      renderOne: (String, Array[Byte]) => Array[Byte]): Unit = {
-    require(files >= 1, s"files must be >= 1, got $files")
-    import org.apache.spark.sql.functions._
-    val spark = df.sparkSession
-    val confEntries = TaskConf.snapshot(spark)
-    val out = new Path(path)
-    out.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(out)
-    df.select(col(uriCol).cast("string").as("u"),
-        col(bodyCol).cast("string").as("b"))
-      .repartition(files, pmod(xxhash64(col("u")), lit(files.toLong)))
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext) {
-          val tc = org.apache.spark.TaskContext.get()
-          val pid = tc.partitionId()
-          val shard = new Path(path, f"part-$pid%05d.warc.gz")
-          val tmp = new Path(path,
-            f".part-$pid%05d.attempt-${tc.taskAttemptId()}%d.tmp")
-          val fs = shard.getFileSystem(TaskConf.rebuild(confEntries))
-          try {
-            val os = new GZIPOutputStream(fs.create(tmp, true), 1 << 16)
-            try it.foreach { r =>
-              os.write(renderOne(r.getString(0),
-                r.getString(1).getBytes(StandardCharsets.UTF_8)))
-            } finally os.close()
-            if (fs.exists(shard)) fs.delete(shard, false)
-            // rename-failed + shard-present = a concurrent attempt of
-            // this same partition committed a complete shard first;
-            // accept it (the finally clears this attempt's temp)
-            if (!fs.rename(tmp, shard) && !fs.exists(shard))
-              throw WarcError(s"could not commit $tmp -> $shard")
-          } finally fs.delete(tmp, false) // no-op once renamed away
-        }
-      }
-  }
+                                files: Int = 4): String =
+    Shards.fixture(s"graft_warccdx_v1_${Shards.sfTag(sfDir)}") { dir =>
+      writeWarcIndexed(syntheticPages(graft.Tables(spark, sfDir, "documents")),
+        "uri", "html", dir, files, date = "2026-01-01T00:00:00Z")
+    }
 
   /** Test/bench fixture: the synthetic pages' EXTRACTED TEXT exported
-    * once per sf dir as gzipped WET shards via [[writeWet]] —
-    * marker-cached like [[ensurePagesFixture]]. */
+    * once per sf dir as gzipped WET shards via [[writeWet]]. */
   def ensureWetFixture(spark: SparkSession, sfDir: String,
-                       files: Int = 4): String = synchronized {
-    val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new File(sys.props("java.io.tmpdir"), s"graft_wet_v1_$tag")
-    val marker = new File(root, ".complete")
-    if (marker.isFile) return root.getPath
-    import org.apache.spark.sql.functions._
-    val wet = graft.operators.Html
-      .syntheticPages(graft.Tables(spark, sfDir, "documents"))
-      .select(concat(lit("https://corpus.local/"), col("lang"), lit("/"),
-        col("doc_id")).as("uri"),
-        graft.operators.Html.extractText(col("html")).as("txt"))
-    writeWet(wet, "uri", "txt", root.getPath, files,
-      date = "2026-01-01T00:00:00Z")
-    Files.write(marker.toPath, Array.emptyByteArray)
-    root.getPath
-  }
+                       files: Int = 4): String =
+    Shards.fixture(s"graft_wet_v1_${Shards.sfTag(sfDir)}") { dir =>
+      import org.apache.spark.sql.functions.col
+      val wet = syntheticPages(graft.Tables(spark, sfDir, "documents"))
+        .select(col("uri"), graft.operators.Html.extractText(col("html")).as("txt"))
+      writeWet(wet, "uri", "txt", dir, files, date = "2026-01-01T00:00:00Z")
+    }
 
   /** Test/bench fixture: the q125 synthetic pages exported once per sf
-    * dir as gzipped WARC shards via [[writeWarc]] (marker-cached across
-    * JVMs, like the JSONL fixture) — WARC-scan queries exercise the
-    * real crawl-ingest path while the oracle rebuilds the same pages
-    * from parquet. */
+    * dir as gzipped WARC shards via [[writeWarc]] — WARC-scan queries
+    * exercise the real crawl-ingest path while the oracle rebuilds the
+    * same pages from parquet. */
   def ensurePagesFixture(spark: SparkSession, sfDir: String,
-                         files: Int = 4): String = synchronized {
-    val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new File(sys.props("java.io.tmpdir"), s"graft_warc_v3_$tag")
-    val marker = new File(root, ".complete")
-    if (marker.isFile) return root.getPath
-    import org.apache.spark.sql.functions._
-    val pages = graft.operators.Html
-      .syntheticPages(graft.Tables(spark, sfDir, "documents"))
-      .select(concat(lit("https://corpus.local/"), col("lang"), lit("/"),
-        col("doc_id")).as("uri"), col("html"))
-    writeWarc(pages, "uri", "html", root.getPath, files,
-      date = "2026-01-01T00:00:00Z")
-    Files.write(marker.toPath, Array.emptyByteArray)
-    root.getPath
-  }
+                         files: Int = 4): String =
+    Shards.fixture(s"graft_warc_v3_${Shards.sfTag(sfDir)}") { dir =>
+      writeWarc(syntheticPages(graft.Tables(spark, sfDir, "documents")),
+        "uri", "html", dir, files, date = "2026-01-01T00:00:00Z")
+    }
 }

@@ -111,20 +111,8 @@ object Scale {
 
   /** The synthetic page corpus of the documents replicated m×. */
   private def pageCorpus(r: Run, m: Int): DataFrame =
-    Html.syntheticPages(replicas(r.docs, m).select(
+    graft.sources.Warc.syntheticPages(replicas(r.docs, m).select(
       (col("doc_id") * m + col("rep")).as("doc_id"), col("lang"), col("text")))
-      .select(concat(lit("https://corpus.local/"), col("lang"), lit("/"),
-        col("doc_id")).as("uri"), col("html"))
-
-  /** A temp-dir fixture written once per JVM tmpdir (marker file). */
-  private def writeOnce(name: String)(write: String => Unit): java.io.File = {
-    val root = new java.io.File(sys.props("java.io.tmpdir"), name)
-    if (!new java.io.File(root, ".complete").isFile) {
-      write(root.getPath)
-      Files.write(root.toPath.resolve(".complete"), Array.emptyByteArray)
-    }
-    root
-  }
 
   private def bytesEndingWith(root: java.io.File, suffix: String): Long =
     root.listFiles().filter(_.getName.endsWith(suffix)).map(_.length).sum
@@ -859,12 +847,12 @@ object Scale {
     // grows with the corpus, as a real crawl's does), read it back; one
     // task per file on both sides, so wall must track bytes ~linearly
     Leg("warc", r => for (m <- r.mults) {
-      val root = writeOnce(s"graft_warcscale_$m") { dir =>
+      val root = new java.io.File(graft.sources.Shards.fixture(s"graft_warcscale_$m") { dir =>
         r.time(s"warcWrite x$m") {
           graft.sources.Warc.writeWarc(pageCorpus(r, m), "uri", "html",
             dir, 4 * m, "2026-01-01T00:00:00Z")
         }
-      }
+      })
       val res = r.time(s"warcRead x$m (rows)") {
         graft.sources.Warc.readWarc(r.spark, s"$root/part-*.warc.gz")
           .filter(col("http_status") === 200)
@@ -880,12 +868,12 @@ object Scale {
     // ~linearly is the pass condition: it tracks the SLICE, not the
     // archive — a 0.1% fetch from a 100 TB archive costs 0.1% of the bytes
     Leg("cdx", r => for (m <- r.mults) {
-      val root = writeOnce(s"graft_cdxscale_$m") { dir =>
+      val root = new java.io.File(graft.sources.Shards.fixture(s"graft_cdxscale_$m") { dir =>
         r.time(s"cdxWrite x$m") {
           graft.sources.Warc.writeWarcIndexed(pageCorpus(r, m), "uri", "html",
             dir, 4 * m, "2026-01-01T00:00:00Z")
         }
-      }
+      })
       r.time(s"streamAll x$m (rows, body bytes)") {
         graft.sources.Warc.readWarc(r.spark, s"$root/part-*.warc.gz")
           .agg(count(lit(1)), sum(length(col("body")))).head()

@@ -30,6 +30,16 @@ class DedupClustersSpec extends AnyFunSuite {
     assert(m.size == 41 && m.values.forall(_ == 0L))
   }
 
+  test("convergence signature tells apart multisets an XOR would merge") {
+    // star rounds emit duplicate edges: {a,a,b} and {b,c,c} have the
+    // same size, and XOR-ing their hashes cancels each doubled edge
+    val (a, b, c) = ((1L, 2L), (3L, 4L), (5L, 6L))
+    def sig(edges: (Long, Long)*) =
+      Dedup.ccSignature(edges.toDF("u", "v"))
+    assert(sig(a, a, b) != sig(b, c, c))
+    assert(sig(a, a, b) == sig(b, a, a))
+  }
+
   test("empty edge list yields empty mapping") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(empty).count() == 0)

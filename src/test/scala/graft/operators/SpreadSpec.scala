@@ -62,6 +62,42 @@ class SpreadSpec extends AnyFunSuite {
     }
   }
 
+  /** Spark jobs run while `Spread.scan` decides (the probe must never
+    * execute its input). */
+  private def probeJobs(df: org.apache.spark.sql.DataFrame): Int =
+    graft.obs.QueryJobs.of(spark)(Spread.scan(df))._2.size
+
+  test("big-estimate plan with a scalar subquery is never probed") {
+    // the subquery hides in an expression, not a child: materializing
+    // the RDD would run its aggregate job on the driver
+    inBigEstimateRegime {
+      val df = spark.sql(
+        "SELECT id FROM range(1000) WHERE id > (SELECT max(id) - 500 FROM range(10))")
+      assert(probeJobs(df) == 0)
+    }
+  }
+
+  test("big-estimate typed groupByKey/mapGroups input is never probed") {
+    // MapGroups plans a shuffle of its own: the probe would run it
+    val s = spark
+    import s.implicits._
+    inBigEstimateRegime {
+      val df = spark.range(1000).as[Long]
+        .groupByKey((x: Long) => x % 10)
+        .mapGroups((k: Long, it: Iterator[Long]) => k + it.size)
+        .toDF("id")
+      assert(probeJobs(df) == 0)
+    }
+  }
+
+  test("big-estimate input cached over an aggregate is never probed") {
+    // an unfilled cache is a leaf hiding its plan: AQE would fill it
+    inBigEstimateRegime {
+      val df = spark.range(1000).toDF("id").groupBy("id").count().cache()
+      try assert(probeJobs(df) == 0) finally df.unpersist()
+    }
+  }
+
   test("spread output fans the parallelism out to every core") {
     val n = Spread.scan(spark.range(1000).toDF("id")).rdd.getNumPartitions
     assert(n === spark.sparkContext.defaultParallelism)
