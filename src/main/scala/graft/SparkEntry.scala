@@ -341,8 +341,8 @@ object SparkEntry {
 
     // ---- STORAGE: Avro object-container round trip (round 11) —
     //      documents exported once per sf dir as 4 Avro shards (two
-    //      deflate + two null codec; hand-rolled container + zigzag
-    //      binary encoding, no avro jar), read back through the
+    //      deflate + two null codec, written and read by the Avro
+    //      library Spark ships), read back through the
     //      SPLIT-capable source at 64 KiB splits so real sync-marker
     //      scans run inside the oracle query — unlike the gzip family
     //      a shard fans out across tasks. Exercises the `["null",

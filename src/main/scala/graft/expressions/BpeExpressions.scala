@@ -255,75 +255,30 @@ object BpeCodec {
   }
 
   /** Parse a GPT-2 `encoder.json` vocab: a flat JSON object mapping
-    * token string -> integer id. Hand-rolled (zero-dependency) but
-    * complete for the format: standard JSON string escapes including
-    * \uXXXX (the byte-level alphabet's remapped symbols serialize that
-    * way in real files), arbitrary whitespace, negative ids rejected by
-    * downstream use not by the parser. Loud errors on malformed input. */
+    * token string -> integer id, read as a Jackson tree (standard JSON
+    * string escapes incl. \uXXXX — the byte-level alphabet's remapped
+    * symbols serialize that way in real files). Negative ids are
+    * rejected by downstream use, not here. Loud errors on malformed
+    * input or a non-integer id. */
   def parseVocabJson(json: String): java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]()
-    var i = 0
-    val n = json.length
     def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"vocab json: $msg at offset $i")
-    def ws(): Unit =
-      while (i < n && Character.isWhitespace(json.charAt(i))) i += 1
-    def parseString(): String = {
-      if (i >= n || json.charAt(i) != '"') fail("expected string")
-      i += 1
-      val sb = new java.lang.StringBuilder()
-      while (i < n && json.charAt(i) != '"') {
-        val c = json.charAt(i)
-        if (c == '\\') {
-          i += 1
-          if (i >= n) fail("dangling escape")
-          json.charAt(i) match {
-            case '"' => sb.append('"')
-            case '\\' => sb.append('\\')
-            case '/' => sb.append('/')
-            case 'b' => sb.append('\b')
-            case 'f' => sb.append('\f')
-            case 'n' => sb.append('\n')
-            case 'r' => sb.append('\r')
-            case 't' => sb.append('\t')
-            case 'u' =>
-              if (i + 4 >= n) fail("truncated \\u escape")
-              sb.append(Integer.parseInt(json.substring(i + 1, i + 5), 16).toChar)
-              i += 4
-            case other => fail(s"bad escape \\$other")
-          }
-        } else sb.append(c)
-        i += 1
-      }
-      if (i >= n) fail("unterminated string")
-      i += 1
-      sb.toString
-    }
-    ws()
-    if (i >= n || json.charAt(i) != '{') fail("expected '{'")
-    i += 1
-    ws()
-    if (i < n && json.charAt(i) == '}') return m
-    var done = false
-    while (!done) {
-      ws()
-      val k = parseString()
-      ws()
-      if (i >= n || json.charAt(i) != ':') fail("expected ':'")
-      i += 1
-      ws()
-      val start = i
-      if (i < n && json.charAt(i) == '-') i += 1
-      while (i < n && Character.isDigit(json.charAt(i))) i += 1
-      if (start == i) fail("expected integer id")
-      m.put(k, Int.box(json.substring(start, i).toInt))
-      ws()
-      if (i < n && json.charAt(i) == ',') i += 1
-      else if (i < n && json.charAt(i) == '}') { i += 1; done = true }
-      else fail("expected ',' or '}'")
+      throw new IllegalArgumentException(s"vocab json: $msg")
+    val root =
+      try vocabMapper.readTree(json)
+      catch { case e: java.io.IOException => fail(e.getMessage) }
+    if (!root.isObject) fail("expected a JSON object")
+    val m = new java.util.HashMap[String, Integer]()
+    root.properties().forEach { e =>
+      val v = e.getValue
+      if (!v.isIntegralNumber || !v.canConvertToInt)
+        fail(s"id of ${e.getKey} is not an integer: $v")
+      m.put(e.getKey, Int.box(v.intValue))
     }
     m
   }
+
+  private lazy val vocabMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   /** Render a vocab in the same `encoder.json` format [[parseVocabJson]]
     * reads (round-trips; non-ASCII and control chars \uXXXX-escaped). */

@@ -24,15 +24,11 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
   // The recipe engine REQUIRES pandas-style case-sensitive resolution:
   // the corpus unions 'Classes' (raw/sklearn) with 'classes' (svm/logreg/
   // df_clsf) as distinct padded columns, and indicator precomputes
-  // reference one spelling exactly. Set eagerly so plans built below
-  // (analysis happens at DataFrame construction) resolve pandas-style
-  // even under a caller session that left the Spark default. Ownership
-  // is REF-COUNTED session-wide (see [[Benchmark.acquireCaseSensitive]]):
-  // overlapping instances (a DAG's children, or two independent recipes)
-  // each acquire on construction and release in [[unpersist]]; the
-  // caller's prior value is restored only when the last one releases.
-  Benchmark.acquireCaseSensitive(spark)
-  private val caseSensitiveReleased = new java.util.concurrent.atomic.AtomicBoolean(false)
+  // reference one spelling exactly. Every session GraftSession builds
+  // sets it; a session without it would silently merge the two.
+  require(spark.conf.get("spark.sql.caseSensitive", "false").toBoolean,
+    "the recipe engine needs spark.sql.caseSensitive=true (GraftSession sets " +
+      "it): case-insensitive resolution merges columns like Classes/classes")
 
   /** Warning side-channel (SURVEY §7.4.4): expected-combination fills and
     * ordering violations land here instead of a log scrape. */
@@ -109,21 +105,11 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
 
   lazy val childFrames: Seq[DataFrame] = childEvals.map(_._1)
 
-  /** Release every frame this benchmark (and its children) pinned, and
-    * release this instance's hold on `spark.sql.caseSensitive` — the
-    * caller's prior value is restored when the LAST live Benchmark on
-    * the session releases (every plan built under any of them is
-    * analyzed before its release, so the restore cannot affect them).
-    * Idempotent per instance. */
+  /** Release every frame this benchmark (and its children) pinned. */
   def unpersist(): Unit = {
     persistedFrames.foreach(_.unpersist(false))
     persistedFrames.clear()
     childBenches.foreach(_.unpersist())
-    // compareAndSet: concurrent unpersist() calls must release exactly
-    // once or the session ref count double-decrements and a still-live
-    // sibling loses case-sensitive resolution
-    if (caseSensitiveReleased.compareAndSet(false, true))
-      Benchmark.releaseCaseSensitive(spark)
   }
 
   /** Raw scan with the parsed FILE portion persisted (MEMORY_AND_DISK):
@@ -595,38 +581,4 @@ object Benchmark {
 
   def fromString(spark: SparkSession, yaml: String, baseDir: String = "."): Benchmark =
     new Benchmark(Recipe.loadString(yaml, baseDir), spark)
-
-  /** Session-wide ref-counted ownership of `spark.sql.caseSensitive`:
-    * the FIRST acquire on a session saves the caller's value and forces
-    * true; the LAST release restores it. Without the count, one
-    * instance's release would flip resolution under a sibling that is
-    * still building plans (a DAG's concurrently-evaluated children, or
-    * two independent recipes on one session). WeakHashMap so a session
-    * whose benchmarks are never released doesn't pin the entry. */
-  private val csHolds =
-    new java.util.WeakHashMap[SparkSession, Array[Any]]()
-
-  private[recipe] def acquireCaseSensitive(spark: SparkSession): Unit =
-    csHolds.synchronized {
-      val st = csHolds.get(spark)
-      if (st == null)
-        csHolds.put(spark,
-          Array[Any](1, spark.conf.get("spark.sql.caseSensitive", "false")))
-      else st(0) = st(0).asInstanceOf[Int] + 1
-      // force on EVERY acquire (not just the first): a caller may have
-      // flipped the conf between constructions, and each new instance
-      // needs case-sensitive analysis from its first plan
-      spark.conf.set("spark.sql.caseSensitive", "true")
-    }
-
-  private[recipe] def releaseCaseSensitive(spark: SparkSession): Unit =
-    csHolds.synchronized {
-      val st = csHolds.get(spark)
-      if (st == null) return
-      val n = st(0).asInstanceOf[Int] - 1
-      if (n <= 0) {
-        csHolds.remove(spark)
-        spark.conf.set("spark.sql.caseSensitive", st(1).asInstanceOf[String])
-      } else st(0) = n
-    }
 }

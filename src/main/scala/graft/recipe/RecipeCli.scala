@@ -140,8 +140,8 @@ object RecipeCli {
             inputs = if (c.inputs.isEmpty) None else Some(c.inputs))) else None))
       if (nSinks == 0) print(Sinks.pivotString(df, bench.recipe))
       if (nSinks > 1) df.unpersist(false)
-      // finally: a failing sink must not leak this recipe's caches or
-      // its caseSensitive hold into the next recipe's evaluation
+      // finally: a failing sink must not leak this recipe's caches
+      // into the next recipe's evaluation
       } finally bench.unpersist()
     } catch {
       case e: RecipeError =>

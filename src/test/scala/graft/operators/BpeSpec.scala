@@ -311,6 +311,12 @@ class BpeSpec extends AnyFunSuite {
     assert(unk == 0)
   }
 
+  test("encoder.json vocab: non-integer ids and trailing input are refused") {
+    for (bad <- Seq("{\"a\": 1.5}", "{\"a\": 2.0}", "{\"a\": 1e2}", "{\"a\": \"7\"}",
+                    "{\"a\": 3000000000}", "{\"a\": null}", "{\"a\": 1} {}", ""))
+      intercept[IllegalArgumentException](BpeCodec.parseVocabJson(bad))
+  }
+
   test("expression == codec on fixture text (cache on and off paths)") {
     val docs = graft.Tables(spark, TestSpark.sfDir, "documents").limit(40)
     val table = graft.SparkEntry.bpeCanonicalMerges

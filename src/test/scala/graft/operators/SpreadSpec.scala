@@ -45,10 +45,12 @@ class SpreadSpec extends AnyFunSuite {
   test("big-estimate input arriving as fewer splits than cores spreads anyway") {
     // a LogicalRDD's size is non-estimable (defaultSizeInBytes, huge) —
     // the byte test alone would silently never spread it; the partition
-    // probe sees 2 splits < cores and fires the spread (the same hole
-    // covers few huge unsplittable files)
+    // probe sees one split fewer than cores and fires the spread (the
+    // same hole covers few huge unsplittable files)
     import spark.implicits._
-    val rdd = spark.sparkContext.parallelize(Seq(1L, 2L, 3L, 4L), 2)
+    val cores = spark.sparkContext.defaultParallelism
+    assume(cores >= 2, s"needs at least 2 cores to arrive as fewer splits, has $cores")
+    val rdd = spark.sparkContext.parallelize(Seq(1L, 2L, 3L, 4L), cores - 1)
     val logicalRdd = spark.createDataset(rdd).toDF("id")
     assert(isSpread(logicalRdd))
   }

@@ -167,6 +167,31 @@ class RecipePipelineSpec extends AnyFunSuite {
     assert(m == Map("numpy" -> 2.0, "numba" -> 0.5))
   }
 
+  test("a bare mid-line CR ends the line alike on both CSV scan paths") {
+    // the reference reads with universal newlines, so a lone CR is a line
+    // break: the native reader (Hadoop LineRecordReader) and the filtered
+    // wholetext path (linesIterator) must both split there, and no CR may
+    // reach a parsed value
+    val dir = tmpDir()
+    write(dir, "cr.csv", "impl, time\nnumpy, 1.0\rnumba, 2.0\r\nscipy, 3.0\n")
+    def raw(filter: String): Set[(String, String)] = {
+      val bench = Benchmark.fromString(spark,
+        s"""input:
+           |  path: "${dir}/cr.csv"
+           |$filter
+           |aggregation: mean
+           |values: [time]
+           |series: [impl]
+           |""".stripMargin)
+      try bench.getRawData().select("impl", "time").collect()
+        .map(r => (r.get(0).toString, r.get(1).toString)).toSet
+      finally bench.unpersist()
+    }
+    val native = raw("")
+    assert(native == Set(("numpy", "1.0"), ("numba", "2.0"), ("scipy", "3.0")))
+    assert(raw("  filter:\n    ',': null") == native)
+  }
+
   test(".meta sidecar adds constant columns") {
     val dir = tmpDir()
     write(dir, "r.csv", "impl, time\nnumpy, 1.0\n")
@@ -323,22 +348,15 @@ class RecipePipelineSpec extends AnyFunSuite {
     assert(bench.warnings.exists(_.contains("ordering")))
   }
 
-  test("caseSensitive ownership is ref-counted across overlapping benchmarks") {
-    // a fresh cloned session: its OWN SQLConf, so holds leaked by other
-    // tests' never-released benchmarks on the shared session can't mask
-    // the last-release restore
+  test("case-insensitive session refused at construction") {
+    // a cloned session has its OWN SQLConf, so the shared one is untouched
     val s = spark.newSession()
     s.conf.set("spark.sql.caseSensitive", "false")
     val recipe = "input:\n  path: \"/nonexistent\"\naggregation: mean\nvalues: [x]\n"
-    val a = Benchmark.fromString(s, recipe) // acquires: saves "false", forces true
-    val b = Benchmark.fromString(s, recipe) // nested acquire
-    assert(s.conf.get("spark.sql.caseSensitive") == "true")
-    a.unpersist() // b still holds — must NOT flip resolution under it
-    assert(s.conf.get("spark.sql.caseSensitive") == "true")
-    a.unpersist() // idempotent: no double-release
-    assert(s.conf.get("spark.sql.caseSensitive") == "true")
-    b.unpersist() // last hold released -> caller's value restored
+    val e = intercept[IllegalArgumentException](Benchmark.fromString(s, recipe))
+    assert(e.getMessage.contains("spark.sql.caseSensitive=true"), e.getMessage)
     assert(s.conf.get("spark.sql.caseSensitive") == "false")
+    Benchmark.fromString(spark, recipe) // the shared GraftSession is accepted
   }
 
   test("corpus-shaped expected block: A7 fill + A8 warnings end-to-end (q69 recipe)") {

@@ -2,6 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.avro.Schema
+import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,32 +14,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** Avro object-container files, hand-rolled from the published spec:
-  * zigzag golden vectors, schema JSON round trip, write/read round
-  * trips over both codecs incl. nulls and arrays, SPLIT-read
-  * equivalence at every split size (the sync-marker scale path), and
-  * the loud-failure matrix. */
+/** Avro object-container files through the Avro library: schema JSON
+  * round trip, write/read round trips over both codecs incl. nulls and
+  * arrays, SPLIT-read equivalence at every split size (the sync-marker
+  * scale path), interop with plain library writers and readers both
+  * ways, and the loud-failure matrix. */
 class AvroSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private def zig(n: Long): Seq[Int] = {
-    val out = new java.io.ByteArrayOutputStream()
-    Avro.writeZigZag(out, n)
-    out.toByteArray.toSeq.map(_ & 0xFF)
-  }
-
-  test("zigzag varints match the published golden vectors") {
-    assert(zig(0L) == Seq(0x00))
-    assert(zig(-1L) == Seq(0x01))
-    assert(zig(1L) == Seq(0x02))
-    assert(zig(-2L) == Seq(0x03))
-    assert(zig(-64L) == Seq(0x7f))
-    assert(zig(64L) == Seq(0x80, 0x01))
-    assert(zig(Long.MaxValue) ==
-      Seq(0xfe, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0x01))
-    assert(zig(Long.MinValue) ==
-      Seq(0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0x01))
-  }
 
   test("schema json round-trips the full declared subset") {
     val schema = StructType(Seq(
@@ -79,7 +65,6 @@ class AvroSpec extends AnyFunSuite {
   }
 
   private def roundTripDf() = {
-    import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("name", StringType, nullable = true),
@@ -200,5 +185,77 @@ class AvroSpec extends AnyFunSuite {
       Avro.read(spark, corrupt.toString).count())
     assert(e4.getMessage.contains("sync marker mismatch") ||
       Option(e4.getCause).exists(_.getMessage.contains("sync marker mismatch")))
+  }
+
+  test("a foreign container (namespace, doc, deflate, small sync interval) " +
+    "reads the same rows at 64 KiB splits as whole") {
+    val schema = new Schema.Parser().parse(
+      """{"type": "record", "name": "Doc", "namespace": "org.example.corpus",
+        | "doc": "written by another tool",
+        | "fields": [
+        |   {"name": "id", "type": "long", "doc": "row id"},
+        |   {"name": "name", "type": ["null", "string"], "default": null},
+        |   {"name": "w", "type": "double"},
+        |   {"name": "tags", "type": {"type": "array", "items": "string"}}]}
+        |""".stripMargin)
+    val file = Files.createTempDirectory("avro_foreign").resolve("foreign.avro").toFile
+    val rnd = new scala.util.Random(7)
+    val expected = Seq.newBuilder[String]
+    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+      .setCodec(CodecFactory.deflateCodec(6)).setSyncInterval(2048)
+    w.create(schema, file)
+    for (i <- 0 until 5000) {
+      val name = if (i % 3 == 0) null else s"n$i"
+      val tags = Seq.fill(i % 3)(rnd.alphanumeric.take(40).mkString)
+      val r = new GenericData.Record(schema)
+      r.put("id", i.toLong)
+      r.put("name", name)
+      r.put("w", i / 4.0)
+      r.put("tags", tags.asJava)
+      w.append(r)
+      expected += Row(i.toLong, name, i / 4.0, tags.mkString("|")).toString
+    }
+    w.close()
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(col("id"), col("name"), col("w"), concat_ws("|", col("tags")))
+        .collect().map(_.toString).sorted.toSeq
+    val whole = Avro.read(spark, file.getPath, splitBytes = 1L << 30)
+    val split = Avro.read(spark, file.getPath, splitBytes = 1L << 16)
+    assert(split.rdd.getNumPartitions > 1,
+      s"a ${file.length} byte container at 64 KiB splits must plan multiple tasks")
+    assert(split.columns.toSeq == Seq("file", "id", "name", "w", "tags"))
+    assert(rows(whole) == expected.result().sorted)
+    assert(rows(split) == rows(whole))
+  }
+
+  test("a shard written by Avro.write reads back through a plain DataFileReader") {
+    val dir = Files.createTempDirectory("avro_plain").toString
+    val df = roundTripDf()
+    Avro.write(df, dir, files = 1, saltCol = "id", codec = "deflate", blockRows = 64)
+    val shard = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".avro")).head
+    val reader = new DataFileReader[GenericRecord](shard, new GenericDatumReader[GenericRecord]())
+    val back = try {
+      assert(reader.getSchema.toString == Avro.schemaJson(Avro.fieldsOf(df.schema)))
+      reader.iterator().asScala.map { r =>
+        val blob = r.get("blob").asInstanceOf[java.nio.ByteBuffer]
+        Row(r.get("id"), Option(r.get("name")).map(_.toString).orNull, r.get("w"),
+          r.get("f"), r.get("ok"),
+          (blob.position() until blob.limit()).map(i => f"${blob.get(i)}%02X").mkString,
+          r.get("xs").asInstanceOf[java.util.List[_]].asScala.mkString("|")).toString
+      }.toSeq
+    } finally reader.close()
+    assert(back.sorted == canon(df).toSeq.sorted)
+  }
+
+  test("a truncated container fails loudly instead of reading short") {
+    val dir = Files.createTempDirectory("avro_trunc").toString
+    Avro.write(roundTripDf(), s"$dir/ok", files = 1, saltCol = "id", codec = "null",
+      blockRows = 8)
+    val bytes = Files.readAllBytes(Paths.get(s"$dir/ok/part-00000.avro"))
+    // cut the final sync marker and part of the last block's records
+    val cut = Paths.get(s"$dir/cut.avro")
+    Files.write(cut, bytes.take(bytes.length - 40))
+    val e = intercept[org.apache.spark.SparkException](Avro.read(spark, cut.toString).count())
+    assert(e.getMessage.contains("truncated"), e.getMessage)
   }
 }
