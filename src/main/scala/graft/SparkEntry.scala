@@ -1096,36 +1096,40 @@ object SparkEntry {
       Multimodal.resize(
         Multimodal.syntheticAssets(t(s, dir, "documents")), 128, 96)),
 
-    // ---- MM: REAL pixel path — genuine PNGs (compressed, filtered)
-    //      decoded with the pure-JVM codec, nearest-neighbor resampled,
-    //      resampled BYTES hashed; the oracle recomputes the expected
-    //      bytes from the generating formula without touching the PNG
+    // ---- MM: REAL pixel path — genuine PNGs (deflate-compressed)
+    //      decoded with the JDK's ImageIO codec (graft.expressions.Media),
+    //      nearest-neighbor resampled, resampled BYTES hashed; the oracle
+    //      recomputes the expected bytes from the generating formula
+    //      without touching the PNG
     "q86_png_pixels" -> ((s, dir) =>
       Multimodal.resamplePixels(
         Multimodal.syntheticPixelAssets(t(s, dir, "documents")), 8, 6)),
 
     // ---- MM: REAL audio path — genuine PCM-16 WAVs decoded via the
-    //      pure-JVM RIFF parser; features are all-integer (exact sum of
-    //      squared samples instead of float RMS) so the oracle recomputes
-    //      them from the generating formula without touching the bytes
+    //      JDK's javax.sound WAVE reader; features are all-integer (exact
+    //      sum of squared samples instead of float RMS) so the oracle
+    //      recomputes them from the generating formula without touching
+    //      the bytes
     "q87_wav_features" -> ((s, dir) =>
       Multimodal.audioFeatures(
         Multimodal.syntheticAudioAssets(t(s, dir, "documents")))),
 
     // ---- MM: REAL video path — genuine GIF89a animations (real LZW
     //      streams, graphic-control blocks) decoded frame by frame with
-    //      the pure-JVM codec, every 2nd frame kept, composited RGB
-    //      bytes hashed; the oracle recomputes the expected bytes from
-    //      the generating formula without touching the GIF
+    //      the JDK's ImageIO codec and composited by graft, every 2nd
+    //      frame kept, composited RGB bytes hashed; the oracle recomputes
+    //      the expected bytes from the generating formula without
+    //      touching the GIF
     "q88_gif_frames" -> ((s, dir) =>
       Multimodal.decodeFrames(
         Multimodal.syntheticGifAssets(t(s, dir, "documents")), 2)),
 
     // ---- MM: REAL lossy-still path — genuine baseline JPEGs (real
     //      Huffman entropy coding, DCT, restart markers) decoded with
-    //      the pure-JVM codec; the 8x8 block-constant mosaic + all-ones
-    //      quant make the lossy pipeline exact, so the oracle recomputes
-    //      the pixel bytes from the formula without touching the JPEG
+    //      the JDK's ImageIO codec; the 8x8 block-constant mosaic +
+    //      all-ones quant make the lossy pipeline exact, so the oracle
+    //      recomputes the pixel bytes from the formula without touching
+    //      the JPEG
     "q89_jpeg_pixels" -> ((s, dir) =>
       Multimodal.decodePixels(
         Multimodal.syntheticJpegAssets(t(s, dir, "documents")))),

@@ -101,6 +101,13 @@ object CsvLineFields {
     new GenericArrayData(out)
   }
 
+  /** Every field of one record, empty ones as "" — the scan's own
+    * tokenizer, for the driver-side header peek, so the peek and the scan
+    * can never split a line two ways. */
+  def tokens(line: String): Array[String] =
+    Option(parsers.get().parseLine(line)).getOrElse(Array.empty[String])
+      .map(t => if (t == null) "" else t)
+
   /** Lines containing a quote byte: Spark's own CSV machinery semantics,
     * via a per-thread Univocity parser configured like CSVOptions does
     * for from_csv (PERMISSIVE, all-string schema). */

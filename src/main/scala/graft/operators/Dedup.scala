@@ -515,26 +515,8 @@ object Dedup {
   def simhashBandPairs(df: DataFrame, idCol: String, textCol: String,
                        bands: Int = 4, maxHamming: Int = 8,
                        bits: Int = 32): DataFrame = {
-    require(bits == 32 || bits == 60, s"simhash width must be 32 or 60, got $bits")
     require(bits % bands == 0, s"bands must divide $bits, got $bands")
-    val bandBits = bits / bands
-    val mask = (1L << bandBits) - 1
-    val bandKeys = array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(col("sh"), b * bandBits).bitwiseAND(lit(mask)).as("key"))
-    }: _*)
-    val shExpr = if (bits == 60) simhash60(col(textCol)) else simhash(col(textCol))
-    val keyed = Spread.scan(df)
-      .select(col(idCol).as("id"), shExpr.as("sh"))
-      .select(col("id"), col("sh"), explode(bandKeys).as("bk"))
-      .repartition(col("bk"))
-    val a = keyed.select(col("bk"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = keyed.select(col("bk"), col("id").as("id_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("bk")).filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", hamming(col("sh_a"), col("sh_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-      .distinct()
+    simhashTablePairs(df, idCol, textCol, bands, keyBlocks = 1, maxHamming, bits)
   }
 
   /** SimHash near-dup pairs via Manku-style block-combination tables —
@@ -561,23 +543,33 @@ object Dedup {
   def simhashMankuPairs(df: DataFrame, idCol: String, textCol: String,
                         blocks: Int = 6, keyBlocks: Int = 3,
                         maxHamming: Int = 3, bits: Int = 60): DataFrame = {
-    require(bits == 32 || bits == 60, s"simhash width must be 32 or 60, got $bits")
     require(bits % blocks == 0, s"blocks must divide $bits, got $blocks")
     require(keyBlocks > 0 && keyBlocks < blocks, "need 0 < keyBlocks < blocks")
     require(maxHamming <= blocks - keyBlocks,
       s"exactness needs maxHamming <= blocks - keyBlocks (= ${blocks - keyBlocks})")
+    simhashTablePairs(df, idCol, textCol, blocks, keyBlocks, maxHamming, bits)
+  }
+
+  /** The one body of both simhash indexes: the `bits`-wide fingerprint
+    * splits into `blocks` contiguous bit-blocks, each `keyBlocks`-subset
+    * of blocks is one table keyed by those blocks' bits (one table per
+    * block at `keyBlocks = 1` — the band index), and pairs that share any
+    * (table, key) are verified at Hamming <= `maxHamming`. All tables ride
+    * ONE exchange and one self-equi-join, never a cartesian. */
+  private def simhashTablePairs(df: DataFrame, idCol: String, textCol: String,
+                                blocks: Int, keyBlocks: Int, maxHamming: Int,
+                                bits: Int): DataFrame = {
+    require(bits == 32 || bits == 60, s"simhash width must be 32 or 60, got $bits")
     val blockBits = bits / blocks
     val mask = (1L << blockBits) - 1
-    val combos = (0 until blocks).combinations(keyBlocks).toSeq
     def keyOf(c: Seq[Int]): Column =
       c.zipWithIndex.map { case (blk, i) =>
         shiftleft(
           shiftright(col("sh"), blk * blockBits).bitwiseAND(lit(mask)),
           i * blockBits)
       }.reduce(_.bitwiseOR(_))
-    val tableKeys = array(combos.zipWithIndex.map { case (c, t) =>
-      struct(lit(t).as("tbl"), keyOf(c).as("key"))
-    }: _*)
+    val tableKeys = array((0 until blocks).combinations(keyBlocks).toSeq.zipWithIndex
+      .map { case (c, t) => struct(lit(t).as("tbl"), keyOf(c).as("key")) }: _*)
     val shExpr = if (bits == 60) simhash60(col(textCol)) else simhash(col(textCol))
     val keyed = Spread.scan(df)
       .select(col(idCol).as("id"), shExpr.as("sh"))

@@ -4,20 +4,21 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.expressions.Media
+
 /** Multimodal-column plumbing: images/audio/video ride through the engine
   * as opaque `BinaryType` payloads plus a typed metadata struct.
   *
   * Image dimensions are REAL: PNG IHDR and JPEG SOF headers are parsed
-  * straight from the payload bytes ([[graft.expressions.ImageHeaders]] —
-  * public container formats, no media libraries), both in the
-  * partition-local [[decodeBatch]] seam and in the codegen'd expression
-  * path ([[featurizeExpr]], via `graft_image_dims`); the two paths are
-  * spec-pinned identical. PIXEL/SAMPLE work is real too, via pure-JVM
-  * codecs written against the public format specs (no media libraries):
-  * PNG stills ([[resamplePixels]] — zlib inflate, defilter, resample),
-  * baseline JPEG stills ([[decodePixels]] — Huffman entropy decode,
-  * IDCT, color convert), GIF animations ([[decodeFrames]] — LZW,
-  * disposal-aware compositing), and PCM WAV audio ([[audioFeatures]]).
+  * straight from the payload bytes ([[graft.expressions.ImageHeaders]]),
+  * both in the partition-local [[decodeBatch]] seam and in the codegen'd
+  * expression path ([[featurizeExpr]], via `graft_image_dims`); the two
+  * paths are spec-pinned identical. PIXEL/SAMPLE work is real too,
+  * through [[graft.expressions.Media]] — the JDK's own `javax.imageio`
+  * and `javax.sound.sampled` codecs: PNG stills ([[resamplePixels]] —
+  * decode, resample), JPEG stills ([[decodePixels]]), GIF animations
+  * ([[decodeFrames]] — disposal-aware compositing), and PCM WAV audio
+  * ([[audioFeatures]]).
   * Only [[resize]] retains the legacy hash-in-place-of-bytes seam, kept
   * to pin the geometry contract independently of any codec.
   */
@@ -221,29 +222,28 @@ object Multimodal {
     StructField("out_h", IntegerType, nullable = true),
     StructField("out_hash", StringType, nullable = true)))
 
-  /** REAL pixel path (PNG): decode the payload with the pure-JVM
-    * [[graft.expressions.PngCodec]] (zlib IDAT + all five scanline
-    * filters), aspect-fit into `targetW`x`targetH` (same scale rule as
-    * [[resize]]), nearest-neighbor resample the raster, and hash the
-    * RESAMPLED PIXEL BYTES (md5 of their lowercase hex — the
-    * oracle-mirrorable bridge). Payloads that don't decode (JPEG —
-    * entropy decode is out of scope, documented — or corrupt bytes)
-    * yield null dims/hash. Partition-local `mapPartitions`, no shuffle:
-    * the exact shape a 100 TB image-corpus pass needs. */
+  /** REAL pixel path (PNG): decode the payload with
+    * [[graft.expressions.Media.decodePng]], aspect-fit into
+    * `targetW`x`targetH` (same scale rule as [[resize]]),
+    * nearest-neighbor resample the raster, and hash the RESAMPLED PIXEL
+    * BYTES (md5 of their lowercase hex — the oracle-mirrorable bridge).
+    * Payloads that don't decode as PNG (JPEG, corrupt bytes) yield null
+    * dims/hash. Partition-local `mapPartitions`, no shuffle: the exact
+    * shape a 100 TB image-corpus pass needs. */
   def resamplePixels(mm: DataFrame, targetW: Int, targetH: Int): DataFrame = {
     require(targetW > 0 && targetH > 0)
     mm.select(col("asset_id"), col("payload")).mapPartitions { it =>
       val md = java.security.MessageDigest.getInstance("MD5")
       it.map { r =>
         val id = r.getLong(0)
-        graft.expressions.PngCodec.decode(r.getAs[Array[Byte]](1)) match {
+        Media.decodePng(r.getAs[Array[Byte]](1)) match {
           case None => Row(id, null, null, null, null, null)
           case Some(ras) =>
             val scale = math.min(1.0,
               math.min(targetW.toDouble / ras.width, targetH.toDouble / ras.height))
             val ow = math.max(math.floor(ras.width * scale).toInt, 1)
             val oh = math.max(math.floor(ras.height * scale).toInt, 1)
-            val out = graft.expressions.PngCodec.resampleNearest(ras, ow, oh)
+            val out = Media.resampleNearest(ras, ow, oh)
             Row(id, Int.box(ras.width), Int.box(ras.height),
               Int.box(ow), Int.box(oh), hexMd5(out.pixels, md))
         }
@@ -252,12 +252,12 @@ object Multimodal {
   }
 
   /** Deterministic PIXEL-real image fixture: each doc becomes a genuine
-    * 8-bit grayscale PNG — compressed IDAT, filtered scanlines — whose
-    * pixel (x, y) is the FORMULA value `(id*31 + y*width + x) % 256` and
-    * whose dims are `(id % 13 + 4, id % 11 + 4)`. The engine must then
-    * recover pixels through real zlib inflation + defiltering, while the
-    * oracle recomputes the expected resampled bytes from the formula
-    * alone — a pixel-level round-trip check on the whole codec. */
+    * 8-bit grayscale PNG — compressed IDAT — whose pixel (x, y) is the
+    * FORMULA value `(id*31 + y*width + x) % 256` and whose dims are
+    * `(id % 13 + 4, id % 11 + 4)`. The engine must then recover pixels
+    * through a real PNG decode, while the oracle recomputes the expected
+    * resampled bytes from the formula alone — a pixel-level round-trip
+    * check on the whole codec. */
   def syntheticPixelAssets(docs: DataFrame): DataFrame = {
     val pxSchema = StructType(Seq(
       StructField("asset_id", LongType, nullable = false),
@@ -269,10 +269,7 @@ object Multimodal {
         val w = (id % 13 + 4).toInt
         val h = (id % 11 + 4).toInt
         val px = Array.tabulate(w * h)(i => ((id * 31 + i) % 256).toByte)
-        // filter type varies by id so the corpus exercises every
-        // defilter path, not just the trivial one
-        val png = graft.expressions.PngCodec.encode(
-          graft.expressions.PngCodec.Raster(w, h, 1, px), (id % 5).toInt)
+        val png = Media.encodePng(Media.Raster(w, h, 1, px))
         Row(id, "image/png", png)
       }
     }(org.apache.spark.sql.Encoders.row(pxSchema))
@@ -290,8 +287,8 @@ object Multimodal {
     StructField("duration_ms", LongType, nullable = true),
     StructField("sum_sq", LongType, nullable = true)))
 
-  /** REAL audio path (WAV/PCM): decode the payload with the pure-JVM
-    * [[graft.expressions.WavCodec]] and extract the feature row a
+  /** REAL audio path (WAV/PCM): decode the payload with
+    * [[graft.expressions.Media.decodeWav]] and extract the feature row a
     * speech-corpus curation pass filters on — sample rate, channel
     * count, frame count, floor-ms duration, exact sum of squared sample
     * values (the integer core of an RMS loudness gate). Non-WAV or
@@ -301,7 +298,7 @@ object Multimodal {
     mm.select(col("asset_id"), col("payload")).mapPartitions { it =>
       it.map { r =>
         val id = r.getLong(0)
-        graft.expressions.WavCodec.decode(r.getAs[Array[Byte]](1)) match {
+        Media.decodeWav(r.getAs[Array[Byte]](1)) match {
           case None => Row(id, null, null, null, null, null)
           case Some(c) =>
             val frames = c.samples.length.toLong / c.channels
@@ -327,8 +324,8 @@ object Multimodal {
     StructField("delay_cs", IntegerType, nullable = true),
     StructField("frame_hash", StringType, nullable = true)))
 
-  /** REAL video-path frame extraction (GIF): decode the payload with the
-    * pure-JVM [[graft.expressions.GifCodec]] (LZW inflate, palette
+  /** REAL video-path frame extraction (GIF): decode the payload with
+    * [[graft.expressions.Media.decodeGif]] (LZW inflate, palette
     * resolve, disposal-aware compositing), keep every `stride`-th frame,
     * and hash each kept frame's COMPOSITED RGB bytes (md5 of lowercase
     * hex — the oracle-mirrorable bridge, same convention as
@@ -344,7 +341,7 @@ object Multimodal {
       val md = java.security.MessageDigest.getInstance("MD5")
       it.flatMap { r =>
         val id = r.getLong(0)
-        graft.expressions.GifCodec.decode(r.getAs[Array[Byte]](1)) match {
+        Media.decodeGif(r.getAs[Array[Byte]](1)) match {
           case None => Iterator.single(Row(id, null, null, null, null, null, null))
           case Some(g) =>
             val n = g.frames.size
@@ -385,7 +382,7 @@ object Multimodal {
             Array.tabulate(w * h)(i => ((id * 17 + f * 53 + i) % 256).toByte))
         }
         Row(id, "image/gif",
-          graft.expressions.GifCodec.encode(w, h, grayPal, frames))
+          Media.encodeGif(w, h, grayPal, frames))
       }
     }(org.apache.spark.sql.Encoders.row(gifSchema))
   }
@@ -409,8 +406,7 @@ object Multimodal {
         val rate = (8000 + (id % 3) * 4000).toInt
         val samples = Array.tabulate(frames * channels)(i =>
           (((id * 7 + i.toLong * 13) % 65536) - 32768).toShort)
-        Row(id, "audio/wav", graft.expressions.WavCodec.encode(
-          graft.expressions.WavCodec.Clip(rate, channels, samples)))
+        Row(id, "audio/wav", Media.encodeWav(Media.Clip(rate, channels, samples)))
       }
     }(org.apache.spark.sql.Encoders.row(auSchema))
   }
@@ -461,9 +457,9 @@ object Multimodal {
     StructField("channels", IntegerType, nullable = true),
     StructField("pix_hash", StringType, nullable = true)))
 
-  /** REAL lossy-still path (JPEG): decode the payload with the pure-JVM
-    * [[graft.expressions.JpegCodec]] — marker parse, Huffman entropy
-    * decode, dequantize, IDCT, color convert — and hash the recovered
+  /** REAL lossy-still path (JPEG): decode the payload with
+    * [[graft.expressions.Media.decodeJpeg]] — entropy decode,
+    * dequantize, IDCT, color convert — and hash the recovered
     * raster bytes (md5 of lowercase hex, the same oracle-mirrorable
     * bridge as [[resamplePixels]] / [[decodeFrames]]; a 3-channel
     * raster contributes interleaved RGB bytes). Payloads that don't
@@ -473,7 +469,7 @@ object Multimodal {
       val md = java.security.MessageDigest.getInstance("MD5")
       it.map { r =>
         val id = r.getLong(0)
-        graft.expressions.JpegCodec.decode(r.getAs[Array[Byte]](1)) match {
+        Media.decodeJpeg(r.getAs[Array[Byte]](1)) match {
           case None => Row(id, null, null, null, null)
           case Some(ras) =>
             Row(id, Int.box(ras.width), Int.box(ras.height),
@@ -488,7 +484,7 @@ object Multimodal {
     * that nonetheless round-trips EXACTLY, because the image is an 8x8
     * block-constant mosaic encoded with the all-ones quant table (a
     * constant block is a lone integer DC coefficient; see
-    * [[graft.expressions.JpegCodec.encode]]). Dims are
+    * [[graft.expressions.Media.encodeJpeg]]). Dims are
     * `(id % 21 + 4, id % 17 + 4)` (NOT multiples of 8 — edge-replication
     * paths run), block (bx, by) holds gray value
     * `(id*29 + by*ceil(w/8) + bx) % 256`, odd ids encode as 3-component
@@ -521,8 +517,8 @@ object Multimodal {
           }
           y += 1
         }
-        val jpeg = graft.expressions.JpegCodec.encode(
-          graft.expressions.PngCodec.Raster(w, h, nc, px),
+        val jpeg = Media.encodeJpeg(
+          Media.Raster(w, h, nc, px),
           q = 0, restartInterval = (id % 3).toInt * 2)
         Row(id, "image/jpeg", jpeg)
       }
@@ -546,8 +542,8 @@ object Multimodal {
   /** Perceptual difference-hash (dHash) of an image payload — the
     * standard 64-bit near-duplicate sketch for image corpora (public
     * algorithm: Krawetz's dHash / pHash family): decode the REAL
-    * compressed stream (PNG via [[graft.expressions.PngCodec]], baseline
-    * JPEG via [[graft.expressions.JpegCodec]], routed by magic bytes),
+    * compressed stream (PNG via [[graft.expressions.Media.decodePng]],
+    * JPEG via [[graft.expressions.Media.decodeJpeg]], routed by magic bytes),
     * reduce to 8-bit grayscale (integer luma `(299r+587g+114b)/1000` for
     * 3-channel rasters — exact, mirrorable), nearest-neighbor resample
     * to a fixed 9x8 grid (same `x*w/ow` floor sampling as
@@ -565,12 +561,12 @@ object Multimodal {
       it.map { r =>
         val id = r.getLong(0)
         val payload = r.getAs[Array[Byte]](1)
-        val ras: Option[graft.expressions.PngCodec.Raster] =
+        val ras: Option[Media.Raster] =
           if (payload == null || payload.length < 8) None
           else if ((payload(0) & 0xFF) == 0x89 && payload(1) == 0x50)
-            graft.expressions.PngCodec.decode(payload)
+            Media.decodePng(payload)
           else if ((payload(0) & 0xFF) == 0xFF && (payload(1) & 0xFF) == 0xD8)
-            graft.expressions.JpegCodec.decode(payload)
+            Media.decodeJpeg(payload)
           else None
         ras match {
           case None => Row(id, null)
@@ -587,9 +583,9 @@ object Multimodal {
                     (img.pixels(b + 2) & 0xFF) * 114) / 1000).toByte
                   i += 1
                 }
-                graft.expressions.PngCodec.Raster(img.width, img.height, 1, g)
+                Media.Raster(img.width, img.height, 1, g)
               }
-            val grid = graft.expressions.PngCodec.resampleNearest(gray, 9, 8)
+            val grid = Media.resampleNearest(gray, 9, 8)
             var hash = 0L
             var y = 0
             while (y < 8) {
@@ -682,22 +678,20 @@ object Multimodal {
         val payload: Array[Byte] = (id % 5) match {
           case 0 =>
             val w = (id % 13 + 4).toInt; val h = (id % 11 + 4).toInt
-            graft.expressions.PngCodec.encode(
-              graft.expressions.PngCodec.Raster(w, h, 1,
-                Array.tabulate(w * h)(i => ((id * 31 + i) % 256).toByte)),
-              (id % 5).toInt)
+            Media.encodePng(Media.Raster(w, h, 1,
+              Array.tabulate(w * h)(i => ((id * 31 + i) % 256).toByte)))
           case 1 =>
             val w = (id % 9 + 3).toInt; val h = (id % 7 + 3).toInt
-            graft.expressions.GifCodec.encode(w, h, grayPal,
+            Media.encodeGif(w, h, grayPal,
               Seq((0, Array.tabulate(w * h)(i => ((id * 17 + i) % 256).toByte))))
           case 2 =>
-            graft.expressions.WavCodec.encode(graft.expressions.WavCodec.Clip(
+            Media.encodeWav(Media.Clip(
               8000, 1, Array.tabulate((id % 100 + 50).toInt)(i =>
                 (((id * 7 + i.toLong * 13) % 65536) - 32768).toShort)))
           case 3 =>
             val w = (id % 21 + 4).toInt; val h = (id % 17 + 4).toInt
-            graft.expressions.JpegCodec.encode(
-              graft.expressions.PngCodec.Raster(w, h, 1,
+            Media.encodeJpeg(
+              Media.Raster(w, h, 1,
                 Array.fill(w * h)((id % 256).toByte)), q = 0)
           case _ => r.getString(1).getBytes("UTF-8")
         }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
+import graft.expressions.CsvLineFields
+
 case class RecipeError(msg: String) extends RuntimeException(msg)
 
 /** Recipe input scan: glob expansion, per-file regex line filtering,
@@ -68,7 +70,7 @@ object CsvSource {
         val imposed = header.split(",").map(_.trim).toSeq
         if (first.replace(" ", "") == header.replace(" ", "")) (imposed, true)
         else {
-          val nFields = if (first.isEmpty) imposed.length else splitCsvLine(first).length
+          val nFields = if (first.isEmpty) imposed.length else CsvLineFields.tokens(first).length
           if (nFields != imposed.length)
             throw RecipeError(
               s"csv-header has ${imposed.length} columns but '$file' parsed $nFields")
@@ -76,34 +78,9 @@ object CsvSource {
         }
       case None =>
         if (first.isEmpty) throw RecipeError(s"'$file' has no data after filtering")
-        (splitCsvLine(first).map(_.trim), true)
+        (CsvLineFields.tokens(first).map(_.trim).toSeq, true)
     }
     FileInfo(file, names, hasHeaderRow, readMeta(file), len)
-  }
-
-  /** Split one CSV record into fields (RFC-4180 quoting) — driver-side
-    * header peek only. */
-  private[recipe] def splitCsvLine(line: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var inQ = false
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQ) {
-        if (c == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { sb.append('"'); i += 1 }
-          else inQ = false
-        } else sb.append(c)
-      } else c match {
-        case '"' => inQ = true
-        case ',' => out += sb.toString; sb.clear()
-        case _ => sb.append(c)
-      }
-      i += 1
-    }
-    out += sb.toString
-    out.toSeq
   }
 
   /** First post-filter line of `file`, read driver-side through the

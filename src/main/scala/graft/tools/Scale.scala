@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-import graft.expressions.{GifCodec, JpegCodec, PngCodec, WavCodec}
+import graft.expressions.Media
 import graft.obs.QueryJobs
 import graft.operators._
 import graft.recipe.{LineAction, LineFilter}
@@ -583,7 +583,7 @@ object Scale {
             val y = (x ^ (x >>> 31)) * 0xFF51AFD7ED558CCDL
             ((y >>> 33) & 0xFF).toByte
           }
-          val png = PngCodec.encode(PngCodec.Raster(w, h, 1, px))
+          val png = Media.encodePng(Media.Raster(w, h, 1, px))
           Seq(Row(id, png), Row(id + n, png)) // exact twin
         }
       }(Encoders.row(pxSchema)).persist(StorageLevel.MEMORY_AND_DISK)
@@ -993,7 +993,7 @@ object Scale {
       val bigPng = gen("image/png") { id =>
         val w = 640; val h = 480
         val px = Array.tabulate(w * h)(i => ((id * 31 + i) % 256).toByte)
-        PngCodec.encode(PngCodec.Raster(w, h, 1, px), (id % 5).toInt)
+        Media.encodePng(Media.Raster(w, h, 1, px))
       }
       decodeLeg(r, "pngResample", bigPng, "out_hash",
         col("width") * col("height"))(Multimodal.resamplePixels(_, 64, 48))
@@ -1004,7 +1004,7 @@ object Scale {
           val x = i % w; val y = i / w
           ((id * 29 + (y / 8) * bw + (x / 8)) % 256).toByte
         }
-        JpegCodec.encode(PngCodec.Raster(w, h, 1, px),
+        Media.encodeJpeg(Media.Raster(w, h, 1, px),
           q = 0, restartInterval = (id % 3).toInt * 2)
       }
       decodeLeg(r, "jpegPixels", bigJpeg, "pix_hash",
@@ -1015,14 +1015,14 @@ object Scale {
         val frames = (0 until 8).map { f =>
           (4, Array.tabulate(w * h)(i => ((id * 17 + f * 53 + i) % 256).toByte))
         }
-        GifCodec.encode(w, h, palette, frames)
+        Media.encodeGif(w, h, palette, frames)
       }
       decodeLeg(r, "gifFrames", bigGif, "frame_hash",
         col("width") * col("height") * lit(3))(Multimodal.decodeFrames(_, 2))
       val bigWav = gen("audio/wav") { id =>
         val n = 16000 * 5 * 2 // 5 s stereo @ 16 kHz, interleaved
         val samples = Array.tabulate(n)(i => ((id * 7 + i * 13) % 4096 - 2048).toShort)
-        WavCodec.encode(WavCodec.Clip(16000, 2, samples))
+        Media.encodeWav(Media.Clip(16000, 2, samples))
       }
       decodeLeg(r, "wavFeatures", bigWav, "sum_sq",
         col("n_samples") * col("channels") * lit(2))(Multimodal.audioFeatures(_))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.expressions.Media
+import graft.expressions.Media.{Clip, Raster}
 import graft.functions._
 
 /** Algebraic properties from SURVEY §5.3, checked over scalacheck-
@@ -256,7 +258,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("media codecs never throw on arbitrary bytes: None or a raster, " +
     "even for signature-prefixed garbage") {
-    import graft.expressions.{GifCodec, JpegCodec, PngCodec, WavCodec}
     val sigs = Seq(
       Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A),
       "GIF89a".getBytes("US-ASCII"),
@@ -270,8 +271,118 @@ class PropertySpec extends AnyFunSuite {
       // half the trials glue a REAL format signature onto the garbage so
       // the parsers get past the cheap magic check into the deep paths
       val bytes = if (sigIdx < sigs.size) sigs(sigIdx) ++ body else body
-      PngCodec.decode(bytes); GifCodec.decode(bytes)
-      JpegCodec.decode(bytes); WavCodec.decode(bytes) // must not throw
+      Media.decodePng(bytes); Media.decodeGif(bytes)
+      Media.decodeJpeg(bytes); Media.decodeWav(bytes) // must not throw
+    }
+  }
+
+  private def randomBytes(n: Int, seed: Long): Array[Byte] = {
+    val rnd = new scala.util.Random(seed)
+    Array.fill(n)(rnd.nextInt(256).toByte)
+  }
+
+  private val dims = Gen.zip(Gen.choose(1, 64), Gen.choose(1, 64))
+  private val seeds = Gen.choose(Long.MinValue, Long.MaxValue)
+
+  /** Gray-valued 8x8-block mosaic: the shape exact-mode JPEG preserves. */
+  private def mosaic(w: Int, h: Int, nc: Int, seed: Long): Raster = {
+    val bw = (w + 7) / 8
+    val blocks = randomBytes(bw * ((h + 7) / 8), seed)
+    Raster(w, h, nc, Array.tabulate(w * h * nc) { i =>
+      val p = i / nc
+      blocks((p / w / 8) * bw + p % w / 8)
+    })
+  }
+
+  test("PNG round-trips random gray / RGB / RGBA rasters, dims 1..64") {
+    for (((w, h), nc, seed) <- samples(Gen.zip(dims, Gen.oneOf(1, 3, 4), seeds), 40)) {
+      val r = Raster(w, h, nc, randomBytes(w * h * nc, seed))
+      val d = Media.decodePng(Media.encodePng(r))
+      assert(d.exists(d => (d.width, d.height, d.channels) == (w, h, nc) &&
+        d.pixels.sameElements(r.pixels)), s"${(w, h, nc)}")
+    }
+  }
+
+  test("exact-mode JPEG round-trips random block mosaics: gray / RGB, " +
+    "restart interval 0 / 2 / 4") {
+    val gen = Gen.zip(dims, Gen.oneOf(1, 3), Gen.oneOf(0, 2, 4), seeds)
+    for (((w, h), nc, ri, seed) <- samples(gen, 40)) {
+      val r = mosaic(w, h, nc, seed)
+      val d = Media.decodeJpeg(Media.encodeJpeg(r, q = 0, restartInterval = ri))
+      assert(d.exists(d => (d.width, d.height, d.channels) == (w, h, nc) &&
+        d.pixels.sameElements(r.pixels)), s"${(w, h, nc, ri)}")
+    }
+  }
+
+  test("gray-palette GIF animations round-trip frame by frame") {
+    val grayPal = Array.tabulate(768)(i => (i / 3).toByte)
+    val gen = Gen.zip(dims, Gen.choose(1, 4), Gen.choose(0, 500), seeds)
+    for (((w, h), nf, delay, seed) <- samples(gen, 30)) {
+      val frames = (0 until nf).map(f => (delay + f, randomBytes(w * h, seed + f)))
+      val g = Media.decodeGif(Media.encodeGif(w, h, grayPal, frames))
+      assert(g.exists(_.frames.size == nf), s"${(w, h, nf)}")
+      for (((delayCs, px), fr) <- frames.zip(g.get.frames)) {
+        assert(fr.delayCs == delayCs)
+        assert(fr.pixels.sameElements(px.flatMap(b => Seq(b, b, b))), s"${(w, h, nf)}")
+      }
+    }
+  }
+
+  test("mono / stereo WAV clips round-trip sample-exactly") {
+    val gen = Gen.zip(Gen.oneOf(1, 2), Gen.oneOf(8000, 16000, 22050, 44100, 48000),
+      Gen.choose(1, 2000), seeds)
+    for ((ch, rate, frames, seed) <- samples(gen, 30)) {
+      val rnd = new scala.util.Random(seed)
+      val c = Clip(rate, ch, Array.fill(frames * ch)(rnd.nextInt(65536).toShort))
+      val d = Media.decodeWav(Media.encodeWav(c))
+      assert(d.exists(d => d.sampleRate == rate && d.channels == ch &&
+        d.samples.sameElements(c.samples)), s"${(ch, rate, frames)}")
+    }
+  }
+
+  test("a JPEG cut anywhere decodes to None (the JDK reader only warns)") {
+    for (((w, h), nc, seed) <- samples(Gen.zip(dims, Gen.oneOf(1, 3), seeds), 20)) {
+      val jpeg = Media.encodeJpeg(mosaic(w, h, nc, seed), q = 0)
+      val cut = 1 + new scala.util.Random(seed).nextInt(jpeg.length - 1)
+      assert(Media.decodeJpeg(jpeg.take(cut)).isEmpty, s"${(w, h, nc)} cut at $cut")
+      assert(Media.decodeJpeg(jpeg.dropRight(1)).isEmpty, s"${(w, h, nc)} without EOI")
+    }
+  }
+
+  test("a WAV cut inside its data chunk decodes to None") {
+    for ((ch, frames, seed) <- samples(Gen.zip(Gen.oneOf(1, 2), Gen.choose(2, 500), seeds), 20)) {
+      val wav = Media.encodeWav(Clip(8000, ch, Array.fill(frames * ch)(7.toShort)))
+      val cut = 1 + new scala.util.Random(seed).nextInt(frames * ch * 2 - 1)
+      assert(Media.decodeWav(wav.dropRight(cut)).isEmpty, s"${(ch, frames)} minus $cut")
+    }
+  }
+
+  test("a progressive JPEG decodes to the pixels of the same image written " +
+    "baseline with the same tables") {
+    import java.awt.image.BufferedImage
+    import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+    def write(img: BufferedImage, progressive: Boolean): Array[Byte] = {
+      val wr = ImageIO.getImageWritersByFormatName("jpeg").next()
+      val par = wr.getDefaultWriteParam
+      par.setProgressiveMode(
+        if (progressive) ImageWriteParam.MODE_DEFAULT else ImageWriteParam.MODE_DISABLED)
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+      wr.setOutput(out)
+      wr.write(null, new IIOImage(img, null, null), par)
+      out.close(); wr.dispose()
+      bos.toByteArray
+    }
+    for (((w, h), nc, seed) <- samples(Gen.zip(dims, Gen.oneOf(1, 3), seeds), 20)) {
+      val img = new BufferedImage(w, h,
+        if (nc == 1) BufferedImage.TYPE_BYTE_GRAY else BufferedImage.TYPE_3BYTE_BGR)
+      img.getRaster.setDataElements(0, 0, w, h, randomBytes(w * h * nc, seed))
+      val prog = write(img, progressive = true)
+      assert(prog.sliding(2).exists(p => (p(0) & 0xFF) == 0xFF && (p(1) & 0xFF) == 0xC2),
+        "fixture is not progressive")
+      val (p, b) = (Media.decodeJpeg(prog), Media.decodeJpeg(write(img, progressive = false)))
+      assert(p.isDefined && b.isDefined, s"${(w, h, nc)}")
+      assert(p.get.pixels.sameElements(b.get.pixels), s"${(w, h, nc)}")
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.expressions.{JpegCodec, PngCodec}
+import graft.expressions.Media
 
 /** Perceptual image dHash: the 9x8 gradient-sign contract, brightness
   * invariance (the property that makes it a PERCEPTUAL hash), codec
@@ -17,7 +17,7 @@ class DHashSpec extends AnyFunSuite {
 
   private def pngOf(w: Int, h: Int, px: Array[Byte],
                     channels: Int = 1): Array[Byte] =
-    PngCodec.encode(PngCodec.Raster(w, h, channels, px))
+    Media.encodePng(Media.Raster(w, h, channels, px))
 
   private def hashOf(payloads: Seq[(Long, Array[Byte])]): Map[Long, Option[Long]] =
     Multimodal.imageDHash(payloads.toDF("asset_id", "payload"))
@@ -57,12 +57,12 @@ class DHashSpec extends AnyFunSuite {
     val h = hashOf(Seq(
       (1L, pngOf(11, 13, gray)),
       (2L, pngOf(11, 13, rgb, channels = 3)),
-      (3L, JpegCodec.encode(PngCodec.Raster(jw, jh, 1, jpx), q = 0)),
+      (3L, Media.encodeJpeg(Media.Raster(jw, jh, 1, jpx), q = 0)),
       (4L, "not an image".getBytes("UTF-8")),
       (5L, null)))
     assert(h(1L) == h(2L) && h(1L).nonEmpty,
       "integer luma of equal RGB must equal the gray value")
-    assert(h(3L).nonEmpty, "JPEG payload must route through JpegCodec")
+    assert(h(3L).nonEmpty, "JPEG payload must route through the JPEG decoder")
     assert(h(4L).isEmpty && h(5L).isEmpty)
   }
 

@@ -104,14 +104,14 @@ class DomainSniffSpec extends AnyFunSuite {
 
   test("sniffModality trusts bytes, never the declared type: real encoder " +
     "output sniffs right; truncated/alien payloads fall to octet-stream") {
-    val png = graft.expressions.PngCodec.encode(
-      graft.expressions.PngCodec.Raster(4, 3, 1, Array.fill(12)(7.toByte)), 0)
-    val gif = graft.expressions.GifCodec.encode(3, 2,
+    val png = graft.expressions.Media.encodePng(
+      graft.expressions.Media.Raster(4, 3, 1, Array.fill(12)(7.toByte)))
+    val gif = graft.expressions.Media.encodeGif(3, 2,
       Array.tabulate(768)(i => (i / 3).toByte), Seq((0, Array.fill(6)(1.toByte))))
-    val jpg = graft.expressions.JpegCodec.encode(
-      graft.expressions.PngCodec.Raster(8, 8, 1, Array.fill(64)(9.toByte)), 0)
-    val wav = graft.expressions.WavCodec.encode(
-      graft.expressions.WavCodec.Clip(8000, 1, Array.fill(10)(3.toShort)))
+    val jpg = graft.expressions.Media.encodeJpeg(
+      graft.expressions.Media.Raster(8, 8, 1, Array.fill(64)(9.toByte)), 0)
+    val wav = graft.expressions.Media.encodeWav(
+      graft.expressions.Media.Clip(8000, 1, Array.fill(10)(3.toShort)))
     val riffNotWave = "RIFF1234AVI LIST".getBytes("US-ASCII")
     val rows = Seq(
       (1L, png, "image/png"), (2L, gif, "image/gif"), (3L, jpg, "image/jpeg"),

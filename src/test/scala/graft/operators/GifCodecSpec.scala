@@ -4,26 +4,41 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.expressions.GifCodec
+import graft.expressions.Media
 
-/** The pure-JVM GIF codec: LZW round trips through real compressed
+/** GIF through [[Media]]: LZW round trips through real compressed
   * streams (including the KwKwK and dictionary-overflow edge paths),
-  * multi-frame compositing with disposal methods and transparency,
-  * rejection of structural damage, an independent-decoder cross-check
-  * against the JDK's own ImageIO GIF reader (lossless format — pixel
-  * equality is exact), and the frame-real multimodal pipeline over it. */
+  * multi-frame compositing with disposal methods and transparency on
+  * hand-built containers, rejection of structural damage (cut files,
+  * short LZW data, interlacing), the total-output cap, and the
+  * frame-real multimodal pipeline over it. */
 class GifCodecSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private val grayPal = Array.tabulate(768)(i => (i / 3).toByte)
+
+  /** A valid 8-bit-root LZW stream that spells `px` literally: CLEAR,
+    * one 9-bit code per index, EOI. Codes stay 9 bits wide while the
+    * decoder's table holds < 512 entries, i.e. for up to 253 indices. */
+  private def literalLzw(px: Array[Byte]): Array[Byte] = {
+    require(px.length <= 253)
+    val out = new java.io.ByteArrayOutputStream()
+    var buf = 0L; var cnt = 0
+    for (code <- 256 +: px.map(_ & 0xFF) :+ 257) {
+      buf |= code.toLong << cnt; cnt += 9
+      while (cnt >= 8) { out.write((buf & 0xFF).toInt); buf >>>= 8; cnt -= 8 }
+    }
+    if (cnt > 0) out.write((buf & 0xFF).toInt)
+    out.toByteArray
+  }
 
   private def frame(w: Int, h: Int, seed: Int): Array[Byte] =
     Array.tabulate(w * h)(i => ((seed * 31 + i * 7) % 256).toByte)
 
   test("encode -> decode round-trips frames bit-exactly (gray palette)") {
     val frames = (0 until 3).map(f => (f * 10, frame(11, 7, f)))
-    val gif = GifCodec.encode(11, 7, grayPal, frames)
-    val dec = GifCodec.decode(gif)
+    val gif = Media.encodeGif(11, 7, grayPal, frames)
+    val dec = Media.decodeGif(gif)
     assert(dec.isDefined)
     val g = dec.get
     assert((g.width, g.height, g.frames.size) == (11, 7, 3))
@@ -38,35 +53,13 @@ class GifCodecSpec extends AnyFunSuite {
     "dictionary overflow (> 4096 entries, CLEAR mid-stream)") {
     // repetitive: constant + short-period rows drive the KwKwK case
     val rep = Array.fill(64 * 64)(7.toByte)
-    val g1 = GifCodec.decode(GifCodec.encode(64, 64, grayPal, Seq((0, rep)))).get
+    val g1 = Media.decodeGif(Media.encodeGif(64, 64, grayPal, Seq((0, rep)))).get
     assert(g1.frames.head.pixels.sameElements(rep.flatMap(b => Seq(b, b, b))))
     // high-entropy: a multiplicative scramble overflows the 4096-entry
     // dictionary and forces the encoder's CLEAR/reset path
     val big = Array.tabulate(128 * 128)(i => ((i * 2654435761L >> 7) % 256).toByte)
-    val g2 = GifCodec.decode(GifCodec.encode(128, 128, grayPal, Seq((0, big)))).get
+    val g2 = Media.decodeGif(Media.encodeGif(128, 128, grayPal, Seq((0, big)))).get
     assert(g2.frames.head.pixels.sameElements(big.flatMap(b => Seq(b, b, b))))
-  }
-
-  test("ImageIO (independent JDK decoder) reads our encoder's output " +
-    "pixel-identically — both directions of the spec, not just self-consistency") {
-    val frames = (0 until 4).map(f => (5, frame(13, 9, f + 2)))
-    val gif = GifCodec.encode(13, 9, grayPal, frames)
-    val rd = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-    rd.setInput(javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(gif)))
-    val n = rd.getNumImages(true)
-    assert(n == 4)
-    for (f <- 0 until n) {
-      val img = rd.read(f)
-      assert((img.getWidth, img.getHeight) == (13, 9))
-      val want = frames(f)._2
-      for (y <- 0 until 9; x <- 0 until 13) {
-        val v = want(y * 13 + x) & 0xFF
-        val rgb = img.getRGB(x, y)
-        assert(((rgb >> 16) & 0xFF) == v && ((rgb >> 8) & 0xFF) == v &&
-          (rgb & 0xFF) == v, s"frame $f pixel ($x,$y)")
-      }
-    }
   }
 
   test("partial frames composite onto the canvas; transparency keeps " +
@@ -87,7 +80,7 @@ class GifCodecSpec extends AnyFunSuite {
       le16w(0); out.write(math.max(transparent, 0)); out.write(0)
       out.write(0x2C); le16w(left); le16w(top); le16w(w); le16w(h); out.write(0)
       out.write(8)
-      val lzw = GifCodec.lzwEncode(px, 8)
+      val lzw = literalLzw(px)
       var off = 0
       while (off < lzw.length) {
         val k = math.min(255, lzw.length - off)
@@ -102,7 +95,7 @@ class GifCodecSpec extends AnyFunSuite {
     imageBlock(0, 0, 1, 1, Array[Byte](123), disposal = 3, transparent = -1)
     imageBlock(3, 1, 1, 1, Array[Byte](77), disposal = 0, transparent = -1)
     out.write(0x3B)
-    val g = GifCodec.decode(out.toByteArray).get
+    val g = Media.decodeGif(out.toByteArray).get
     assert(g.frames.size == 4)
     def px(f: Int, x: Int, y: Int): Int = g.frames(f).pixels((y * 4 + x) * 3) & 0xFF
     def row(f: Int, y: Int): Seq[Int] = (0 until 4).map(px(f, _, y))
@@ -121,18 +114,35 @@ class GifCodecSpec extends AnyFunSuite {
   }
 
   test("decode rejects structural damage with None, never a throw") {
-    val good = GifCodec.encode(6, 4, grayPal, Seq((0, frame(6, 4, 1))))
-    assert(GifCodec.decode(good.take(40)).isEmpty) // cut mid-palette
-    assert(GifCodec.decode("GIF89a but not really".getBytes).isEmpty)
-    assert(GifCodec.decode(Array.emptyByteArray).isEmpty)
-    assert(GifCodec.decode(null).isEmpty)
+    val good = Media.encodeGif(6, 4, grayPal, Seq((0, frame(6, 4, 1))))
+    assert(Media.decodeGif(good.take(40)).isEmpty) // cut mid-palette
+    assert(Media.decodeGif("GIF89a but not really".getBytes).isEmpty)
+    assert(Media.decodeGif(Array.emptyByteArray).isEmpty)
+    assert(Media.decodeGif(null).isEmpty)
     val interlaced = good.clone()
-    // image descriptor flags byte: header 13 + palette 768 + GCE 8 +
-    // descriptor offset 9
-    interlaced(13 + 768 + 8 + 9) = 0x40.toByte
-    assert(GifCodec.decode(interlaced).isEmpty)
+    // image descriptor flags byte: 9 bytes into the first descriptor
+    // after the header (13) and the global palette (768)
+    interlaced(good.indexOf(0x2C.toByte, 13 + 768) + 9) = 0x40.toByte
+    assert(Media.decodeGif(interlaced).isEmpty)
     val truncatedLzw = java.util.Arrays.copyOf(good, good.length - 6)
-    assert(GifCodec.decode(truncatedLzw).isEmpty)
+    assert(Media.decodeGif(truncatedLzw).isEmpty)
+    // cut inside the LAST of two frames: the JDK reader would quietly
+    // return the first frame alone
+    val two = Media.encodeGif(6, 4, grayPal, Seq((0, frame(6, 4, 1)), (0, frame(6, 4, 2))))
+    for (cut <- 2 to 12)
+      assert(Media.decodeGif(java.util.Arrays.copyOf(two, two.length - cut)).isEmpty, s"cut $cut")
+    // structurally whole, but the LZW data stops two pixels short: the
+    // JDK reader would zero-fill the missing rows
+    def single(px: Array[Byte]): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      out.write(good, 0, 13 + 768)
+      out.write(Array[Byte](0x2C, 0, 0, 0, 0, 6, 0, 4, 0, 0, 8))
+      val lzw = literalLzw(px)
+      out.write(lzw.length); out.write(lzw); out.write(0); out.write(0x3B)
+      out.toByteArray
+    }
+    assert(Media.decodeGif(single(frame(6, 4, 1))).isDefined)
+    assert(Media.decodeGif(single(frame(6, 4, 1).take(22))).isEmpty)
   }
 
   test("total decoded output is bounded: a hostile GIF (big canvas x " +
@@ -150,12 +160,12 @@ class GifCodecSpec extends AnyFunSuite {
     for (_ <- 0 until 6) { // six 1x1 frames: sixth crosses the cap
       out.write(0x2C); le16w(0); le16w(0); le16w(1); le16w(1); out.write(0)
       out.write(8)
-      val lzw = GifCodec.lzwEncode(Array[Byte](42), 8)
+      val lzw = literalLzw(Array[Byte](42))
       out.write(lzw.length); out.write(lzw, 0, lzw.length); out.write(0)
     }
     out.write(0x3B)
     val hostile = out.toByteArray
-    assert(GifCodec.decode(hostile).isEmpty)
+    assert(Media.decodeGif(hostile).isEmpty)
     // the same container with 5 frames sits exactly at the cap: decodes
     val ok = java.util.Arrays.copyOf(hostile, hostile.length)
     // rebuild with 5 frames instead of truncating blindly
@@ -168,11 +178,11 @@ class GifCodecSpec extends AnyFunSuite {
     for (_ <- 0 until 5) {
       out5.write(0x2C); le16w5(0); le16w5(0); le16w5(1); le16w5(1); out5.write(0)
       out5.write(8)
-      val lzw = GifCodec.lzwEncode(Array[Byte](42), 8)
+      val lzw = literalLzw(Array[Byte](42))
       out5.write(lzw.length); out5.write(lzw, 0, lzw.length); out5.write(0)
     }
     out5.write(0x3B)
-    val dec5 = GifCodec.decode(out5.toByteArray)
+    val dec5 = Media.decodeGif(out5.toByteArray)
     assert(dec5.isDefined && dec5.get.frames.size == 5)
     assert(ok.length > out5.size()) // sanity: the hostile file was bigger
   }

@@ -4,17 +4,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.expressions.{JpegCodec, PngCodec}
-import PngCodec.Raster
+import graft.expressions.Media
+import graft.expressions.Media.Raster
 
-/** The pure-JVM baseline JPEG codec: the exact mode (all-ones quant over
-  * 8x8 block-constant mosaics) round-trips bit-exactly through REAL
-  * Huffman entropy coding; an independent-decoder cross-check against
-  * the JDK's ImageIO JPEG reader covers our encoder, and an
-  * independent-ENCODER cross-check (ImageIO-written lossy streams,
-  * including 4:2:0 chroma subsampling) covers our decoder; progressive
-  * and structural damage are rejected with None; and the pixel-real
-  * multimodal pipeline over the fixture corpus matches the formula. */
+/** JPEG through [[Media]]: the exact mode (all-ones quant over 8x8
+  * block-constant mosaics) round-trips bit-exactly through REAL Huffman
+  * entropy coding, restart intervals included; the lossy mode really
+  * quantizes; structural damage is rejected with None; and the
+  * pixel-real multimodal pipeline over the fixture corpus matches the
+  * formula. */
 class JpegCodecSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -41,8 +39,10 @@ class JpegCodecSpec extends AnyFunSuite {
     for ((w, h, nc, ri) <- Seq((24, 16, 1, 0), (21, 13, 1, 2), (8, 8, 3, 0),
                                (19, 10, 3, 3), (4, 4, 3, 1), (33, 7, 1, 4))) {
       val r = mosaic(w, h, nc, w * 7 + h * 3 + nc)
-      val jpeg = JpegCodec.encode(r, q = 0, restartInterval = ri)
-      val dec = JpegCodec.decode(jpeg)
+      val jpeg = Media.encodeJpeg(r, q = 0, restartInterval = ri)
+      assert(jpeg.sliding(2).exists(p => (p(0) & 0xFF) == 0xFF && (p(1) & 0xFF) == 0xDD) ==
+        (ri > 0), s"DRI marker presence for ${(w, h, nc, ri)}")
+      val dec = Media.decodeJpeg(jpeg)
       assert(dec.isDefined, s"decode failed for ${(w, h, nc, ri)}")
       val g = dec.get
       assert((g.width, g.height, g.channels) == (w, h, nc))
@@ -56,103 +56,41 @@ class JpegCodecSpec extends AnyFunSuite {
     // a 4:2:0 source; the scan layout is the same either way (MCU = one
     // data unit for Ns = 1), so the declared factors must be ignored
     val r = mosaic(24, 16, 1, 5)
-    val jpeg = JpegCodec.encode(r, q = 0)
+    val jpeg = Media.encodeJpeg(r, q = 0)
     val sof = jpeg.indexOfSlice(Array(0xFF.toByte, 0xC0.toByte))
     assert(sof > 0)
     assert(jpeg(sof + 11) == 0x11.toByte) // encoder writes 1x1
     val patched = jpeg.clone()
     patched(sof + 11) = 0x22.toByte
-    val dec = JpegCodec.decode(patched)
+    val dec = Media.decodeJpeg(patched)
     assert(dec.isDefined, "2x2-sampled single-component scan must decode")
     assert(dec.get.pixels.sameElements(r.pixels))
-  }
-
-  test("ImageIO (independent JDK decoder) reads the exact-mode output " +
-    "pixel-identically — a DC-only block is exact in any conformant IDCT") {
-    val r = mosaic(21, 13, 1, 9)
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(JpegCodec.encode(r, q = 0)))
-    assert(img != null && img.getWidth == 21 && img.getHeight == 13)
-    // read RAW samples: getRGB on a gray image applies the linear-gray ->
-    // sRGB colorspace transform and would corrupt the comparison
-    for (y <- 0 until 13; x <- 0 until 21) {
-      val v = r.pixels(y * 21 + x) & 0xFF
-      assert(img.getRaster.getSample(x, y, 0) == v, s"pixel ($x,$y)")
-    }
   }
 
   test("lossy mode is a REAL encoder: ImageIO decodes a q=8 gradient " +
     "close to the source (not exact, not garbage)") {
     val r = gradient(32, 24, 1)
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(JpegCodec.encode(r, q = 8)))
-    assert(img != null)
+    val dec = Media.decodeJpeg(Media.encodeJpeg(r, q = 8))
+    assert(dec.isDefined)
     var sumAbs = 0L
-    for (y <- 0 until 24; x <- 0 until 32) {
-      val d = math.abs(img.getRaster.getSample(x, y, 0) - (r.pixels(y * 32 + x) & 0xFF))
-      assert(d <= 32, s"pixel ($x,$y) off by $d") // ringing at the wrap edges
+    for (i <- 0 until 32 * 24) {
+      val d = math.abs((dec.get.pixels(i) & 0xFF) - (r.pixels(i) & 0xFF))
+      assert(d <= 32, s"pixel $i off by $d")
       sumAbs += d
     }
     assert(sumAbs.toDouble / (32 * 24) <= 6.0, s"mean err ${sumAbs / 768.0}")
+    assert(!dec.get.pixels.sameElements(r.pixels), "q=8 must actually quantize")
   }
 
-  test("our decoder reads ImageIO-written lossy JPEGs (gray 4:4:4 and " +
-    "RGB 4:2:0) within tolerance of ImageIO's own decode of the same bytes") {
-    for (nc <- Seq(1, 3)) {
-      val r = gradient(40, 26, nc)
-      val imgType = if (nc == 1) java.awt.image.BufferedImage.TYPE_BYTE_GRAY
-                    else java.awt.image.BufferedImage.TYPE_3BYTE_BGR
-      val bi = new java.awt.image.BufferedImage(40, 26, imgType)
-      // write RAW samples: setRGB on a gray image would apply the
-      // sRGB -> linear-gray colorspace transform and skew the source
-      for (y <- 0 until 26; x <- 0 until 40; c <- 0 until nc)
-        bi.getRaster.setSample(x, y, c, r.pixels((y * 40 + x) * nc + c) & 0xFF)
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(bi, "jpg", bos))
-      val bytes = bos.toByteArray
-      val ours = JpegCodec.decode(bytes)
-      assert(ours.isDefined, s"decode failed, nc=$nc")
-      val g = ours.get
-      assert((g.width, g.height) == (40, 26))
-      val ref = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      var sumAbs = 0L; var n = 0
-      for (y <- 0 until 26; x <- 0 until 40) {
-        val rgb = ref.getRGB(x, y)
-        for (c <- 0 until g.channels) {
-          // gray ref must be read as a RAW sample (getRGB gamma-converts
-          // gray); RGB ref decodes straight to sRGB, getRGB is faithful
-          val rv = if (nc == 1) ref.getRaster.getSample(x, y, 0)
-                   else (rgb >> (16 - 8 * c)) & 0xFF
-          val d = math.abs((g.pixels((y * 40 + x) * g.channels + c) & 0xFF) - rv)
-          assert(d <= 12, s"nc=$nc pixel ($x,$y) ch $c off by $d")
-          sumAbs += d; n += 1
-        }
-      }
-      assert(sumAbs.toDouble / n <= 2.5, s"nc=$nc mean err ${sumAbs.toDouble / n}")
-    }
-  }
-
-  test("progressive, truncated, and garbage streams decode to None, never a throw") {
-    // ImageIO writes a REAL progressive (SOF2) stream when asked
-    val bi = new java.awt.image.BufferedImage(
-      16, 16, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-    val par = wr.getDefaultWriteParam
-    par.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-    val bos = new java.io.ByteArrayOutputStream()
-    wr.setOutput(javax.imageio.ImageIO.createImageOutputStream(bos))
-    wr.write(null, new javax.imageio.IIOImage(bi, null, null), par)
-    wr.dispose()
-    val prog = bos.toByteArray
-    assert(prog.sliding(2).exists(p => (p(0) & 0xFF) == 0xFF && (p(1) & 0xFF) == 0xC2),
-      "fixture is not progressive")
-    assert(JpegCodec.decode(prog).isEmpty)
-    val good = JpegCodec.encode(mosaic(16, 8, 1, 3), q = 0)
-    assert(JpegCodec.decode(java.util.Arrays.copyOf(good, good.length - 4)).isEmpty)
-    assert(JpegCodec.decode(good.take(30)).isEmpty)
-    assert(JpegCodec.decode("not a jpeg at all, sorry".getBytes).isEmpty)
-    assert(JpegCodec.decode(Array.emptyByteArray).isEmpty)
-    assert(JpegCodec.decode(null).isEmpty)
+  test("truncated and garbage streams decode to None, never a throw") {
+    val good = Media.encodeJpeg(mosaic(16, 8, 1, 3), q = 0)
+    // the JDK reader returns a cut stream as an image plus warnings
+    assert(Media.decodeJpeg(java.util.Arrays.copyOf(good, good.length - 4)).isEmpty)
+    assert(Media.decodeJpeg(good.take(good.length / 2)).isEmpty)
+    assert(Media.decodeJpeg(good.take(30)).isEmpty)
+    assert(Media.decodeJpeg("not a jpeg at all, sorry".getBytes).isEmpty)
+    assert(Media.decodeJpeg(Array.emptyByteArray).isEmpty)
+    assert(Media.decodeJpeg(null).isEmpty)
   }
 
   test("the pixel pipeline decodes what the fixture builder encoded — " +

@@ -7,7 +7,8 @@ import graft.TestSpark
 
 /** Scale-path indices for simhash / sign-LSH near-dup:
   *  - Manku block-combination tables must return EXACTLY the all-pairs
-  *    Hamming<=h set (the pigeonhole guarantee the scaladoc proves);
+  *    Hamming<=h set (the pigeonhole guarantee the scaladoc proves), and
+  *    the band index is the one-block-per-table case of them;
   *  - the self-tuning band width must reproduce the pinned config at
   *    small corpus sizes and grow logarithmically after. */
 class MankuSpec extends AnyFunSuite {
@@ -50,6 +51,15 @@ class MankuSpec extends AnyFunSuite {
       .select("id_a", "id_b")
     assert(viaIndex.exceptAll(allPairs).isEmpty)
     assert(allPairs.exceptAll(viaIndex).isEmpty)
+  }
+
+  test("band index (4 bands, h<=3) == Manku tables of one block each (4/1)") {
+    val band = Dedup.simhashBandPairs(docs, "doc_id", "text",
+      bands = 4, maxHamming = 3, bits = 32)
+    val manku = Dedup.simhashMankuPairs(docs, "doc_id", "text",
+      blocks = 4, keyBlocks = 1, maxHamming = 3, bits = 32)
+    assert(!band.isEmpty, "the test corpus must hold near-dup pairs")
+    assert(band.exceptAll(manku).isEmpty && manku.exceptAll(band).isEmpty)
   }
 
   test("lshBandBitsFor: pinned width at test scale, log growth at cluster scale") {

@@ -4,12 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.expressions.WavCodec
-import graft.expressions.WavCodec.Clip
+import graft.expressions.Media
+import graft.expressions.Media.Clip
 
-/** The pure-JVM WAV/PCM codec: byte-exact round trips, spec-compliant
+/** WAV/PCM through [[Media]]: byte-exact round trips, spec-compliant
   * chunk walking (unknown chunks skipped, word alignment), rejection of
-  * non-PCM payloads, and the sample-real audio feature pipeline. */
+  * non-PCM and short payloads, and the sample-real audio feature
+  * pipeline. */
 class WavCodecSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -19,7 +20,7 @@ class WavCodecSpec extends AnyFunSuite {
   test("encode -> decode round-trips samples bit-exactly, mono and stereo") {
     for (ch <- Seq(1, 2); rate <- Seq(8000, 44100)) {
       val c = clip(137, ch, rate, ch + rate)
-      val d = WavCodec.decode(WavCodec.encode(c))
+      val d = Media.decodeWav(Media.encodeWav(c))
       assert(d.isDefined)
       assert(d.get.sampleRate == rate && d.get.channels == ch)
       assert(d.get.samples.sameElements(c.samples))
@@ -29,7 +30,7 @@ class WavCodecSpec extends AnyFunSuite {
   test("unknown chunks between fmt and data are skipped, including " +
     "odd-sized ones (word alignment)") {
     val c = clip(25, 1, 8000, 3)
-    val plain = WavCodec.encode(c)
+    val plain = Media.encodeWav(c)
     // splice a LIST chunk with an ODD payload size (pad byte required)
     val listPayload = "INFOx".getBytes // 5 bytes, odd
     val ins = new java.io.ByteArrayOutputStream()
@@ -38,20 +39,21 @@ class WavCodecSpec extends AnyFunSuite {
     ins.write(Array[Byte](5, 0, 0, 0))
     ins.write(listPayload); ins.write(0) // pad to word boundary
     ins.write(plain, 12, plain.length - 12)
-    val d = WavCodec.decode(ins.toByteArray)
+    val d = Media.decodeWav(ins.toByteArray)
     assert(d.isDefined && d.get.samples.sameElements(c.samples))
   }
 
   test("non-PCM, truncated and junk payloads decode to None") {
-    val good = WavCodec.encode(clip(40, 1, 8000, 1))
-    assert(WavCodec.decode(good.take(30)).isEmpty)
-    assert(WavCodec.decode("RIFFnonsense".getBytes).isEmpty)
-    assert(WavCodec.decode(null).isEmpty)
-    assert(WavCodec.decode(Array.emptyByteArray).isEmpty)
+    val good = Media.encodeWav(clip(40, 1, 8000, 1))
+    assert(Media.decodeWav(good.take(30)).isEmpty)
+    assert(Media.decodeWav(good.take(good.length - 10)).isEmpty) // cut mid-data
+    assert(Media.decodeWav("RIFFnonsense".getBytes).isEmpty)
+    assert(Media.decodeWav(null).isEmpty)
+    assert(Media.decodeWav(Array.emptyByteArray).isEmpty)
     val floatFmt = good.clone(); floatFmt(20) = 3 // format tag 3 = IEEE float
-    assert(WavCodec.decode(floatFmt).isEmpty)
+    assert(Media.decodeWav(floatFmt).isEmpty)
     val bits8 = good.clone(); bits8(34) = 8
-    assert(WavCodec.decode(bits8).isEmpty)
+    assert(Media.decodeWav(bits8).isEmpty)
   }
 
   test("audio feature pipeline recovers the fixture formula through " +

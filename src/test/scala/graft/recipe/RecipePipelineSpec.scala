@@ -142,6 +142,24 @@ class RecipePipelineSpec extends AnyFunSuite {
     assert(m == Map("numpy" -> 2.5, "numba" -> 1.25))
   }
 
+  test("csv-header field count uses the scan's own CSV rule (backslash-escaped quote)") {
+    // `"num\"py",100,2.5` is 3 fields to the scan (escape `\`) but 1 to an
+    // RFC-4180-only split, which would fail the csv-header count check
+    val dir = tmpDir()
+    write(dir, "raw.csv", "\"num\\\"py\",100,2.5\nnumba,100,1.25\n")
+    val recipe =
+      s"""input:
+         |  path: "${dir}/raw.csv"
+         |  csv-header: "impl, size, time"
+         |aggregation: min
+         |values: [time]
+         |series: [impl]
+         |""".stripMargin
+    val out = Benchmark.fromString(spark, recipe).getAggregatedData()
+    val m = out.collect().map(r => r.getAs[Any]("impl").toString -> r.getAs[Double]("time")).toMap
+    assert(m == Map("num\"py" -> 2.5, "numba" -> 1.25))
+  }
+
   test("regex line filter extracts fields from log lines") {
     val dir = tmpDir()
     write(dir, "bench.log",
