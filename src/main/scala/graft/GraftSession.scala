@@ -24,7 +24,9 @@ object GraftSession {
       // let AQE pick the output partitioning INSIDE cached plans too:
       // recipe child frames are cached post-shuffle, and without this a
       // tiny pivoted child pins 32 near-empty partitions that every
-      // later pass over the cache pays for as scheduled tasks
+      // later pass over the cache pays for as scheduled tasks. Only
+      // recipe DAGs above the recipe size rule see it: smaller ones plan
+      // in one partition without AQE (graft.recipe.Benchmark scaladoc)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // pandas column resolution is case-sensitive: the reference corpus

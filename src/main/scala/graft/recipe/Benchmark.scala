@@ -16,6 +16,21 @@ import graft.recipe.ExprCompiler.RatioCall
   *
   * Three-level API mirrors the reference seam (aggregate.py:134, 316,
   * 588): [[getRawData]] -> [[getNormalizedData]] -> [[getAggregatedData]].
+  *
+  * Layout. The eager steps (type inference, `ratio_of` bases, pivot
+  * keys) each collect a tiny aggregate. Under adaptive execution (AQE)
+  * every such collect runs its shuffle-map stage as a job of its own, and
+  * every cached input becomes a query stage: q46's 11-recipe DAG ran
+  * about 190 jobs over 0.6 MB of logs. So the first evaluation of a root
+  * recipe decides ONE layout for its whole DAG ([[Benchmark.Dag]]): when
+  * every recipe in the tree scans as one partition by the scan's own
+  * partition rule (`CsvSource.scansAsOnePartition`), the DAG is planned
+  * in a clone of the caller's session with AQE off, and its frames are
+  * kept in one partition — so every eager probe and the final aggregate
+  * plan no exchange (q46: 47 jobs). The caller's session keeps AQE.
+  * Larger trees keep the distributed layout: their shuffle-bound steps
+  * depend on AQE's partition coalescing, and one partition would
+  * serialize the CPU-bound parse of a multi-MB raw recipe.
   */
 class Benchmark(val recipe: Recipe, spark: SparkSession,
                 sharedChildren: scala.collection.mutable.Map[String, scala.concurrent.Future[(DataFrame, Map[String, Boolean])]] =
@@ -47,6 +62,23 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     * bare col() would parse as struct access. */
   private def qcol(c: String): Column = col(s"`$c`")
 
+  /** The DAG's layout: decided by this recipe's first evaluation when it
+    * is a root, handed down by the parent when it is a child. */
+  @volatile private var dag: Benchmark.Dag = _
+
+  private def dagFor(df0: Option[DataFrame], inputs: Option[Seq[String]]): Benchmark.Dag =
+    synchronized {
+      if (dag == null) dag = new Benchmark.Dag(spark, recipe, df0, inputs)
+      dag
+    }
+
+  /** Whether this recipe's DAG evaluated in the one-partition layout
+    * (false before its first evaluation). */
+  private[graft] def onePartition: Boolean = dag != null && dag.single
+
+  /** `df` in the DAG's layout: one partition when the DAG is small. */
+  private def laid(df: DataFrame): DataFrame = if (dag.single) df.coalesce(1) else df
+
   /** Frames this benchmark pinned in the cache (raw file scans, child
     * frames, checked aggregates); released by [[unpersist]]. */
   private val persistedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -64,26 +96,31 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     *    and re-normalizing per parent;
     *  - independent subtrees evaluate CONCURRENTLY: a recipe
     *    normalization issues several small eager driver jobs (type
-    *    inference, ratio-base collects, cache fills), and running
-    *    sibling subtrees' jobs in parallel collapses DAG wall time the
+    *    inference, ratio-base collects, pivot-key probes). In the
+    *    one-partition layout each of them is a one-task job, so running
+    *    sibling subtrees' jobs in parallel is what spreads the DAG over
+    *    the cores; in the distributed layout it collapses wall time the
     *    same way concurrent Spark jobs share a cluster. `blocking`
     *    marks the recursive awaits so the pool grows past nested DAG
     *    levels instead of deadlocking.
+    *
+    * Every child evaluates in this recipe's DAG layout, session included.
     */
   lazy val childEvals: Seq[(DataFrame, Map[String, Boolean])] = {
     import scala.concurrent.{blocking, Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    val d = dagFor(None, None)
     val futures = recipe.input.configs.map { cfgPath =>
-      val resolved = if (new java.io.File(cfgPath).isAbsolute) cfgPath
-        else new java.io.File(recipe.baseDir, cfgPath).getPath
+      val resolved = Benchmark.resolve(recipe, cfgPath)
       val canonical = new java.io.File(resolved).getCanonicalPath
       sharedChildren.synchronized {
         sharedChildren.getOrElseUpdate(canonical, Future {
-          val child = new Benchmark(Recipe.load(resolved), spark, sharedChildren)
+          val child = new Benchmark(d.recipe(resolved), d.session, sharedChildren)
+          child.dag = d
           childBenches.synchronized { childBenches += child }
           val name = new java.io.File(resolved).getName.replaceAll("\\.[^.]*$", "")
-          val f = child.getNormalizedData().withColumn("File", lit(name)).cache()
+          val f = laid(child.getNormalizedData().withColumn("File", lit(name))).cache()
           persistedFrames.synchronized { persistedFrames += f }
           // File was just overwritten with a constant literal: its
           // to_numeric outcome is known without a scan. Almost always
@@ -119,7 +156,9 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     * every stage outright (eager pandas, aggregate.py:316-585). Child
     * frames are cached separately ([[childFrames]]), so nothing is pinned
     * twice. Spill-safe at scale (disk overflow), released by
-    * [[unpersist]].
+    * [[unpersist]]. In the one-partition layout the scan, the pinned
+    * parse and the union with the children are each one partition, so
+    * the first pass fills the pin inside its own job.
     *
     * The pin is conditional on the recipe actually re-reading the scan:
     * the CSV parse is all-string, so the P5 inference pass runs (one
@@ -129,10 +168,13 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     * recipe (no values/axis/filters/reshapes/precomputes) reads the
     * parse exactly once, and then the cache write is pure overhead. */
   def getRawData(inputs: Option[Seq[String]] = None): DataFrame = {
-    val fileFrames = CsvSource.scanFiles(spark, recipe, inputs)
+    val d = dagFor(None, inputs)
+    val patterns = inputs.getOrElse(recipe.input.paths)
+    val fileFrames = CsvSource.scanFiles(d.session, recipe, patterns,
+      d.listing(patterns, recipe.baseDir), onePartition = d.single)
     val multiPass = relevantCols.nonEmpty || recipe.precomputed.nonEmpty
     val filePart = if (fileFrames.isEmpty) Nil else {
-      val u = unionPandas(fileFrames)
+      val u = laid(unionPandas(fileFrames))
       val p = if (multiPass) {
         val c = u.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         persistedFrames += c
@@ -143,7 +185,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     val all = childFrames ++ filePart
     if (all.isEmpty)
       throw RecipeError("recipe has no inputs (no path matches, no child configs)")
-    unionPandas(all)
+    laid(unionPandas(all))
   }
 
   /** Union-by-name with pandas-concat dtype parity: a column appearing
@@ -184,6 +226,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
 
   def getNormalizedData(df0: Option[DataFrame] = None,
                         inputs: Option[Seq[String]] = None): DataFrame = {
+    val session = dagFor(df0, inputs).session
     var df = df0.getOrElse(getRawData(inputs))
 
     // rename (P1) — one projection for the whole rename map
@@ -238,7 +281,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     // precomputed columns (P2/P3/A4/A5, J2/J3)
     for ((colName, exprStr) <- recipe.precomputed) {
       val ast = ExprCompiler.resolveSideInputs(
-        ExprCompiler.parse(exprStr), spark, recipe.baseDir)
+        ExprCompiler.parse(exprStr), session, recipe.baseDir)
       val ratios = ExprCompiler.ratioCalls(ast)
       var bindings = Map.empty[RatioCall, Column]
       var tempCols = Seq.empty[String]
@@ -279,7 +322,9 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
         df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
       val valueType = if (packedNumeric) "double" else "string"
       val cast = df.withColumns(pc.columns.map(c => c -> q(c).cast(valueType)).toMap)
-      df = cast.unpivot(ids.map(q), pc.columns.map(q).toArray, pc.name, pc.value)
+      // unpivot's Expand reports no partitioning: re-lay it out, or the
+      // next aggregate plans an exchange above one partition
+      df = laid(cast.unpivot(ids.map(q), pc.columns.map(q).toArray, pc.name, pc.value))
     }
 
     // unpack / pivot (R2). Null pivot keys become a 'NaN' column (the
@@ -431,7 +476,9 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
 
   /** ratio_of family (A4/A5): aggregate base and per-series groups by
     * axis+variants, divide, join back per-row on series+axis+variants
-    * (J2). The base side is always small (post-aggregation) -> broadcast.
+    * (J2). The base side is always small (post-aggregation) -> broadcast;
+    * in the one-partition layout both sides are one partition and join
+    * in place (a broadcast would be an exchange and a job of its own).
     * Reference: aggregate.py:354-476. */
   private def joinRatio(df: DataFrame, rc: RatioCall, outCol: String): DataFrame = {
     val f = aggExpr(recipe.aggregation, qcol(rc.column).cast(DoubleType))
@@ -460,11 +507,14 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     if (baseMissing)
       throw RecipeError(s"Trying to use series value ${series.map(kwMap)} in ratio_of " +
         "operation, but that value/combination doesn't exist in the dataframe!")
-    val base = spark.createDataFrame(
-      java.util.Arrays.asList(baseCollected: _*), baseSel.schema)
+    // a local relation reports no partitioning: lay it out too
+    val base = laid(dag.session.createDataFrame(
+      java.util.Arrays.asList(baseCollected: _*), baseSel.schema))
+    val (hint, crossHint) =
+      if (dag.single) ("shuffle_hash", "shuffle_replicate_nl") else ("broadcast", "broadcast")
     val joined =
-      if (av.isEmpty) grp.crossJoin(broadcast(base))
-      else grp.join(broadcast(base), av)
+      if (av.isEmpty) grp.crossJoin(base.hint(crossHint))
+      else grp.join(base.hint(hint), av)
     val ratio0 = if (rc.invert) col("__base") / col("__grp") else col("__grp") / col("__base")
     val ratio = rc.func match {
       case "ratio_of" | "ratio_of_inv" => ratio0
@@ -473,14 +523,15 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
       case "percent_diff" | "percent_diff_inv" => (ratio0 - 1) * 100
       case other => throw RecipeError(s"unknown ratio function $other")
     }
-    val ratios = joined.select((series ++ av).map(qcol) :+ ratio.as(outCol): _*)
-    df.join(broadcast(ratios), series ++ av, "left")
+    val ratios = laid(joined.select((series ++ av).map(qcol) :+ ratio.as(outCol): _*))
+    df.join(ratios.hint(hint), series ++ av, "left")
   }
 
   // ---------------- aggregate ----------------
 
   def getAggregatedData(df0: Option[DataFrame] = None,
                         inputs: Option[Seq[String]] = None): DataFrame = {
+    val session = dagFor(df0, inputs).session
     val df = df0.map(d => getNormalizedData(Some(d))).getOrElse(getNormalizedData(None, inputs))
 
     val series = recipe.series
@@ -540,7 +591,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
               org.apache.spark.sql.types.StructField(c, agg.schema(c).dataType)))
           val rows = missingCombos
             .map { case (avc, e) => org.apache.spark.sql.Row.fromSeq(avc ++ e) }.asJava
-          val missingDf = spark.createDataFrame(rows, schema)
+          val missingDf = session.createDataFrame(rows, schema)
           aggregated = agg.unionByName(missingDf, allowMissingColumns = true)
         }
 
@@ -576,6 +627,63 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
 }
 
 object Benchmark {
+  /** A child config's path, relative to its parent recipe's directory. */
+  private def resolve(parent: Recipe, cfgPath: String): String =
+    if (new java.io.File(cfgPath).isAbsolute) cfgPath
+    else new java.io.File(parent.baseDir, cfgPath).getPath
+
+  /** What one root evaluation decides once and shares with every recipe
+    * of its DAG: whether its frames are laid out in one partition, the
+    * session it is planned in, and the recipe loads and glob listings the
+    * decision read (the scans reuse them: nothing is loaded or listed
+    * twice). `df0` is an outside frame fed to the root, if any. */
+  private[recipe] final class Dag(caller: SparkSession, root: Recipe,
+                                  df0: Option[DataFrame], inputs: Option[Seq[String]]) {
+    private val listings =
+      new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), Seq[(String, Long)]]
+    private val recipes = new java.util.concurrent.ConcurrentHashMap[String, Recipe]
+
+    def listing(patterns: Seq[String], baseDir: String): Seq[(String, Long)] =
+      listings.computeIfAbsent((baseDir, patterns),
+        _ => CsvSource.expandGlobStatuses(caller, patterns, baseDir))
+
+    def recipe(path: String): Recipe =
+      recipes.computeIfAbsent(new java.io.File(path).getCanonicalPath, _ => Recipe.load(path))
+
+    /** One partition when no outside frame feeds the root and every
+      * recipe of the tree scans as one partition
+      * ([[CsvSource.scansAsOnePartition]]) over the files it lists. */
+    val single: Boolean = df0.isEmpty && {
+      val cores = caller.sparkContext.defaultParallelism.toLong
+      val seen = scala.collection.mutable.Set.empty[String]
+      def small(r: Recipe, patterns: Seq[String]): Boolean =
+        CsvSource.scansAsOnePartition(
+          CsvSource.dataFiles(listing(patterns, r.baseDir)).map(_._2).sum, cores) &&
+          r.input.configs.forall { c =>
+            val path = resolve(r, c)
+            !seen.add(new java.io.File(path).getCanonicalPath) || {
+              val child = recipe(path)
+              small(child, child.input.paths)
+            }
+          }
+      small(root, inputs.getOrElse(root.input.paths))
+    }
+
+    /** The caller's session, or in the one-partition layout a clone of
+      * it planned without AQE (the caller's own session keeps AQE). The
+      * clone also lets a join of one-partition sides stay in place at
+      * any size estimate: the planner re-shuffles them above
+      * `maxSinglePartitionBytes` (128 MB), and the estimates of the ratio
+      * joins multiply past that although the rule above measured the
+      * real input in bytes. */
+    val session: SparkSession = if (!single) caller else {
+      val s = org.apache.spark.sql.GraftCloneSession(caller)
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      s.conf.set("spark.sql.maxSinglePartitionBytes", Long.MaxValue.toString)
+      s
+    }
+  }
+
   def apply(spark: SparkSession, recipePath: String): Benchmark =
     new Benchmark(Recipe.load(recipePath), spark)
 

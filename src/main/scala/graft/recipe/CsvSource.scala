@@ -122,11 +122,33 @@ object CsvSource {
     }
   }
 
+  /** Size-derived partition targets of one scan over `bytes` of input
+    * on `cores` cores, as [[readGroup]] lays out a line-filtered group:
+    * `(parse, lines)`.
+    *  - parse: bytes / 2 MB. The one-time regex + CSV parse is CPU-bound
+    *    at ~1 s per 2 MB task; an IO-oriented 128 MB target would
+    *    single-thread it (measured: +3 s on the sklearn group).
+    *  - lines: bytes / 1 MB, at most 4 waves of the cluster: the
+    *    repartition target of a few large unsplittable files.
+    *
+    * Both are 1 exactly when the input is too small to split at all; the
+    * recipe DAG's layout rule ([[scansAsOnePartition]]) reads that. */
+  private[recipe] def partitionTargets(bytes: Long, cores: Long): (Long, Long) = (
+    math.max(1L, bytes / (2L << 20) + 1),
+    math.min(math.max(1L, bytes / (1L << 20) + 1), cores * 4))
+
+  /** Whether a scan over `bytes` of input has one partition as its every
+    * size-derived target ([[partitionTargets]]). */
+  private[recipe] def scansAsOnePartition(bytes: Long, cores: Long): Boolean =
+    partitionTargets(bytes, cores) == ((1L, 1L))
+
   /** One relation for a group of same-schema files: a single multi-file
     * scan plus a broadcast side-table join carrying the per-file
-    * constants (Path/File/Directory provenance + `.meta` values). */
-  private def readGroup(spark: SparkSession, recipe: Recipe,
-                        colNames: Seq[String], files: Seq[FileInfo]): DataFrame = {
+    * constants (Path/File/Directory provenance + `.meta` values). With
+    * `onePartition`, scan and side table are one partition each and
+    * join in place: a broadcast would cost a job of its own. */
+  private def readGroup(spark: SparkSession, recipe: Recipe, colNames: Seq[String],
+                        files: Seq[FileInfo], onePartition: Boolean): DataFrame = {
     import spark.implicits._
     val schema = StructType(colNames.map(StructField(_, StringType)))
     val paths = files.map(_.path)
@@ -156,21 +178,19 @@ object CsvSource {
         // wholetext gives ONE partition per file; a 500-small-log glob
         // would otherwise drag 500 near-empty tasks through every later
         // pass over the (persisted) parse. Coalesce to a size-derived
-        // count (2 MB CPU-bound parse targets — see below) — no shuffle,
+        // count (2 MB CPU-bound parse targets, [[partitionTargets]]) — no shuffle,
         // and at 100 TB the same formula yields thousands of partitions.
         // Lengths come from the glob listing (FileInfo.len), not a
         // second per-file stat pass.
         val totalBytes = files.map(_.len).sum
-        // Partition count = bytes/2MB, capped at the file count:
-        // wholetext cannot split a file, so more partitions than files is
-        // meaningless; fewer than bytes/2MB serializes the one-time
-        // regex+from_csv parse, which is CPU-bound at ~1s per 2MB task —
-        // an IO-oriented 128MB target would single-thread it (measured:
-        // +3s on the sklearn group). A 500-tiny-log glob still coalesces
-        // to a handful of partitions, so later passes over the persisted
-        // parse don't schedule 500 near-empty tasks each.
-        val nParts = math.min(files.size.toLong,
-          math.max(1L, totalBytes / (2L << 20) + 1)).toInt
+        val cores = spark.sparkContext.defaultParallelism.toLong
+        val (parseParts, lineParts) = partitionTargets(totalBytes, cores)
+        // Partition count = the 2 MB parse target, capped at the file
+        // count: wholetext cannot split a file, so more partitions than
+        // files is meaningless. A 500-tiny-log glob still coalesces to a
+        // handful of partitions, so later passes over the persisted parse
+        // don't schedule 500 near-empty tasks each.
+        val nParts = math.min(files.size.toLong, parseParts).toInt
         // wholetext cannot SPLIT a file either: the opposite degenerate
         // glob — a FEW LARGE logs (one 4 MB run log here; one 4 GB
         // server log at scale) — caps the regex+from_csv parse AND every
@@ -178,7 +198,7 @@ object CsvSource {
         // serializing multi-second work on single cores while the rest
         // of the cluster idles. When the size-derived target is at least
         // 2x the file count, round-robin-shuffle the filtered LINES to
-        // ~1 MB parse targets (bounded by 4 waves of the cluster: more
+        // the ~1 MB line targets (bounded by 4 waves of the cluster: more
         // tasks than that only adds scheduler load; AQE cannot help —
         // this is an RDD-visible cache layout, not a shuffle read). The
         // shuffled payload is exactly the lines about to be parsed, so
@@ -198,13 +218,10 @@ object CsvSource {
         // fixtures with 67-114 MB groups: repartition 91-170 s vs
         // natural layout 66-92 s). Both bounds scale with the cluster:
         // a 1 GB single-file log on a 4000-core cluster still fires.
-        val cores = spark.sparkContext.defaultParallelism.toLong
-        val lineParts = math.min(
-          math.max(1L, totalBytes / (1L << 20) + 1), cores * 4).toInt
         val lines2 =
           if (lineParts >= files.size * 2 &&
               totalBytes < cores * (2L << 20))
-            lines.repartition(lineParts)
+            lines.repartition(lineParts.toInt)
           else lines
         // graft_csv_fields replaces from_csv(all-string schema,
         // ignoreLeadingWhiteSpace) — value-identical (CsvLineFieldsSpec
@@ -278,7 +295,9 @@ object CsvSource {
         metaKeys.toList.flatMap(k => Seq(norm(k), mm.contains(k): java.lang.Boolean)))
     }
     val side = spark.createDataFrame(sideRows.asJava, sideSchema)
-    val joined = parsed.join(broadcast(side), "__gf_path")
+    val joined =
+      if (onePartition) parsed.coalesce(1).join(side.coalesce(1).hint("shuffle_hash"), "__gf_path")
+      else parsed.join(broadcast(side), "__gf_path")
 
     // provenance (overwrite CSV columns of the same name, like the
     // reference's df.assign); then meta overwrite/extend per file. Each
@@ -313,11 +332,17 @@ object CsvSource {
     }.toMap
   }
 
-  /** File portion of the scan: expand globs, group files by parsed
-    * schema, one relation per group (possibly none when the recipe only
-    * has child configs). */
-  def scanFiles(spark: SparkSession, recipe: Recipe,
-                inputs: Option[Seq[String]] = None): Seq[DataFrame] = {
+  /** The files of a glob listing the scan reads: everything but the
+    * `.meta` sidecars (see [[scanFiles]]). */
+  private[recipe] def dataFiles(files: Seq[(String, Long)]): Seq[(String, Long)] =
+    files.filterNot(_._1.endsWith(".meta"))
+
+  /** File portion of the scan over `files`, the [[expandGlobStatuses]]
+    * listing of `patterns`: group files by parsed schema, one relation per
+    * group (possibly none when the recipe only has child configs), each
+    * in one partition when `onePartition`. */
+  private[recipe] def scanFiles(spark: SparkSession, recipe: Recipe, patterns: Seq[String],
+                                files: Seq[(String, Long)], onePartition: Boolean): Seq[DataFrame] = {
     // S4 'sql' reads SQLite files through graft.sources.Sqlite (pure-Scala
     // parser of the public file format — aggregate.py:295-314 semantics);
     // any other format fails loudly instead of feeding binary through the
@@ -325,8 +350,6 @@ object CsvSource {
     if (recipe.input.format != "csv" && recipe.input.format != "sql")
       throw RecipeError(
         s"input.format '${recipe.input.format}' is unsupported in this build (only 'csv', 'sql')")
-    val patterns = inputs.getOrElse(recipe.input.paths)
-    val files = expandGlobStatuses(spark, patterns, recipe.baseDir)
     if (files.isEmpty && patterns.nonEmpty)
       throw RecipeError(s"No matching files found for $patterns")
     // A suffix-less glob (pca-native's 'runs/.../*_pca*') also matches the
@@ -336,19 +359,19 @@ object CsvSource {
     // as-data rows never reach any output. Skipping them at the scan is
     // behaviorally identical (no corpus recipe combines a sidecar-matching
     // glob with an empty axis) and avoids parsing YAML as CSV.
-    val dataFiles = files.filterNot(_._1.endsWith(".meta"))
+    val data = dataFiles(files)
     if (recipe.input.format == "sql") {
       val table = recipe.input.tableName.getOrElse(throw RecipeError(
         "input.format 'sql' requires input.table-name (aggregate.py:296-297)"))
-      dataFiles.map { case (f, _) => try graft.sources.Sqlite.scan(spark, f, table)
+      data.map { case (f, _) => try graft.sources.Sqlite.scan(spark, f, table)
         catch { case e: graft.sources.Sqlite.SqliteError => throw RecipeError(e.msg) } }
     } else {
-      val infos = dataFiles.map { case (f, len) => fileInfo(spark, recipe, f, len) }
+      val infos = data.map { case (f, len) => fileInfo(spark, recipe, f, len) }
       // group by (schema, header-mode); preserve first-file order so the
       // union's frame order (and thus `first()` carry-alongs) is stable
       infos.groupBy(fi => (fi.names, fi.hasHeaderRow)).toSeq
         .sortBy(_._2.head.path)
-        .map { case ((names, _), fis) => readGroup(spark, recipe, names, fis) }
+        .map { case ((names, _), fis) => readGroup(spark, recipe, names, fis, onePartition) }
     }
   }
 }

@@ -772,26 +772,29 @@ object Scale {
     // CONSTANT Spark job count: jobs measure coordination (inference
     // aggregates, ratio collects, cache fills — all per-recipe, not
     // per-row). Min-of-2 passes per mult: single draws on a co-tenant
-    // host drift up to 2×; jobs come from the min pass.
+    // host drift up to 2×; jobs come from the min pass. `layout` is the
+    // one the DAG's size rule chose (Benchmark scaladoc): small trees run
+    // in one partition without AQE and fewer jobs, so the job count
+    // steps where the layout flips, and is constant on either side.
     Leg("dag", r => {
       val jobs = QueryJobs.attach(r.spark)
-      def runDag(root: String): (Double, Long, Int) = {
+      def runDag(root: String): (Double, Long, Int, String) = {
         jobs.take()
         val bench = graft.recipe.Benchmark(r.spark, s"$root/summary_indicators.yml")
         val (rows, wall) = r.seconds(bench.getAggregatedData().count())
         bench.unpersist()
-        (wall, rows, jobs.take().size)
+        (wall, rows, jobs.take().size, if (bench.onePartition) "one-partition" else "distributed")
       }
       // unrecorded warmup: the first DAG execution pays whole-stage-codegen
       // JIT for every operator shape
       runDag(graft.corpus.ReferenceCorpus.ensure(r.spark, r.sfDir, 1))
-      println(f"${"mult"}%-6s${"fixtureMB"}%-11s${"rows"}%-7s${"jobs"}%-6s${"wall_s"}%-8s")
+      println(f"${"mult"}%-6s${"fixtureMB"}%-11s${"rows"}%-7s${"jobs"}%-6s${"wall_s"}%-8s${"layout"}")
       for (m <- r.mults) {
         val root = graft.corpus.ReferenceCorpus.ensure(r.spark, r.sfDir, m)
         def walk(f: java.io.File): Long =
           if (f.isDirectory) f.listFiles().map(walk).sum else f.length()
-        val (wall, rows, nJobs) = (1 to 2).map(_ => runDag(root)).minBy(_._1)
-        println(f"$m%-6d${walk(new java.io.File(root)) / 1e6}%-11.1f$rows%-7d$nJobs%-6d$wall%-8.2f")
+        val (wall, rows, nJobs, layout) = (1 to 2).map(_ => runDag(root)).minBy(_._1)
+        println(f"$m%-6d${walk(new java.io.File(root)) / 1e6}%-11.1f$rows%-7d$nJobs%-6d$wall%-8.2f$layout")
       }
       jobs.close()
     }),

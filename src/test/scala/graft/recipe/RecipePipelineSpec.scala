@@ -2,6 +2,16 @@ package graft.recipe
 
 import java.nio.file.{Files, Path}
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftBusDrain
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -21,6 +31,68 @@ class RecipePipelineSpec extends AnyFunSuite {
     Files.writeString(p, content)
     p
   }
+
+  /** `f`'s result and every query execution a listener registered on the
+    * caller's session saw while `f` ran. */
+  private def queriesOf[A](f: => A): (A, Seq[QueryExecution]) = {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val r = f
+      GraftBusDrain(spark.sparkContext)
+      (r, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Exchanges and adaptive stages of `p`, cached relations' plans included. */
+  private def distributedNodes(p: SparkPlan): Seq[String] = p.collectWithSubqueries {
+    case e: ShuffleExchangeLike => Seq(e.nodeName)
+    case b: BroadcastExchangeLike => Seq(b.nodeName)
+    case a: AdaptiveSparkPlanExec => Seq(a.nodeName)
+    case m: InMemoryTableScanExec => distributedNodes(m.relation.cachedPlan)
+  }.flatten
+
+  private val perfCsv =
+    """Prefix, size, Time
+      |native, 100, 1.0
+      |native, 100, 3.0
+      |intel, 100, 4.0
+      |native, 200, 10.0
+      |intel, 200, 5.0
+      |""".stripMargin
+
+  /** A two-level DAG over `data`: a raw child recipe and a parent with a
+    * `ratio_of` over it (the indicator shape). */
+  private def ratioDag(dir: Path, data: String): String = {
+    write(dir, "perf.csv", data)
+    write(dir, "child.yml",
+      s"""input:
+         |  path: "${dir}/perf.csv"
+         |aggregation: mean
+         |values: [Time]
+         |series: [Prefix]
+         |axis: [size]
+         |""".stripMargin)
+    """input:
+      |  config:
+      |  - child.yml
+      |aggregation: mean
+      |precomputed:
+      |  Ratio: "ratio_of('Time', Prefix='native')"
+      |values: [Ratio]
+      |series: [Prefix]
+      |axis: [size]
+      |""".stripMargin
+  }
+
+  private def ratios(rows: Array[org.apache.spark.sql.Row]): Map[(String, Long), Double] =
+    rows.map(r => (r.getAs[Any]("Prefix").toString, r.getAs[Long]("size")) ->
+      r.getAs[Double]("Ratio")).toMap
 
   test("CSV scan with headered files, rename, filter, mean aggregation") {
     val dir = tmpDir()
@@ -688,5 +760,63 @@ class RecipePipelineSpec extends AnyFunSuite {
       assert(smallBench.getRawData().rdd.getNumPartitions === 1,
         "tiny single-file group must not pay a repartition shuffle")
     } finally smallBench.unpersist()
+  }
+
+  test("a small recipe DAG plans every eager collect with no exchange and no adaptive stage") {
+    val dir = tmpDir()
+    val bench = Benchmark.fromString(spark, ratioDag(dir, perfCsv), dir.toString)
+    val (rows, queries) = queriesOf(bench.getAggregatedData().collect())
+    try {
+      // the child's inference, the ratio base and the final collect at least
+      assert(queries.size >= 3, s"${queries.size} queries seen")
+      for (qe <- queries) {
+        val nodes = distributedNodes(qe.executedPlan)
+        assert(nodes.isEmpty, s"${nodes.mkString(", ")} in\n${qe.executedPlan}")
+      }
+      assert(bench.onePartition)
+      // same golden values as the one-level ratio_of case
+      assert(ratios(rows) == Map(("native", 100L) -> 1.0, ("intel", 100L) -> 2.0,
+        ("native", 200L) -> 1.0, ("intel", 200L) -> 0.5))
+    } finally bench.unpersist()
+  }
+
+  test("a recipe DAG over an input above the size rule still plans under AQE") {
+    val dir = tmpDir()
+    // ~1.5 MB: two 1 MB scan targets, so the raw recipe is not one partition
+    val big = new StringBuilder(perfCsv)
+    var i = 0
+    while (big.length < (3 << 19)) {
+      big.append(s"intel, ${300 + i % 5}, ${1 + i % 3}.0\nnative, ${300 + i % 5}, 2.0\n")
+      i += 1
+    }
+    val bench = Benchmark.fromString(spark, ratioDag(dir, big.toString), dir.toString)
+    val (rows, queries) = queriesOf(bench.getAggregatedData().collect())
+    try {
+      assert(!bench.onePartition)
+      // the inference aggregates and the final aggregate are adaptive plans
+      assert(queries.count(qe => distributedNodes(qe.executedPlan).contains("AdaptiveSparkPlan")) >= 2,
+        queries.map(_.executedPlan.nodeName).mkString(", "))
+      val m = ratios(rows)
+      assert(m.filter(_._1._2 < 300) == Map(("native", 100L) -> 1.0, ("intel", 100L) -> 2.0,
+        ("native", 200L) -> 1.0, ("intel", 200L) -> 0.5))
+      // sizes 300-304: native is 2.0 throughout, intel cycles 1,2,3 over i
+      assert(m(("native", 300L)) == 1.0 && m.size == 14)
+    } finally bench.unpersist()
+  }
+
+  test("a listener on the caller's session sees the queries of a small recipe DAG") {
+    // the one-partition layout plans in a clone of the caller's session:
+    // the clone must carry the caller's listeners (a fresh session would
+    // not), and the caller keeps AQE
+    val dir = tmpDir()
+    val bench = Benchmark.fromString(spark, ratioDag(dir, perfCsv), dir.toString)
+    val (rows, queries) = queriesOf(bench.getAggregatedData().collect())
+    try {
+      assert(rows.length == 4)
+      assert(queries.exists(_.sparkSession ne spark), "no query ran in the layout's session")
+      assert(queries.exists(_.executedPlan.collectFirst {
+        case m: InMemoryTableScanExec => m }.nonEmpty), "no query read the child cache")
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    } finally bench.unpersist()
   }
 }
