@@ -27,7 +27,7 @@ import graft.recipe.ExprCompiler.RatioCall
   * partition rule (`CsvSource.scansAsOnePartition`), the DAG is planned
   * in a clone of the caller's session with AQE off, and its frames are
   * kept in one partition — so every eager probe and the final aggregate
-  * plan no exchange (q46: 47 jobs). The caller's session keeps AQE.
+  * plan no exchange (q46: 46 jobs). The caller's session keeps AQE.
   * Larger trees keep the distributed layout: their shuffle-bound steps
   * depend on AQE's partition coalescing, and one partition would
   * serialize the CPU-bound parse of a multi-MB raw recipe.
@@ -675,10 +675,16 @@ object Benchmark {
       * any size estimate: the planner re-shuffles them above
       * `maxSinglePartitionBytes` (128 MB), and the estimates of the ratio
       * joins multiply past that although the rule above measured the
-      * real input in bytes. */
+      * real input in bytes. A scan lists its files on the driver, as the
+      * rule above already did: Spark's parallel listing (above 32 paths)
+      * costs one job more per evaluation. Clones share the executor's
+      * default classloader (artifact isolation is off in
+      * [[graft.GraftSession]]), so their tasks reuse the classes earlier
+      * evaluations generated. */
     val session: SparkSession = if (!single) caller else {
       val s = org.apache.spark.sql.GraftCloneSession(caller)
       s.conf.set("spark.sql.adaptive.enabled", "false")
+      s.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       s.conf.set("spark.sql.maxSinglePartitionBytes", Long.MaxValue.toString)
       s
     }

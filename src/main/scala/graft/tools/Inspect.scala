@@ -2,7 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.obs.QueryJobs
@@ -14,7 +16,9 @@ import graft.obs.QueryJobs
   *    (default 2; pass 1 pays JIT and codegen, later passes are the warm
   *    condition the bench headline reports) and prints every Spark job
   *    of each pass: id, wall, stages, tasks and the first graft frame of
-  *    its call site;
+  *    its call site. Each pass's header also counts the classes the pass
+  *    generated and their Janino compile time summed over threads: a
+  *    warm pass that compiles is missing Spark's generated-class cache;
   *  - `plan <substr> <sfDir>` prints the executed plan;
   *  - `explain <outDir> <suffix> <substr,…> <sfDir>` writes
   *    `.explain("formatted")` of every query matching one of the
@@ -51,12 +55,17 @@ object Inspect {
         graft.corpus.ReferenceCorpus.ensure(spark, sfDir)
         for (pass <- 1 to passes) {
           jobs.take()
+          val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val compileNs0 = CodeGenerator.compileTime
           val t0 = System.nanoTime()
           query(name, sfDir).count()
           val dt = (System.nanoTime() - t0) / 1e9
           val ran = jobs.take()
+          val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0
+          val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000
           spark.catalog.clearCache()
-          println(f"=== pass $pass: $name  $dt%.2fs  ${ran.size} jobs ===")
+          println(f"=== pass $pass: $name  $dt%.2fs  ${ran.size} jobs  " +
+            f"$classes classes compiled in $compileMs ms ===")
           for (j <- ran) println(f"job ${j.id}%4d ${j.wallMs}%7d ms " +
             f"${j.stages}%3d stages ${j.tasks}%5d tasks  ${j.frame}")
         }
