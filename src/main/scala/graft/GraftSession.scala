@@ -56,6 +56,15 @@ object GraftSession {
       // per-session isolation only bought every session clone its own
       // executor classloader, and with it a cold codegen cache
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Spark's status stores keep up to 1000 finished SQL executions,
+      // jobs and stages, UI or not: a q46 evaluation adds 46 of each and
+      // about 6.6 MB of heap after GC (plan graphs and text, RDD graphs),
+      // so a JVM re-running a recipe grew toward about 140 MB. 100 of each
+      // bounds that near 14 MB; nothing here reads the stores (job counts
+      // come from a listener)
+      .config("spark.sql.ui.retainedExecutions", "100")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
       // pandas column resolution is case-sensitive: the reference corpus
       // carries 'Classes' (raw/sklearn) and 'classes' (svm/logreg/df_clsf)
       // as DISTINCT union-padded columns and indicator recipes reference

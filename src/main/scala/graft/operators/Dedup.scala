@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -766,15 +766,20 @@ object Dedup {
       .distinct()
   }
 
-  /** The convergence signature of a CC edge multiset (u, v): its size
-    * and the exact SUM of the edges' 64-bit hashes. Star rounds emit
-    * duplicate edges, so the state is a multiset; a sum counts every
-    * copy, where an XOR cancels each edge present an even number of
-    * times ({a,a,b} and {b,c,c} would share a signature). DECIMAL(38,0)
-    * holds the sum of 10^19 hashes, so it cannot overflow under ANSI. */
-  private[operators] def ccSignature(e: DataFrame): Row =
-    e.agg(count(lit(1)),
-      sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
+  /** Whether a small-star output (every edge `u -> v` has `v < u`) is a
+    * star forest: each `u` has one distinct `v`, and no `v` is a `u`. A
+    * `u` row carries its parent and a `v` row a null, so a node breaks
+    * the shape when its parents' min and max differ or it has both kinds
+    * of row. `count()`, not `isEmpty`: `isEmpty` scans partitions in
+    * growing steps, so its job count varies. */
+  private[operators] def isStarForest(e: DataFrame): Boolean =
+    e.select(col("u").as("n"), col("v").as("p"))
+      .unionAll(e.select(col("v").as("n"), lit(null).cast(e.schema("v").dataType).as("p")))
+      .groupBy("n")
+      .agg(min(col("p")).as("lo"), max(col("p")).as("hi"),
+        count(col("p")).as("np"), count(lit(1)).as("rows"))
+      .filter(col("lo") =!= col("hi") || (col("np") > 0 && col("np") < col("rows")))
+      .count() == 0
 
   /** Connected components over an undirected near-dup edge list — the
     * step that turns pairwise candidates into dedup clusters (every
@@ -798,6 +803,19 @@ object Dedup {
     * Output: (id, rep) for every id that appears in some edge; rep = min
     * id of its component. Callers left-join and coalesce(rep, id) to
     * cover singleton documents.
+    *
+    * Stop rule: the loop stops on the first round whose output is a star
+    * forest ([[isStarForest]]). That is the fixpoint: every edge points
+    * to a smaller id, so each root is its component's minimum, and one
+    * more round returns the same edge set. Both conditions are needed:
+    * small-star can give a node two parents, its own minimum neighbour
+    * and a larger neighbour's (`{(4,1),(4,3),(3,2)}` gives
+    * `{(3,1),(4,1),(3,2)}`, where no parent is a child, yet 2 would be
+    * its own root). Past `maxIter` rounds the call fails loudly.
+    *
+    * The persisted entry canon is filled by one `count()` before round
+    * 1, which reads it several times: unfilled, those reads race to fill
+    * it through AQE's table-cache stages, and the jobs per call vary.
     *
     * The entry canon stays even for callers whose pairs are already
     * distinct and oriented (minhashCandidates, dhashNearDups): its
@@ -832,12 +850,11 @@ object Dedup {
       *
       * No per-round distinct here either (round 12): both star phases
       * are duplicate-tolerant (the groupBy-min absorbs dups; the v≠m
-      * filters do the contraction), neither emits self-loops, and at
-      * the set-level fixpoint this phase's output is exactly the
-      * deduped mins rows — so dropping the dedup costs AT MOST one
-      * extra round of already-contracted edges while saving a full
-      * exchange of the edge multiset EVERY round (guide §2.4: a
-      * distinct on data whose consumers don't need uniqueness). The
+      * filters do the contraction), neither emits self-loops, and the
+      * star-forest stop rule reads distinct parents, so duplicate edges
+      * cost no extra round, while a dedup would cost a full exchange of
+      * the edge multiset EVERY round (guide §2.4: a distinct on data
+      * whose consumers don't need uniqueness). The
       * checkpointed state still gets an AQE-coalesced layout from the
       * join's own exchange, so the round-11 entry-canon trap (near-empty
       * task layouts re-scheduled every round) does not apply. */
@@ -853,7 +870,7 @@ object Dedup {
     var e = canon(pairs.select(col(pairs.columns.head).as("u"),
       col(pairs.columns(1)).as("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var signature = ccSignature(e)
+    e.count()
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
@@ -862,12 +879,9 @@ object Dedup {
       // join+aggregate layers deeper every round, and Catalyst
       // re-analysis/constraint propagation over that recursion goes
       // super-linear fast), but materialization is deferred to the
-      // signature aggregate below — ONE driver job per round where the
-      // old eager-checkpoint + signature pair was two.
+      // star-forest check below, which reads the state once anyway.
       val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val nextSig = ccSignature(next)
-      converged = nextSig == signature
-      signature = nextSig
+      converged = isStarForest(next)
       e.unpersist()
       e = next
       it += 1

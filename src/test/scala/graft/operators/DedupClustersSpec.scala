@@ -30,14 +30,58 @@ class DedupClustersSpec extends AnyFunSuite {
     assert(m.size == 41 && m.values.forall(_ == 0L))
   }
 
-  test("convergence signature tells apart multisets an XOR would merge") {
-    // star rounds emit duplicate edges: {a,a,b} and {b,c,c} have the
-    // same size, and XOR-ing their hashes cancels each doubled edge
-    val (a, b, c) = ((1L, 2L), (3L, 4L), (5L, 6L))
-    def sig(edges: (Long, Long)*) =
-      Dedup.ccSignature(edges.toDF("u", "v"))
-    assert(sig(a, a, b) != sig(b, c, c))
-    assert(sig(a, a, b) == sig(b, a, a))
+  test("star-forest check: one parent per child, no parent is a child") {
+    def starForest(edges: (Long, Long)*) =
+      Dedup.isStarForest(edges.toDF("u", "v"))
+    // two stars, one edge duplicated
+    assert(starForest((2, 1), (3, 1), (3, 1), (5, 4)))
+    // node 3 has two parents, 1 and 2
+    assert(!starForest((3, 1), (3, 2), (4, 1)))
+    // parent 2 is also the child of 1
+    assert(!starForest((2, 1), (3, 2)))
+    // the path 2-3-4-5-1: its first round ends in {(3,1),(3,2),(4,2),(5,1)},
+    // where no parent is a child but node 3 has two parents
+    assert(cc((3, 4), (3, 2), (5, 1), (4, 5)) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
+  }
+
+  test("200 random graphs in one call match a driver-side union-find") {
+    // each graph owns the id range [1000g, 1000g + 1000), so one
+    // connectedComponents call checks them all at once
+    val rnd = new scala.util.Random(20261019L)
+    def shuffledIds(base: Long, n: Int): IndexedSeq[Long] =
+      rnd.shuffle((0 until 1000).toIndexedSeq).take(n).map(base + _)
+    val edges = (0 until 200).flatMap { g =>
+      val base = g * 1000L
+      val core: Seq[(Long, Long)] = g % 4 match {
+        case 0 => // chain of up to 40 nodes with shuffled ids
+          shuffledIds(base, 2 + rnd.nextInt(39)).sliding(2).map(p => (p(0), p(1))).toSeq
+        case 1 => // star around a random centre
+          val ids = shuffledIds(base, 2 + rnd.nextInt(15))
+          ids.tail.map(ids.head -> _)
+        case 2 => // clique
+          val ids = shuffledIds(base, 2 + rnd.nextInt(7))
+          ids.combinations(2).map(p => (p(0), p(1))).toSeq
+        case _ => // sparse random graph, self-loops included
+          val ids = shuffledIds(base, 2 + rnd.nextInt(30))
+          Seq.fill(1 + rnd.nextInt(40))((ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size))))
+      }
+      // duplicate and reversed copies of some edges, and a self-loop
+      val extra = core.filter(_ => rnd.nextInt(4) == 0)
+        .map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+      rnd.shuffle(core ++ extra :+ (base + 999L, base + 999L))
+    }
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges if a != b) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expect = parent.keys.toList.map(x => x -> find(x)).toMap
+    assert(cc(edges: _*) == expect)
   }
 
   test("empty edge list yields empty mapping") {
