@@ -65,6 +65,11 @@ object GraftSession {
       .config("spark.sql.ui.retainedExecutions", "100")
       .config("spark.ui.retainedJobs", "100")
       .config("spark.ui.retainedStages", "100")
+      // every file scan lists through a new file index under a fresh
+      // FileStatusCache client id, so no scan ever reads another's cached
+      // statuses: the cache only grew (about 139 LocatedFileStatus per
+      // q46 evaluation) up to its 250 MB bound. Size 0 makes it a no-op
+      .config("spark.sql.hive.filesourcePartitionFileCacheSize", "0")
       // pandas column resolution is case-sensitive: the reference corpus
       // carries 'Classes' (raw/sklearn) and 'classes' (svm/logreg/df_clsf)
       // as DISTINCT union-padded columns and indicator recipes reference

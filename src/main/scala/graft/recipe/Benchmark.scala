@@ -171,7 +171,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     val d = dagFor(None, inputs)
     val patterns = inputs.getOrElse(recipe.input.paths)
     val fileFrames = CsvSource.scanFiles(d.session, recipe, patterns,
-      d.listing(patterns, recipe.baseDir), onePartition = d.single)
+      d.listing(patterns, recipe.baseDir))
     val multiPass = relevantCols.nonEmpty || recipe.precomputed.nonEmpty
     val filePart = if (fileFrames.isEmpty) Nil else {
       val u = laid(unionPandas(fileFrames))

@@ -1,7 +1,7 @@
 package graft.recipe
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -21,14 +21,15 @@ case class RecipeError(msg: String) extends RuntimeException(msg)
   * (splittable) when the recipe has no line filter, or one wholetext scan
   * flat-mapped through [[LineFilter]] (per-file sequential state, parallel
   * across files) when it does. Per-file constants (provenance columns,
-  * `.meta` sidecar values) ride in via a broadcast equi-join on the file
-  * path rather than per-file literal columns, so a 10k-file glob is one
-  * scan + one broadcast join, not 10k union branches. The parse schema is
-  * all-string and fixed up front (from a driver-side one-line peek per
-  * file, the same peek the reference does at aggregate.py:278-283), so no
-  * per-file Spark inference jobs run; numeric typing happens once for the
-  * whole union in [[Benchmark]]'s inference pass — the reference's own
-  * model (pandas `to_numeric`, aggregate.py:316-352).
+  * `.meta` sidecar values) are looked up per row by the row's file path
+  * in a driver-built map rather than carried as per-file literal
+  * columns, so a 10k-file glob is one scan with no join, not 10k union
+  * branches. The parse schema is all-string and fixed up front (from a
+  * driver-side one-line peek per file, the same peek the reference does
+  * at aggregate.py:278-283), so no per-file Spark inference jobs run;
+  * numeric typing happens once for the whole union in [[Benchmark]]'s
+  * inference pass — the reference's own model (pandas `to_numeric`,
+  * aggregate.py:316-352).
   */
 object CsvSource {
 
@@ -143,35 +144,32 @@ object CsvSource {
     partitionTargets(bytes, cores) == ((1L, 1L))
 
   /** One relation for a group of same-schema files: a single multi-file
-    * scan plus a broadcast side-table join carrying the per-file
-    * constants (Path/File/Directory provenance + `.meta` values). With
-    * `onePartition`, scan and side table are one partition each and
-    * join in place: a broadcast would cost a job of its own. */
+    * scan whose rows look up their file's constants (Path/File/Directory
+    * provenance + `.meta` values) by path. */
   private def readGroup(spark: SparkSession, recipe: Recipe, colNames: Seq[String],
-                        files: Seq[FileInfo], onePartition: Boolean): DataFrame = {
+                        files: Seq[FileInfo]): DataFrame = {
     import spark.implicits._
     val schema = StructType(colNames.map(StructField(_, StringType)))
-    val paths = files.map(_.path)
+    // spark.read globs its paths again: escape the listing's file names
+    // so a listed `run[1]` is read as itself, not as `run1`
+    val paths = files.map(_.path.replaceAll("""([\\\[\]{}*?])""", """\\$1"""))
 
     // ---- the data scan: one relation for the whole group ----
-    // __gf_path is the plain (scheme-less) file path used as the join key.
+    // __gf_path is the file's URI as input_file_name() reports it; its
+    // path part is the listing's plain path.
     val parsed: DataFrame =
       if (recipe.input.filters.nonEmpty) {
         val rules = recipe.input.filters
         // header line (when present) must be dropped per file — the skip
         // decision was made driver-side in fileInfo
         val skipFirst = files.filter(_.hasHeaderRow).map(_.path).toSet
-        // input_file_name() reports Hadoop's qualified URI; map every
-        // form it may take back to the plain path driver-side
-        val plainOf = uriCandidates(spark, paths)
         val lines = spark.read.option("wholetext", "true").text(paths: _*)
           .select(input_file_name().as("f"), col("value"))
           .as[(String, String)]
-          .flatMap { case (fname, content) =>
-            val plain = plainOf.getOrElse(fname, fname)
+          .flatMap { case (uri, content) =>
             val it = LineFilter(LineFilter.compile(rules), content.linesIterator)
-            val it2 = if (skipFirst(plain)) it.drop(1) else it
-            it2.map(l => (plain, l))
+            val it2 = if (skipFirst(new java.net.URI(uri).getPath)) it.drop(1) else it
+            it2.map(l => (uri, l))
           }
           .toDF("__gf_path", "__gf_line")
           .filter(col("__gf_line") =!= "") // csv source skips blank lines
@@ -244,8 +242,6 @@ object CsvSource {
       } else {
         // no line filter: the native (splittable) CSV scan over all files
         // at once; per-file header skipping is the datasource's own.
-        // __gf_path stays in URI form here — the side table below carries
-        // one row per URI spelling, so the join resolves it.
         val hasHeaderRow = files.head.hasHeaderRow // uniform within group
         spark.read
           .option("ignoreLeadingWhiteSpace", "true")
@@ -256,7 +252,7 @@ object CsvSource {
           .withColumn("__gf_path", input_file_name())
       }
 
-    // ---- per-file constants: provenance + meta, one broadcast join ----
+    // ---- per-file constants: provenance + meta, looked up by path ----
     val metaKeys: Seq[String] = files.flatMap(_.meta.map(_._1)).distinct
     def metaType(k: String): org.apache.spark.sql.types.DataType = {
       val vs = files.flatMap(_.meta.collect { case (`k`, v) if v != null => v })
@@ -268,68 +264,49 @@ object CsvSource {
         org.apache.spark.sql.types.DoubleType
       else StringType
     }
-    val sideSchema = StructType(
-      StructField("__gf_path", StringType) ::
-      StructField("__gf_ppath", StringType) ::
-      StructField("__gf_pfile", StringType) ::
-      StructField("__gf_pdir", StringType) ::
-      metaKeys.toList.flatMap(k => Seq(
-        StructField(s"__gf_m_$k", metaType(k)),
-        StructField(s"__gf_has_$k", org.apache.spark.sql.types.BooleanType))))
-    // one side row per URI spelling input_file_name()/the flatMap may
-    // report for a file, all carrying that file's constants
-    val plainOf = uriCandidates(spark, paths)
-    val infoOf = files.map(fi => fi.path -> fi).toMap
-    val sideRows = plainOf.toSeq.map { case (key, plain) =>
-      val fi = infoOf(plain)
+    // plain path -> Path, File, Directory, then per meta key its value
+    // and a has-key flag (null when the sidecar lacks the key), as strings
+    val constsOf: Map[String, Seq[String]] = files.map { fi =>
       val f = new java.io.File(fi.path)
       val mm = fi.meta.toMap
-      def norm(k: String): Any = mm.get(k).map {
-        case v: java.lang.Integer => v.longValue(): java.lang.Long
-        case v: java.lang.Number if metaType(k) == StringType => v.toString
-        case v: java.lang.Boolean if metaType(k) == StringType => v.toString
-        case v => v
-      }.orNull
-      Row.fromSeq(
-        key :: fi.path :: f.getName :: Option(f.getParent).getOrElse(".") ::
-        metaKeys.toList.flatMap(k => Seq(norm(k), mm.contains(k): java.lang.Boolean)))
+      fi.path -> (Seq(fi.path, f.getName, Option(f.getParent).getOrElse(".")) ++
+        metaKeys.flatMap(k => Seq(mm.get(k).flatMap(Option(_)).map(_.toString).orNull,
+          if (mm.contains(k)) "true" else null)))
+    }.toMap
+    // A file scan delivers its rows in runs per file, so the lookup keeps
+    // its last key. The memo lives in this closure, which every task
+    // deserializes into its own copy: no two threads share it.
+    var lastUri: String = null
+    var lastConsts: Seq[String] = null
+    val consts = udf { (uri: String) =>
+      if (uri != lastUri) {
+        val path = new java.net.URI(uri).getPath
+        lastConsts = constsOf.getOrElse(path,
+          throw RecipeError(s"scanned file '$path' is not in the recipe's listing"))
+        lastUri = uri
+      }
+      lastConsts
     }
-    val side = spark.createDataFrame(sideRows.asJava, sideSchema)
-    val joined =
-      if (onePartition) parsed.coalesce(1).join(side.coalesce(1).hint("shuffle_hash"), "__gf_path")
-      else parsed.join(broadcast(side), "__gf_path")
+    val c = parsed.withColumn("__gf_c", consts(col("__gf_path")))
 
     // provenance (overwrite CSV columns of the same name, like the
     // reference's df.assign); then meta overwrite/extend per file. Each
     // stage is ONE projection (withColumns), not a per-column withColumn
     // fold — the fold re-analyzes a deeper plan per column, O(k²)
     // analyzer work per scanned group
-    val prov = joined.withColumns(Map(
-      "Path" -> col("__gf_ppath"), "File" -> col("__gf_pfile"),
-      "Directory" -> col("__gf_pdir")))
-    val metaCols = metaKeys.map { k =>
-      val v = col(s"`__gf_m_$k`")
+    val prov = c.withColumns(Map(
+      "Path" -> col("__gf_c")(0), "File" -> col("__gf_c")(1),
+      "Directory" -> col("__gf_c")(2)))
+    val metaCols = metaKeys.zipWithIndex.map { case (k, j) =>
+      val v = col("__gf_c")(3 + 2 * j).cast(metaType(k))
       k -> (if (prov.columns.contains(k))
         // CSV already has the column (string): keep its type, like the
         // old per-file frames coerced under unionByName
-        when(col(s"`__gf_has_$k`"), v.cast(StringType)).otherwise(col(s"`$k`"))
+        when(col("__gf_c")(4 + 2 * j).isNotNull, v.cast(StringType)).otherwise(col(s"`$k`"))
       else v)
     }.toMap
     val df = if (metaCols.isEmpty) prov else prov.withColumns(metaCols)
     df.drop(df.columns.filter(_.startsWith("__gf_")).toIndexedSeq: _*)
-  }
-
-  /** All URI spellings `input_file_name()` may report for each plain
-    * path, mapped back to the plain path. */
-  private def uriCandidates(spark: SparkSession, paths: Seq[String]): Map[String, String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    paths.flatMap { p =>
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
-      val q = fs.makeQualified(hp)
-      Seq(p -> p, q.toString -> p, q.toUri.toString -> p,
-        hp.toUri.toString -> p, "file:" + p -> p, "file://" + p -> p)
-    }.toMap
   }
 
   /** The files of a glob listing the scan reads: everything but the
@@ -339,10 +316,9 @@ object CsvSource {
 
   /** File portion of the scan over `files`, the [[expandGlobStatuses]]
     * listing of `patterns`: group files by parsed schema, one relation per
-    * group (possibly none when the recipe only has child configs), each
-    * in one partition when `onePartition`. */
+    * group (possibly none when the recipe only has child configs). */
   private[recipe] def scanFiles(spark: SparkSession, recipe: Recipe, patterns: Seq[String],
-                                files: Seq[(String, Long)], onePartition: Boolean): Seq[DataFrame] = {
+                                files: Seq[(String, Long)]): Seq[DataFrame] = {
     // S4 'sql' reads SQLite files through graft.sources.Sqlite (pure-Scala
     // parser of the public file format — aggregate.py:295-314 semantics);
     // any other format fails loudly instead of feeding binary through the
@@ -371,7 +347,7 @@ object CsvSource {
       // union's frame order (and thus `first()` carry-alongs) is stable
       infos.groupBy(fi => (fi.names, fi.hasHeaderRow)).toSeq
         .sortBy(_._2.head.path)
-        .map { case ((names, _), fis) => readGroup(spark, recipe, names, fis, onePartition) }
+        .map { case ((names, _), fis) => readGroup(spark, recipe, names, fis) }
     }
   }
 }

@@ -16,9 +16,10 @@ import graft.obs.QueryJobs
   *    (default 2; pass 1 pays JIT and codegen, later passes are the warm
   *    condition the bench headline reports) and prints every Spark job
   *    of each pass: id, wall, stages, tasks and the first graft frame of
-  *    its call site. Each pass's header also counts the classes the pass
-  *    generated and their Janino compile time summed over threads: a
-  *    warm pass that compiles is missing Spark's generated-class cache;
+  *    its call site. Each pass's header sums its stages and tasks, and
+  *    counts the classes the pass generated and their Janino compile
+  *    time summed over threads: a warm pass that compiles is missing
+  *    Spark's generated-class cache;
   *  - `plan <substr> <sfDir>` prints the executed plan;
   *  - `explain <outDir> <suffix> <substr,…> <sfDir>` writes
   *    `.explain("formatted")` of every query matching one of the
@@ -65,6 +66,7 @@ object Inspect {
           val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000
           spark.catalog.clearCache()
           println(f"=== pass $pass: $name  $dt%.2fs  ${ran.size} jobs  " +
+            f"${ran.map(_.stages).sum} stages  ${ran.map(_.tasks).sum} tasks  " +
             f"$classes classes compiled in $compileMs ms ===")
           for (j <- ran) println(f"job ${j.id}%4d ${j.wallMs}%7d ms " +
             f"${j.stages}%3d stages ${j.tasks}%5d tasks  ${j.frame}")

@@ -34,7 +34,7 @@ class JobBudgetSpec extends AnyFunSuite {
     // child-only levels, no per-file task storms, no AQE stage jobs)
     "q64_corpus_sklearn_summary" -> 40L,
     // full 11-recipe summary DAG in the one-partition layout (no AQE
-    // stage jobs, no side-table broadcasts, no parallel file listing):
+    // stage jobs, no scan-side join, no parallel file listing):
     // 46 jobs measured, 37 of them inference aggregates and 8 ratio-base
     // collects; was 189-192 under AQE. A rise toward 100 means an eager
     // probe, a broadcast or a listing job came back

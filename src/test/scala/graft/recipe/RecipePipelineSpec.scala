@@ -7,10 +7,12 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftBusDrain
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -55,6 +57,12 @@ class RecipePipelineSpec extends AnyFunSuite {
     case b: BroadcastExchangeLike => Seq(b.nodeName)
     case a: AdaptiveSparkPlanExec => Seq(a.nodeName)
     case m: InMemoryTableScanExec => distributedNodes(m.relation.cachedPlan)
+  }.flatten
+
+  /** Joins of logical plan `p`, cached relations' plans included. */
+  private def joins(p: LogicalPlan): Seq[Join] = p.collectWithSubqueries {
+    case j: Join => Seq(j)
+    case m: InMemoryRelation => joins(m.cacheBuilder.logicalPlan)
   }.flatten
 
   private val perfCsv =
@@ -297,6 +305,77 @@ class RecipePipelineSpec extends AnyFunSuite {
     val r = out.collect()(0)
     assert(r.getAs[Any]("Hostname") == "node01")
     assert(r.getAs[Any]("Threads") == 8L)
+  }
+
+  test("per-file constants: provenance and typed .meta values alike on both scan paths") {
+    val dir = tmpDir()
+    val odd = dir.resolve("a b#c%d")
+    Files.createDirectories(odd)
+    Files.createDirectories(dir.resolve("x"))
+    val header = "impl, size, shared\n"
+    write(dir, "x/one.csv", header + "numpy, 1, c1\n")
+    write(dir, "x/one.csv.meta", "n: 1\nd: 1.5\nb: true\nmix: 2\nnul: null\nshared: 7\n")
+    write(dir, "x/two.csv", header + "numba, 2, c2\n")
+    write(dir, "x/two.csv.meta", "n: 3\nd: 2.5\nb: false\nmix: 2.5\nnul: null\n")
+    write(odd, "three.csv", header + "scipy, 3, c3\n")
+    write(odd, "three.csv.meta", "n: 5\nshared: 9\nextra: hi\n")
+    val cols = Seq("Path", "File", "Directory", "impl", "size", "shared",
+      "n", "d", "b", "mix", "nul", "extra")
+    def raw(filter: String): (Map[String, String], Set[Seq[Any]]) = {
+      val bench = Benchmark.fromString(spark,
+        s"""input:
+           |  path: "${dir}/*/*.csv"
+           |$filter
+           |aggregation: mean
+           |values: [size]
+           |series: [impl]
+           |""".stripMargin)
+      try {
+        val df = bench.getRawData()
+        (cols.map(c => c -> df.schema(c).dataType.simpleString).toMap,
+          df.select(cols.map(c => col(s"`$c`")): _*).collect().map(_.toSeq).toSet)
+      } finally bench.unpersist()
+    }
+    def row(d: Path, f: String, impl: String, size: String, shared: String,
+            metas: Any*): Seq[Any] =
+      Seq(d.resolve(f).toString, f, d.toString, impl, size, shared) ++ metas
+    val x = dir.resolve("x")
+    val native = raw("")
+    // a meta key that is also a CSV column keeps the CSV's string type
+    // and its value where the sidecar lacks the key (df.assign)
+    assert(native == (Map("Path" -> "string", "File" -> "string", "Directory" -> "string",
+      "impl" -> "string", "size" -> "string", "shared" -> "string", "n" -> "bigint",
+      "d" -> "double", "b" -> "boolean", "mix" -> "double", "nul" -> "string",
+      "extra" -> "string"), Set(
+      row(x, "one.csv", "numpy", "1", "7", 1L, 1.5, true, 2.0, null, null),
+      row(x, "two.csv", "numba", "2", "c2", 3L, 2.5, false, 2.5, null, null),
+      row(odd, "three.csv", "scipy", "3", "9", 5L, null, null, null, null, "hi"))))
+    assert(raw("  filter:\n    ',': null") == native)
+  }
+
+  test("listed files whose names hold glob characters are read literally") {
+    // `run?1?` lists `run[1]` only; read back as a glob, `run[1]` would
+    // name `run1` instead
+    val dir = tmpDir()
+    for ((d, impl) <- Seq("run[1]" -> "numpy", "run1" -> "numba")) {
+      Files.createDirectories(dir.resolve(d))
+      write(dir, s"$d/r.csv", s"impl, time\n$impl, 1.0\n")
+    }
+    for (filter <- Seq("", "  filter:\n    ',': null")) {
+      val bench = Benchmark.fromString(spark,
+        s"""input:
+           |  path: "${dir}/run?1?/r.csv"
+           |$filter
+           |aggregation: mean
+           |values: [time]
+           |series: [impl]
+           |""".stripMargin)
+      try {
+        val rows = bench.getRawData().select("impl", "Directory").collect()
+          .map(r => (r.getString(0), r.getString(1))).toSeq
+        assert(rows == Seq(("numpy", dir.resolve("run[1]").toString)), s"filter '$filter'")
+      } finally bench.unpersist()
+    }
   }
 
   test("precomputed ratio_of: ratio of aggregates joined back per-row") {
@@ -790,6 +869,12 @@ class RecipePipelineSpec extends AnyFunSuite {
       i += 1
     }
     val bench = Benchmark.fromString(spark, ratioDag(dir, big.toString), dir.toString)
+    // the scan stamps per-file constants without a join (plan only, no job)
+    val child = Benchmark(spark, dir.resolve("child.yml").toString)
+    try {
+      val rawJoins = joins(child.getRawData().queryExecution.optimizedPlan)
+      assert(rawJoins.isEmpty, rawJoins.mkString("\n"))
+    } finally child.unpersist()
     val (rows, queries) = queriesOf(bench.getAggregatedData().collect())
     try {
       assert(!bench.onePartition)
