@@ -10,9 +10,21 @@ import graft.recipe.ExprCompiler.RatioCall
   * filter-out -> infer -> precomputed -> pack -> unpack -> infer ->
   * filter-in -> validate -> cast values -> expected checks -> group-agg,
   * bearysta doc/AGGREGATOR.md:64-105) re-expressed as lazy DataFrame
-  * composition — Catalyst sees the whole recipe as ONE plan and is free
-  * to push filters/prune columns across stages; only child recipes and
+  * composition — Catalyst sees each stretch between pins as ONE plan and
+  * is free to push filters/prune columns across its stages; only child
+  * recipes, the parsed scan, `ratio_of` groups, checked aggregates and
   * schema-dependent decisions materialize.
+  *
+  * Pins as leaves. Each pinned input enters every later plan as its cache
+  * entry, an `InMemoryRelation` leaf ([[pin]]), not as the cached
+  * Dataset's lineage. The optimizer stops at the cache either way, so
+  * plans, results and stored blocks are the same. What goes is driver
+  * work: over lineages, every union, projection, ratio join, eager
+  * collect and pin of a parent re-analyzed, and every cache lookup
+  * re-canonicalized, the whole DAG below it. A plan over leaves also
+  * reads every entry it pinned, where a plan over lineages can miss an
+  * entry, recompute the frame inside its own jobs and leave the entry
+  * unfilled.
   *
   * Three-level API mirrors the reference seam (aggregate.py:134, 316,
   * 588): [[getRawData]] -> [[getNormalizedData]] -> [[getAggregatedData]].
@@ -80,13 +92,31 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
   private def laid(df: DataFrame): DataFrame = if (dag.single) df.coalesce(1) else df
 
   /** Frames this benchmark pinned in the cache (raw file scans, child
-    * frames, checked aggregates); released by [[unpersist]]. */
+    * frames, ratio groups, checked aggregates) as the cached Datasets, not
+    * their leaves: `unpersist` finds an entry by its full plan. Released
+    * by [[unpersist]]. */
   private val persistedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private val childBenches = scala.collection.mutable.ArrayBuffer.empty[Benchmark]
 
+  /** Every frame this benchmark and its child benchmarks pinned. */
+  private[graft] def pinnedFrames: Seq[DataFrame] =
+    persistedFrames.synchronized(persistedFrames.toList) ++
+      childBenches.synchronized(childBenches.toList).flatMap(_.pinnedFrames)
+
+  /** Pins `df` in the cache (MEMORY_AND_DISK, spill-safe at scale) and
+    * returns the entry as a leaf frame
+    * ([[org.apache.spark.sql.GraftCacheLeaf]]) to build on. */
+  private def pin(df: DataFrame): DataFrame = {
+    val cached = df.persist()
+    persistedFrames.synchronized { persistedFrames += cached }
+    org.apache.spark.sql.GraftCacheLeaf(cached)
+  }
+
   /** Child-recipe frames (S7), normalized (NOT aggregated), File column
-    * stamped with the child recipe name, cached — evaluated once even
-    * when this benchmark is re-run.
+    * stamped with the child recipe name, pinned — evaluated once even
+    * when this benchmark is re-run. Each frame is the child's cache leaf
+    * ([[pin]]): this recipe's plans see a child as one `InMemoryRelation`,
+    * never the child's own DAG below it.
     *
     * Two DAG-level properties:
     *  - the memo is SHARED across the whole DAG by canonical path:
@@ -120,8 +150,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
           child.dag = d
           childBenches.synchronized { childBenches += child }
           val name = new java.io.File(resolved).getName.replaceAll("\\.[^.]*$", "")
-          val f = laid(child.getNormalizedData().withColumn("File", lit(name))).cache()
-          persistedFrames.synchronized { persistedFrames += f }
+          val f = pin(laid(child.getNormalizedData().withColumn("File", lit(name))))
           // File was just overwritten with a constant literal: its
           // to_numeric outcome is known without a scan. Almost always
           // the basename is non-numeric ('sklearn', 'umath'), but a
@@ -142,20 +171,24 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
 
   lazy val childFrames: Seq[DataFrame] = childEvals.map(_._1)
 
-  /** Release every frame this benchmark (and its children) pinned. */
+  /** Release every frame this benchmark (and its children) pinned. Frames
+    * returned before stay readable but should not be read again: a leaf
+    * of a released entry recomputes its lineage into blocks that no cache
+    * entry tracks (freed only when the frame is garbage-collected). */
   def unpersist(): Unit = {
     persistedFrames.foreach(_.unpersist(false))
     persistedFrames.clear()
     childBenches.foreach(_.unpersist())
   }
 
-  /** Raw scan with the parsed FILE portion persisted (MEMORY_AND_DISK):
+  /** Raw scan with the parsed FILE portion pinned ([[pin]]):
     * normalization makes several eager passes over it (type inference,
     * ratio-base aggregates, pivot key probes) and the regex-carve + CSV
     * parse is the expensive part of each — the reference materializes
-    * every stage outright (eager pandas, aggregate.py:316-585). Child
-    * frames are cached separately ([[childFrames]]), so nothing is pinned
-    * twice. Spill-safe at scale (disk overflow), released by
+    * every stage outright (eager pandas, aggregate.py:316-585). Later
+    * plans read the parse as its cache leaf, so none of them re-analyzes
+    * the scan's per-file lineage. Child frames are pinned separately
+    * ([[childFrames]]), so nothing is pinned twice. Released by
     * [[unpersist]]. In the one-partition layout the scan, the pinned
     * parse and the union with the children are each one partition, so
     * the first pass fills the pin inside its own job.
@@ -175,12 +208,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     val multiPass = relevantCols.nonEmpty || recipe.precomputed.nonEmpty
     val filePart = if (fileFrames.isEmpty) Nil else {
       val u = laid(unionPandas(fileFrames))
-      val p = if (multiPass) {
-        val c = u.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persistedFrames += c
-        c
-      } else u
-      Seq(p)
+      Seq(if (multiPass) pin(u) else u)
     }
     val all = childFrames ++ filePart
     if (all.isEmpty)
@@ -479,6 +507,8 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     * (J2). The base side is always small (post-aggregation) -> broadcast;
     * in the one-partition layout both sides are one partition and join
     * in place (a broadcast would be an exchange and a job of its own).
+    * The grouped frame is pinned as a leaf ([[pin]]), so the base collect
+    * and the final join plan over it, not over `df`'s lineage again.
     * Reference: aggregate.py:354-476. */
   private def joinRatio(df: DataFrame, rc: RatioCall, outCol: String): DataFrame = {
     val f = aggExpr(recipe.aggregation, qcol(rc.column).cast(DoubleType))
@@ -496,8 +526,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     // the reference's second aggregation pass. The collect of that filter
     // materializes the cache AND answers the existence check; the
     // collected rows come back as the broadcast base side.
-    val grp = df.groupBy((series ++ av).map(qcol): _*).agg(f.as("__grp")).persist()
-    persistedFrames += grp
+    val grp = pin(df.groupBy((series ++ av).map(qcol): _*).agg(f.as("__grp")))
     val baseSel = grp.filter(baseCond)
       .select(av.map(qcol) :+ col("__grp").as("__base"): _*)
     val baseCollected = baseSel.collect()
@@ -565,8 +594,8 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     recipe.expected.foreach { expectedCombos =>
       if (series.nonEmpty) {
         import scala.jdk.CollectionConverters._
-        val agg = aggregated.persist()
-        persistedFrames += agg
+        val agg = pin(aggregated)
+        aggregated = agg
         val kv = agg.select((av ++ series ++ values).map(qcol): _*).collect()
         // grid of (axis+variants) combos × expected series combos; av
         // combos come from the aggregate, i.e. groups with non-null keys

@@ -16,10 +16,12 @@ import graft.obs.QueryJobs
   *    (default 2; pass 1 pays JIT and codegen, later passes are the warm
   *    condition the bench headline reports) and prints every Spark job
   *    of each pass: id, wall, stages, tasks and the first graft frame of
-  *    its call site. Each pass's header sums its stages and tasks, and
+  *    its call site. Each pass's header sums its stages and tasks,
   *    counts the classes the pass generated and their Janino compile
-  *    time summed over threads: a warm pass that compiles is missing
-  *    Spark's generated-class cache;
+  *    time summed over threads (a warm pass that compiles is missing
+  *    Spark's generated-class cache), and counts the RDDs the pass left
+  *    cached and their bytes, memory plus disk (a pinned frame whose
+  *    readers miss its cache entry is never filled and drops out);
   *  - `plan <substr> <sfDir>` prints the executed plan;
   *  - `explain <outDir> <suffix> <substr,…> <sfDir>` writes
   *    `.explain("formatted")` of every query matching one of the
@@ -64,10 +66,13 @@ object Inspect {
           val ran = jobs.take()
           val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0
           val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000
+          val cached = spark.sparkContext.getRDDStorageInfo
+          val cachedMb = cached.map(r => r.memSize + r.diskSize).sum / 1e6
           spark.catalog.clearCache()
           println(f"=== pass $pass: $name  $dt%.2fs  ${ran.size} jobs  " +
             f"${ran.map(_.stages).sum} stages  ${ran.map(_.tasks).sum} tasks  " +
-            f"$classes classes compiled in $compileMs ms ===")
+            f"$classes classes compiled in $compileMs ms  " +
+            f"${cached.length} cached RDDs $cachedMb%.2f MB ===")
           for (j <- ran) println(f"job ${j.id}%4d ${j.wallMs}%7d ms " +
             f"${j.stages}%3d stages ${j.tasks}%5d tasks  ${j.frame}")
         }

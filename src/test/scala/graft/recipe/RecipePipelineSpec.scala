@@ -7,7 +7,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftBusDrain
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
@@ -64,6 +65,33 @@ class RecipePipelineSpec extends AnyFunSuite {
     case j: Join => Seq(j)
     case m: InMemoryRelation => joins(m.cacheBuilder.logicalPlan)
   }.flatten
+
+  /** Whether `p` stamps the `File` column with `name` (the child frames
+    * of [[Benchmark.childEvals]]) outside any cache entry, or, with
+    * `inCache`, inside one too. */
+  private def stamps(p: LogicalPlan, name: String, inCache: Boolean): Boolean = p.exists {
+    case m: InMemoryRelation => inCache && stamps(m.cacheBuilder.logicalPlan, name, inCache)
+    case n => n.expressions.exists(_.exists {
+      case Alias(Literal(v, _), "File") => String.valueOf(v) == name
+      case _ => false
+    })
+  }
+
+  /** The parent recipe of [[ratioDag]] plans over its child's cache leaf:
+    * each query reading the child frame reaches it only through an
+    * `InMemoryRelation`, and no relation scanning the child's files
+    * appears in its analyzed plan (plan only, no job). */
+  private def assertChildAsLeaf(queries: Seq[QueryExecution]): Unit = {
+    val parents = queries.filter(qe => stamps(qe.analyzed, "child", inCache = true))
+    // the ratio-base collect and the final collect at least
+    assert(parents.size >= 2, s"${parents.size} parent queries of ${queries.size}")
+    for (qe <- parents) {
+      val scans = qe.analyzed.collectLeaves().filterNot(l =>
+        l.isInstanceOf[InMemoryRelation] || l.isInstanceOf[LocalRelation])
+      assert(scans.isEmpty && !stamps(qe.analyzed, "child", inCache = false),
+        s"the child's lineage in the parent's plan:\n${qe.analyzed}")
+    }
+  }
 
   private val perfCsv =
     """Prefix, size, Time
@@ -853,6 +881,7 @@ class RecipePipelineSpec extends AnyFunSuite {
         assert(nodes.isEmpty, s"${nodes.mkString(", ")} in\n${qe.executedPlan}")
       }
       assert(bench.onePartition)
+      assertChildAsLeaf(queries)
       // same golden values as the one-level ratio_of case
       assert(ratios(rows) == Map(("native", 100L) -> 1.0, ("intel", 100L) -> 2.0,
         ("native", 200L) -> 1.0, ("intel", 200L) -> 0.5))
@@ -878,6 +907,7 @@ class RecipePipelineSpec extends AnyFunSuite {
     val (rows, queries) = queriesOf(bench.getAggregatedData().collect())
     try {
       assert(!bench.onePartition)
+      assertChildAsLeaf(queries)
       // the inference aggregates and the final aggregate are adaptive plans
       assert(queries.count(qe => distributedNodes(qe.executedPlan).contains("AdaptiveSparkPlan")) >= 2,
         queries.map(_.executedPlan.nodeName).mkString(", "))

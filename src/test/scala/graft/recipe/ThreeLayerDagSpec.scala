@@ -94,4 +94,25 @@ class ThreeLayerDagSpec extends AnyFunSuite {
     assert(indM(("fast", "erf")) == 2.0 && indM(("fast", "exp")) == 1.5)
     assert(indM(("base", "erf")) == 1.0 && indM(("base", "exp")) == 1.0)
   }
+
+  test("one evaluation of the corpus summary DAG reads every frame it pinned from its cache") {
+    // q46's DAG: sibling indicators share memoized raw children (daal4py
+    // and sklearn both read raw/sklearn). A parent plan that misses a
+    // pinned frame's cache entry recomputes the frame's lineage inside its
+    // own jobs and leaves the entry unfilled
+    val root = graft.corpus.ReferenceCorpus.ensure(spark, TestSpark.sfDir)
+    val bench = Benchmark(spark, s"$root/summary_indicators.yml")
+    try {
+      assert(bench.getAggregatedData().collect().nonEmpty)
+      val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+      val pinned = bench.pinnedFrames
+      val unread = pinned.filterNot(f =>
+        cache.lookupCachedData(f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+          .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded))
+      assert(pinned.size > 24, s"${pinned.size} pinned frames")
+      assert(unread.isEmpty, s"${unread.size} of ${pinned.size} pinned frames never filled:\n" +
+        unread.map(_.columns.mkString(", ")).mkString("\n"))
+    } finally bench.unpersist()
+  }
 }
