@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types._
 
 import graft.functions.cosine
 import graft.operators.TextAnalysis.{fingerprint, hash60, wordShingles}
@@ -791,13 +791,26 @@ object Dedup {
     * the MapReduce-native CC algorithm: O(log² n) rounds worst case,
     * 2–3 rounds on real dedup graphs (near-clique clusters). Each round
     * is two shuffles (a groupBy-min and an equi-join) over the edge set,
-    * never a driver-side traversal, so it holds at any corpus scale; the
-    * edge set itself only shrinks toward one star edge per non-root node.
+    * so it holds at any corpus scale; the edge set itself only shrinks
+    * toward one star edge per non-root node.
     * Implemented as joins (min-label per node joined back to the edge
     * list) rather than collect_list so a high-degree hub node never
     * materializes its whole neighborhood in one row. Iteration state is
     * persisted per round and the lineage cut, or 20+ rounds of recursive
     * plans would blow up codegen.
+    *
+    * Driver finish: when the canonical edge set, at 16 bytes per edge
+    * (two longs), is within the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (Spark's own bound for a
+    * relation small enough to collect to the driver: 10 MiB, or 655,360
+    * edges, by default) and the ids are integral, the edges are
+    * collected once and contracted by a union-find on the driver
+    * ([[componentsOnDriver]]) instead of the rounds, whose jobs over a
+    * small state cost more in scheduling than in work (`near_dup_cc`:
+    * 36 of 42 jobs per evaluation). The threshold's `-1` turns it off,
+    * as it turns off broadcast joins. The decision is made once, at
+    * entry: the round state keeps about one edge per non-root node, so
+    * it rarely drops under the bound later.
     *
     * Input: (id_a, id_b) pairs, any orientation, duplicates fine.
     * Output: (id, rep) for every id that appears in some edge; rep = min
@@ -813,9 +826,10 @@ object Dedup {
     * `{(3,1),(4,1),(3,2)}`, where no parent is a child, yet 2 would be
     * its own root). Past `maxIter` rounds the call fails loudly.
     *
-    * The persisted entry canon is filled by one `count()` before round
-    * 1, which reads it several times: unfilled, those reads race to fill
-    * it through AQE's table-cache stages, and the jobs per call vary.
+    * The persisted entry canon is filled by one `count()`, which also
+    * gives the edge count the driver finish is decided on. Round 1 reads
+    * the canon several times: unfilled, those reads race to fill it
+    * through AQE's table-cache stages, and the jobs per call vary.
     *
     * The entry canon stays even for callers whose pairs are already
     * distinct and oriented (minhashCandidates, dhashNearDups): its
@@ -870,7 +884,14 @@ object Dedup {
     var e = canon(pairs.select(col(pairs.columns.head).as("u"),
       col(pairs.columns(1)).as("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+    val edges = e.count()
+    val idType = e.select(least(col("u"), col("v"))).schema.head.dataType
+    val bound = e.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (edges * 16 <= bound && fromLong.isDefinedAt(idType)) {
+      val out = componentsOnDriver(e, edges.toInt, idType)
+      e.unpersist()
+      return out
+    }
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
@@ -892,6 +913,57 @@ object Dedup {
     e.select(col("u").as("id"), col("v").as("rep"))
       .unionAll(e.select(col("v").as("id"), col("v").as("rep")))
       .distinct()
+  }
+
+  /** The integral id types the driver finish handles, each with the
+    * conversion of a long back to the type. */
+  private val fromLong: PartialFunction[DataType, Long => Any] = {
+    case ByteType => _.toByte
+    case ShortType => _.toShort
+    case IntegerType => _.toInt
+    case LongType => x => x
+  }
+
+  /** [[connectedComponents]]' output for the `n` canonical edges `(u, v)`
+    * of `e`, computed on the driver. One job collects each partition's
+    * edges as one packed `Array[Long]`; the ids are relabelled to
+    * `0 until m` by sort and binary search, so the union-find runs over
+    * `Int` arrays: about 40 bytes of driver memory per edge. Sorted
+    * labels keep id order, so joining two roots under the smaller one
+    * keeps each component's minimum id as its root. The result is a local
+    * frame with the rounds' schema. */
+  private def componentsOnDriver(e: DataFrame, n: Int, idType: DataType): DataFrame = {
+    import java.util.Arrays
+    val packed = e.select(col("u").cast(LongType), col("v").cast(LongType))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val b = Array.newBuilder[Long]
+        rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect()
+    val us = new Array[Long](n)
+    val vs = new Array[Long](n)
+    var k = 0
+    for (p <- packed; i <- p.indices by 2) { us(k) = p(i); vs(k) = p(i + 1); k += 1 }
+    val ids = us ++ vs
+    Arrays.sort(ids)
+    var m = 0
+    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) { ids(m) = ids(i); m += 1 }
+    def label(id: Long): Int = Arrays.binarySearch(ids, 0, m, id)
+    val parent = Array.range(0, m)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    for (i <- 0 until n) {
+      val (a, b) = (find(label(us(i))), find(label(vs(i))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val box = fromLong(idType)
+    val rows = Array.tabulate(m)(i => Row(box(ids(i)), box(ids(find(i)))))
+    e.sparkSession.createDataFrame(Arrays.asList(rows: _*),
+      StructType(Seq(StructField("id", idType), StructField("rep", idType))))
   }
 
   /** INCREMENTAL connected components — the daily-ingest contract
@@ -927,7 +999,8 @@ object Dedup {
   /** Dedup clustering end-to-end: MinHash-LSH candidates above a Jaccard
     * threshold, contracted to clusters; every document gets its cluster
     * representative (min id) and a keep flag. The full scale pipeline:
-    * bucket equi-join candidates -> exact verify -> distributed CC. */
+    * bucket equi-join candidates -> exact verify -> CC (distributed
+    * rounds, or a driver finish on a small edge set). */
   def dedupClusters(df: DataFrame, idCol: String, textCol: String,
                     threshold: Double, k: Int = 12, bands: Int = 4,
                     shingleN: Int = 3): DataFrame = {

@@ -455,7 +455,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     // try_cast(double) + an integral regex, each ~2-6 µs on text values
     // (try_cast pays a caught NumberFormatException per non-numeric cell).
     // The class is computed ONCE per cell in an explicit projection BELOW
-    // the aggregate (cls is null iff the cell is null, so all four checks
+    // the aggregate (cls is null iff the cell is null, so all three checks
     // read the projected int) — relying on aggregate-side subexpression
     // elimination to dedupe a per-check classifier call is not a
     // guarantee codegen makes, and the projection also prunes the
@@ -468,8 +468,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
       Seq(
         sum(when(cls === lit(3), 1L).otherwise(0L)).as(s"${c}__baddbl"),
         sum(when(cls > lit(1), 1L).otherwise(0L)).as(s"${c}__badlong"),
-        sum(when(cls.isNull, 1L).otherwise(0L)).as(s"${c}__nulls"),
-        count(cls).as(s"${c}__nnz"))
+        sum(when(cls.isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
     } :+ count(lit(1L)).as("__nrows")
     val row = proj.select(checks.toIndexedSeq: _*).collect()(0)
     val badOf = stringCols.map(c => c -> row.getAs[Long](s"${c}__baddbl")).toMap

@@ -16,12 +16,15 @@ import graft.obs.QueryJobs
   *    (default 2; pass 1 pays JIT and codegen, later passes are the warm
   *    condition the bench headline reports) and prints every Spark job
   *    of each pass: id, wall, stages, tasks and the first graft frame of
-  *    its call site. Each pass's header sums its stages and tasks,
-  *    counts the classes the pass generated and their Janino compile
-  *    time summed over threads (a warm pass that compiles is missing
-  *    Spark's generated-class cache), and counts the RDDs the pass left
-  *    cached and their bytes, memory plus disk (a pinned frame whose
-  *    readers miss its cache entry is never filled and drops out);
+  *    its call site. Each pass's header gives its wall and the process's
+  *    CPU seconds over it (JIT, GC and every Spark thread: CPU near
+  *    cores × wall means the pass is contended, not idle between jobs),
+  *    sums its stages and tasks, counts the classes the pass generated
+  *    and their Janino compile time summed over threads (a warm pass
+  *    that compiles is missing Spark's generated-class cache), and
+  *    counts the RDDs the pass left cached and their bytes, memory plus
+  *    disk (a pinned frame whose readers miss its cache entry is never
+  *    filled and drops out);
   *  - `plan <substr> <sfDir>` prints the executed plan;
   *  - `explain <outDir> <suffix> <substr,…> <sfDir>` writes
   *    `.explain("formatted")` of every query matching one of the
@@ -55,21 +58,25 @@ object Inspect {
         val name = matching(Seq(want)).head
         val passes = rest.headOption.map(_.toInt).getOrElse(2)
         val jobs = QueryJobs.attach(spark)
+        val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+          .asInstanceOf[com.sun.management.OperatingSystemMXBean]
         graft.corpus.ReferenceCorpus.ensure(spark, sfDir)
         for (pass <- 1 to passes) {
           jobs.take()
           val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val compileNs0 = CodeGenerator.compileTime
+          val cpu0 = os.getProcessCpuTime
           val t0 = System.nanoTime()
           query(name, sfDir).count()
           val dt = (System.nanoTime() - t0) / 1e9
+          val cpu = (os.getProcessCpuTime - cpu0) / 1e9
           val ran = jobs.take()
           val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0
           val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000
           val cached = spark.sparkContext.getRDDStorageInfo
           val cachedMb = cached.map(r => r.memSize + r.diskSize).sum / 1e6
           spark.catalog.clearCache()
-          println(f"=== pass $pass: $name  $dt%.2fs  ${ran.size} jobs  " +
+          println(f"=== pass $pass: $name  $dt%.2fs  $cpu%.1f CPU-s  ${ran.size} jobs  " +
             f"${ran.map(_.stages).sum} stages  ${ran.map(_.tasks).sum} tasks  " +
             f"$classes classes compiled in $compileMs ms  " +
             f"${cached.length} cached RDDs $cachedMb%.2f MB ===")
