@@ -1,8 +1,8 @@
 package graft.recipe
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
 
 import graft.recipe.ExprCompiler.RatioCall
 
@@ -15,16 +15,20 @@ import graft.recipe.ExprCompiler.RatioCall
   * recipes, the parsed scan, `ratio_of` groups, checked aggregates and
   * schema-dependent decisions materialize.
   *
-  * Pins as leaves. Each pinned input enters every later plan as its cache
-  * entry, an `InMemoryRelation` leaf ([[pin]]), not as the cached
-  * Dataset's lineage. The optimizer stops at the cache either way, so
-  * plans, results and stored blocks are the same. What goes is driver
-  * work: over lineages, every union, projection, ratio join, eager
-  * collect and pin of a parent re-analyzed, and every cache lookup
-  * re-canonicalized, the whole DAG below it. A plan over leaves also
-  * reads every entry it pinned, where a plan over lineages can miss an
-  * entry, recompute the frame inside its own jobs and leave the entry
-  * unfilled.
+  * Pins as leaves. Each pinned input enters every later plan as a leaf
+  * ([[pin]]), never as the lineage that computed it: over lineages,
+  * every union, projection, ratio join, eager collect and pin of a
+  * parent re-analyzed the whole DAG below it. What the leaf is depends on
+  * the layout. In the distributed layout a pin is the frame's cache
+  * entry, an `InMemoryRelation`; the optimizer stops at the cache either
+  * way, so plans, results and stored blocks are the cached Dataset's, and
+  * a plan over leaves reads every entry it pinned, where a plan over
+  * lineages can miss an entry and leave it unfilled. In the one-partition
+  * layout a pin collects the frame to the driver and continues from its
+  * rows as a `LocalRelation`: nothing is cached, and Catalyst's
+  * `ConvertToLocalRelation` folds the renames, filters, precomputed
+  * columns and casts above it into a new local relation, so a collect of
+  * such a plan runs no Spark job at all.
   *
   * Three-level API mirrors the reference seam (aggregate.py:134, 316,
   * 588): [[getRawData]] -> [[getNormalizedData]] -> [[getAggregatedData]].
@@ -37,12 +41,14 @@ import graft.recipe.ExprCompiler.RatioCall
   * recipe decides ONE layout for its whole DAG ([[Benchmark.Dag]]): when
   * every recipe in the tree scans as one partition by the scan's own
   * partition rule (`CsvSource.scansAsOnePartition`), the DAG is planned
-  * in a clone of the caller's session with AQE off, and its frames are
-  * kept in one partition — so every eager probe and the final aggregate
-  * plan no exchange (q46: 46 jobs). The caller's session keeps AQE.
-  * Larger trees keep the distributed layout: their shuffle-bound steps
-  * depend on AQE's partition coalescing, and one partition would
-  * serialize the CPU-bound parse of a multi-MB raw recipe.
+  * in a clone of the caller's session with AQE off, its materializations
+  * are local relations (above) and type inference classifies the
+  * collected rows on the driver, and every group-by, join and pivot reads
+  * its input in one partition ([[laid]]) — so no plan has an exchange.
+  * The caller's session keeps AQE. Larger trees keep the distributed
+  * layout: their shuffle-bound steps depend on AQE's partition
+  * coalescing, and one partition would serialize the CPU-bound parse of a
+  * multi-MB raw recipe.
   */
 class Benchmark(val recipe: Recipe, spark: SparkSession,
                 sharedChildren: scala.collection.mutable.Map[String, scala.concurrent.Future[(DataFrame, Map[String, Boolean])]] =
@@ -88,35 +94,54 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     * (false before its first evaluation). */
   private[graft] def onePartition: Boolean = dag != null && dag.single
 
-  /** `df` in the DAG's layout: one partition when the DAG is small. */
+  /** `df` in the DAG's layout: one partition when the DAG is small. Laid
+    * by the consumers that would otherwise plan an exchange (group-bys,
+    * joins, the pivot), not by producers: a repartition between two
+    * materializations would keep Catalyst from folding the frame into a
+    * local relation. */
   private def laid(df: DataFrame): DataFrame = if (dag.single) df.coalesce(1) else df
+
+  /** `rows` of `schema` as a frame of the DAG's session (a
+    * `LocalRelation`). */
+  private def local(rows: Array[Row], schema: StructType): DataFrame =
+    dag.session.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Frames this benchmark pinned in the cache (raw file scans, child
     * frames, ratio groups, checked aggregates) as the cached Datasets, not
     * their leaves: `unpersist` finds an entry by its full plan. Released
-    * by [[unpersist]]. */
+    * by [[unpersist]]. Empty in the one-partition layout. */
   private val persistedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private val childBenches = scala.collection.mutable.ArrayBuffer.empty[Benchmark]
 
-  /** Every frame this benchmark and its child benchmarks pinned. */
+  /** Every frame this benchmark and its child benchmarks pinned in the
+    * cache. */
   private[graft] def pinnedFrames: Seq[DataFrame] =
     persistedFrames.synchronized(persistedFrames.toList) ++
       childBenches.synchronized(childBenches.toList).flatMap(_.pinnedFrames)
 
-  /** Pins `df` in the cache (MEMORY_AND_DISK, spill-safe at scale) and
-    * returns the entry as a leaf frame
-    * ([[org.apache.spark.sql.GraftCacheLeaf]]) to build on. */
-  private def pin(df: DataFrame): DataFrame = {
-    val cached = df.persist()
-    persistedFrames.synchronized { persistedFrames += cached }
-    org.apache.spark.sql.GraftCacheLeaf(cached)
-  }
+  /** Materializes `df` and returns a leaf frame to build on. In the
+    * distributed layout the frame is pinned in the cache (MEMORY_AND_DISK,
+    * spill-safe at scale) and the leaf is its entry
+    * ([[org.apache.spark.sql.GraftCacheLeaf]]); in the one-partition
+    * layout its rows are collected to the driver and the leaf is a local
+    * relation of them ([[local]]). */
+  private def pin(df: DataFrame): DataFrame =
+    if (dag.single) local(df.collect(), df.schema)
+    else {
+      val cached = df.persist()
+      persistedFrames.synchronized { persistedFrames += cached }
+      org.apache.spark.sql.GraftCacheLeaf(cached)
+    }
 
   /** Child-recipe frames (S7), normalized (NOT aggregated), File column
     * stamped with the child recipe name, pinned — evaluated once even
-    * when this benchmark is re-run. Each frame is the child's cache leaf
-    * ([[pin]]): this recipe's plans see a child as one `InMemoryRelation`,
-    * never the child's own DAG below it.
+    * when this benchmark is re-run. Each frame is the child's leaf
+    * ([[pin]]): this recipe's plans see a child as one `InMemoryRelation`
+    * (distributed layout) or one `LocalRelation` of its collected rows
+    * (one-partition layout), never the child's own DAG below it. In the
+    * one-partition layout the collect runs no job when the child's
+    * normalized plan folds into a local relation, as it does for a child
+    * whose last materialization is its own inference or raw parse.
     *
     * Two DAG-level properties:
     *  - the memo is SHARED across the whole DAG by canonical path:
@@ -150,7 +175,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
           child.dag = d
           childBenches.synchronized { childBenches += child }
           val name = new java.io.File(resolved).getName.replaceAll("\\.[^.]*$", "")
-          val f = pin(laid(child.getNormalizedData().withColumn("File", lit(name))))
+          val f = pin(child.getNormalizedData().withColumn("File", lit(name)))
           // File was just overwritten with a constant literal: its
           // to_numeric outcome is known without a scan. Almost always
           // the basename is non-numeric ('sklearn', 'umath'), but a
@@ -171,10 +196,13 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
 
   lazy val childFrames: Seq[DataFrame] = childEvals.map(_._1)
 
-  /** Release every frame this benchmark (and its children) pinned. Frames
-    * returned before stay readable but should not be read again: a leaf
-    * of a released entry recomputes its lineage into blocks that no cache
-    * entry tracks (freed only when the frame is garbage-collected). */
+  /** Release every frame this benchmark (and its children) pinned in the
+    * cache. Frames returned before stay readable but should not be read
+    * again: a leaf of a released entry recomputes its lineage into blocks
+    * that no cache entry tracks (freed only when the frame is
+    * garbage-collected). In the one-partition layout nothing was cached —
+    * its leaves are local relations, which hold their own rows — so this
+    * releases nothing there. */
   def unpersist(): Unit = {
     persistedFrames.foreach(_.unpersist(false))
     persistedFrames.clear()
@@ -186,12 +214,14 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     * ratio-base aggregates, pivot key probes) and the regex-carve + CSV
     * parse is the expensive part of each — the reference materializes
     * every stage outright (eager pandas, aggregate.py:316-585). Later
-    * plans read the parse as its cache leaf, so none of them re-analyzes
-    * the scan's per-file lineage. Child frames are pinned separately
-    * ([[childFrames]]), so nothing is pinned twice. Released by
-    * [[unpersist]]. In the one-partition layout the scan, the pinned
-    * parse and the union with the children are each one partition, so
-    * the first pass fills the pin inside its own job.
+    * plans read the parse as its leaf, so none of them re-analyzes the
+    * scan's per-file lineage. Child frames are pinned separately
+    * ([[childFrames]]), so nothing is pinned twice. In the distributed
+    * layout the leaf is the parse's cache entry, released by
+    * [[unpersist]]. In the one-partition layout the pin is the parse's
+    * one job, a single task, and the leaf a local relation of its rows;
+    * the union with the children stays bare, and the consumers that
+    * need it in one partition lay it out themselves ([[laid]]).
     *
     * The pin is conditional on the recipe actually re-reading the scan:
     * the CSV parse is all-string, so the P5 inference pass runs (one
@@ -207,13 +237,14 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
       d.listing(patterns, recipe.baseDir))
     val multiPass = relevantCols.nonEmpty || recipe.precomputed.nonEmpty
     val filePart = if (fileFrames.isEmpty) Nil else {
-      val u = laid(unionPandas(fileFrames))
-      Seq(if (multiPass) pin(u) else u)
+      val u = unionPandas(fileFrames)
+      // the pin is the scan's consumer: one task reads every file
+      Seq(if (multiPass) pin(laid(u)) else u)
     }
     val all = childFrames ++ filePart
     if (all.isEmpty)
       throw RecipeError("recipe has no inputs (no path matches, no child configs)")
-    laid(unionPandas(all))
+    unionPandas(all)
   }
 
   /** Union-by-name with pandas-concat dtype parity: a column appearing
@@ -350,9 +381,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
         df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
       val valueType = if (packedNumeric) "double" else "string"
       val cast = df.withColumns(pc.columns.map(c => c -> q(c).cast(valueType)).toMap)
-      // unpivot's Expand reports no partitioning: re-lay it out, or the
-      // next aggregate plans an exchange above one partition
-      df = laid(cast.unpivot(ids.map(q), pc.columns.map(q).toArray, pc.name, pc.value))
+      df = cast.unpivot(ids.map(q), pc.columns.map(q).toArray, pc.name, pc.value)
     }
 
     // unpack / pivot (R2). Null pivot keys become a 'NaN' column (the
@@ -360,7 +389,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     // natively, so only the pivot column needs the fill.
     for (pc <- recipe.unpack) {
       val index = df.columns.filterNot(c => c == pc.name || c == pc.value)
-      df = df
+      df = laid(df)
         .groupBy(index.map(qcol): _*)
         .pivot(coalesce(col(pc.name).cast(StringType), lit("NaN")))
         .agg(first(col(pc.value), ignoreNulls = true))
@@ -408,8 +437,9 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
       val bad = inferBad.get(v) match {
         case Some(n) => n > 0
         case None =>
-          df.filter(qcol(v).isNotNull && qcol(v).try_cast(DoubleType).isNull)
-            .limit(1).count() > 0
+          val cells = df.filter(qcol(v).isNotNull && qcol(v).try_cast(DoubleType).isNull)
+          if (dag.single) cells.select(qcol(v)).collect().nonEmpty
+          else cells.limit(1).count() > 0
       }
       if (bad) throw RecipeError("Found non-numerical data in values columns!")
     }
@@ -443,48 +473,63 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
   }
 
   /** pandas `to_numeric(errors='ignore')` per string column: promote to
-    * long (no nulls, all integral) or double (all castable), else leave.
-    * One aggregation job checks every candidate column at once; the same
-    * job also returns the total row count (None when no job ran) and the
-    * per-column non-castable counts (reused by the P6 values check). */
-  private def inferTypesCounting(df: DataFrame): (DataFrame, Option[Long], Map[String, Long]) = {
+    * long (no nulls, all integral) or double (all castable), else leave
+    * ([[Benchmark.NumCounts.cast]]). One scan checks every candidate
+    * column at once and also returns the total row count (None when no
+    * scan ran) and the per-column non-castable counts (reused by the P6
+    * values check). In the distributed layout the scan is one aggregation
+    * job; in the one-partition layout it is a collect of the frame
+    * (no job when the frame folds into a local relation), classified on
+    * the driver with the same classifier, and the result continues from
+    * the collected rows. */
+  private[recipe] def inferTypesCounting(df: DataFrame): (DataFrame, Option[Long], Map[String, Long]) = {
     val stringCols = df.schema.fields.filter(_.dataType == StringType).map(_.name)
-      .filter(relevantCols.contains)
+      .filter(relevantCols.contains).toIndexedSeq
     if (stringCols.isEmpty) return (df, None, Map.empty)
-    // one native exception-free classifier per value replaces
-    // try_cast(double) + an integral regex, each ~2-6 µs on text values
-    // (try_cast pays a caught NumberFormatException per non-numeric cell).
-    // The class is computed ONCE per cell in an explicit projection BELOW
-    // the aggregate (cls is null iff the cell is null, so all three checks
-    // read the projected int) — relying on aggregate-side subexpression
-    // elimination to dedupe a per-check classifier call is not a
-    // guarantee codegen makes, and the projection also prunes the
-    // (persisted) scan to exactly the candidate columns.
-    val proj = df.select(stringCols.zipWithIndex.map { case (c, i) =>
+    val (scanned, rows, counts) =
+      if (dag.single) {
+        val collected = df.collect()
+        (local(collected, df.schema), collected.length.toLong,
+          Benchmark.countOnDriver(collected, stringCols.map(df.schema.fieldIndex)))
+      } else {
+        val (n, cs) = countByAggregate(df, stringCols)
+        (df, n, cs)
+      }
+    // ONE projection for every promoted column: a per-column withColumn
+    // fold re-analyzes a one-projection-deeper plan per column (O(k²)
+    // analyzer work per inference pass, paid by every recipe of a DAG)
+    val casts = stringCols.zip(counts).flatMap { case (c, k) =>
+      k.cast.map(t => c -> qcol(c).cast(t))
+    }.toMap
+    val typed = if (casts.isEmpty) scanned else scanned.withColumns(casts)
+    (typed, Some(rows), stringCols.zip(counts.map(_.badDbl)).toMap)
+  }
+
+  /** The row count and each of `cols`' [[Benchmark.NumCounts]] from one
+    * aggregation job over `df`. One native exception-free classifier per
+    * value replaces try_cast(double) + an integral regex, each ~2-6 µs on
+    * text values (try_cast pays a caught NumberFormatException per
+    * non-numeric cell). The class is computed ONCE per cell in an explicit
+    * projection BELOW the aggregate (cls is null iff the cell is null, so
+    * all three checks read the projected int) — relying on aggregate-side
+    * subexpression elimination to dedupe a per-check classifier call is
+    * not a guarantee codegen makes, and the projection also prunes the
+    * (persisted) scan to exactly the candidate columns. */
+  private def countByAggregate(df: DataFrame, cols: Seq[String]): (Long, Seq[Benchmark.NumCounts]) = {
+    val proj = df.select(cols.zipWithIndex.map { case (c, i) =>
       call_function("graft_numclass", qcol(c)).as(s"__cls_$i")
-    }.toIndexedSeq: _*)
-    val checks = stringCols.zipWithIndex.flatMap { case (c, i) =>
+    }: _*)
+    val checks = cols.zipWithIndex.flatMap { case (c, i) =>
       val cls = col(s"__cls_$i")
       Seq(
         sum(when(cls === lit(3), 1L).otherwise(0L)).as(s"${c}__baddbl"),
         sum(when(cls > lit(1), 1L).otherwise(0L)).as(s"${c}__badlong"),
         sum(when(cls.isNull, 1L).otherwise(0L)).as(s"${c}__nulls"))
     } :+ count(lit(1L)).as("__nrows")
-    val row = proj.select(checks.toIndexedSeq: _*).collect()(0)
-    val badOf = stringCols.map(c => c -> row.getAs[Long](s"${c}__baddbl")).toMap
-    // ONE projection for every promoted column: a per-column withColumn
-    // fold re-analyzes a one-projection-deeper plan per column (O(k²)
-    // analyzer work per inference pass, paid by every recipe of a DAG)
-    val casts = stringCols.flatMap { c =>
-      val badDbl = badOf(c)
-      val badLong = row.getAs[Long](s"${c}__badlong")
-      val nulls = row.getAs[Long](s"${c}__nulls")
-      if (badDbl > 0) None
-      else if (badLong == 0 && nulls == 0) Some(c -> qcol(c).cast("long"))
-      else Some(c -> qcol(c).cast("double"))
-    }.toMap
-    val typed = if (casts.isEmpty) df else df.withColumns(casts)
-    (typed, Some(row.getAs[Long]("__nrows")), badOf)
+    val row = proj.select(checks: _*).collect()(0)
+    (row.getAs[Long]("__nrows"), cols.map(c => Benchmark.NumCounts(
+      row.getAs[Long](s"${c}__baddbl"), row.getAs[Long](s"${c}__badlong"),
+      row.getAs[Long](s"${c}__nulls"))))
   }
 
   private def aggExpr(fn: String, c: Column): Column = fn match {
@@ -504,11 +549,14 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
   /** ratio_of family (A4/A5): aggregate base and per-series groups by
     * axis+variants, divide, join back per-row on series+axis+variants
     * (J2). The base side is always small (post-aggregation) -> broadcast;
-    * in the one-partition layout both sides are one partition and join
-    * in place (a broadcast would be an exchange and a job of its own).
-    * The grouped frame is pinned as a leaf ([[pin]]), so the base collect
-    * and the final join plan over it, not over `df`'s lineage again.
-    * Reference: aggregate.py:354-476. */
+    * in the one-partition layout both sides are laid out in one partition
+    * and join in place (a broadcast would be an exchange and a job of its
+    * own). The grouped frame is pinned as a leaf ([[pin]]), so the base
+    * collect and the final join plan over it, not over `df`'s lineage
+    * again: its cache entry in the distributed layout, where the base
+    * collect fills the entry, and a local relation of its collected rows
+    * in the one-partition layout, where the grouping is the pin's one job
+    * and the base collect runs none. Reference: aggregate.py:354-476. */
   private def joinRatio(df: DataFrame, rc: RatioCall, outCol: String): DataFrame = {
     val f = aggExpr(recipe.aggregation, qcol(rc.column).cast(DoubleType))
     val series = recipe.series
@@ -523,9 +571,9 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     // exactly the group rows whose series == the ratio kwargs (same rows,
     // same aggregate), so a filter over the cached grouped frame replaces
     // the reference's second aggregation pass. The collect of that filter
-    // materializes the cache AND answers the existence check; the
-    // collected rows come back as the broadcast base side.
-    val grp = pin(df.groupBy((series ++ av).map(qcol): _*).agg(f.as("__grp")))
+    // answers the existence check (in the distributed layout it also
+    // fills the cache); the collected rows come back as the base side.
+    val grp = pin(laid(df).groupBy((series ++ av).map(qcol): _*).agg(f.as("__grp")))
     val baseSel = grp.filter(baseCond)
       .select(av.map(qcol) :+ col("__grp").as("__base"): _*)
     val baseCollected = baseSel.collect()
@@ -536,13 +584,12 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
       throw RecipeError(s"Trying to use series value ${series.map(kwMap)} in ratio_of " +
         "operation, but that value/combination doesn't exist in the dataframe!")
     // a local relation reports no partitioning: lay it out too
-    val base = laid(dag.session.createDataFrame(
-      java.util.Arrays.asList(baseCollected: _*), baseSel.schema))
+    val base = laid(local(baseCollected, baseSel.schema))
     val (hint, crossHint) =
       if (dag.single) ("shuffle_hash", "shuffle_replicate_nl") else ("broadcast", "broadcast")
     val joined =
-      if (av.isEmpty) grp.crossJoin(base.hint(crossHint))
-      else grp.join(base.hint(hint), av)
+      if (av.isEmpty) laid(grp).crossJoin(base.hint(crossHint))
+      else laid(grp).join(base.hint(hint), av)
     val ratio0 = if (rc.invert) col("__base") / col("__grp") else col("__grp") / col("__base")
     val ratio = rc.func match {
       case "ratio_of" | "ratio_of_inv" => ratio0
@@ -552,7 +599,7 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
       case other => throw RecipeError(s"unknown ratio function $other")
     }
     val ratios = laid(joined.select((series ++ av).map(qcol) :+ ratio.as(outCol): _*))
-    df.join(ratios.hint(hint), series ++ av, "left")
+    laid(df).join(ratios.hint(hint), series ++ av, "left")
   }
 
   // ---------------- aggregate ----------------
@@ -580,8 +627,8 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
     val aggs = values.map(v => aggExpr(recipe.aggregation, qcol(v)).as(v)) ++
       othercols.map(c => first(qcol(c), ignoreNulls = true).as(c))
     var aggregated =
-      if (keys.isEmpty) df.groupBy().agg(aggs.head, aggs.tail: _*)
-      else df.filter(keys.map(qcol(_).isNotNull).reduce(_ && _))
+      if (keys.isEmpty) laid(df).groupBy().agg(aggs.head, aggs.tail: _*)
+      else laid(df.filter(keys.map(qcol(_).isNotNull).reduce(_ && _)))
         .groupBy(keys.map(qcol): _*).agg(aggs.head, aggs.tail: _*)
 
     // A7 + A8, driver-side from ONE pass over the aggregated frame (small
@@ -655,6 +702,38 @@ class Benchmark(val recipe: Recipe, spark: SparkSession,
 }
 
 object Benchmark {
+  import graft.expressions.StringNumClass
+
+  /** What one inference scan found in a string column, by
+    * [[StringNumClass]]: cells that do not cast to double, cells that are
+    * not integral (castable or not), and null cells. */
+  private final case class NumCounts(badDbl: Long, badLong: Long, nulls: Long) {
+    /** The type pandas `to_numeric` promotes the column to: long when
+      * every cell is integral and none is null, double when every
+      * non-null cell casts, none when a cell does not. */
+    def cast: Option[String] =
+      if (badDbl > 0) None
+      else if (badLong == 0 && nulls == 0) Some("long")
+      else Some("double")
+  }
+
+  /** The [[NumCounts]] of the string fields at `fields` over collected
+    * `rows`: the counts the inference aggregate sums, with the same
+    * classifier. */
+  private def countOnDriver(rows: Array[Row], fields: Seq[Int]): Seq[NumCounts] =
+    fields.map { i =>
+      var badDbl, badLong, nulls = 0L
+      for (r <- rows)
+        if (r.isNullAt(i)) nulls += 1
+        else {
+          val cls = StringNumClass.classify(
+            org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(i)))
+          if (cls == StringNumClass.NONE) badDbl += 1
+          if (cls > StringNumClass.INTEGRAL) badLong += 1
+        }
+      NumCounts(badDbl, badLong, nulls)
+    }
+
   /** A child config's path, relative to its parent recipe's directory. */
   private def resolve(parent: Recipe, cfgPath: String): String =
     if (new java.io.File(cfgPath).isAbsolute) cfgPath
@@ -714,6 +793,10 @@ object Benchmark {
       s.conf.set("spark.sql.adaptive.enabled", "false")
       s.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
       s.conf.set("spark.sql.maxSinglePartitionBytes", Long.MaxValue.toString)
+      // a local relation scans as one partition, as every frame of this
+      // layout is one: a collect over a union or melt of local relations
+      // then runs one task per relation, not one per core
+      s.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
       s
     }
   }

@@ -20,6 +20,13 @@ import graft.recipe.{LineAction, LineFilter}
   * Usage: scripts/run.sh graft.tools.Scale <leg,…> <sfDir> [mults…]
   * (mults default to each leg's own list, mostly 1 4 16; legs over a
   * synthetic fixture ignore sfDir, single-size legs ignore mults).
+  *
+  * One JVM runs a leg's multipliers in sequence, so a later multiplier
+  * inherits the classes and plan shapes the earlier ones compiled, and
+  * its wall depends on which code paths they took. Compare one
+  * multiplier across two builds only in fresh JVMs (one multiplier per
+  * run), or with the same multiplier list in the same order on both
+  * sides.
   */
 object Scale {
 

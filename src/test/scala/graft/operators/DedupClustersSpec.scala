@@ -19,6 +19,22 @@ class DedupClustersSpec extends AnyFunSuite {
     Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** Each endpoint of `edges` mapped to the minimum id of its component,
+    * by a union-find independent of the engine's. A self-loop adds no
+    * node, as in `connectedComponents`. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges if a != b) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toList.map(x => x -> find(x)).toMap
+  }
+
   /** `body` with the broadcast threshold at -1, which keeps connected
     * components on its rounds; the prior state is restored exactly. */
   private def onRounds[A](body: => A): A = {
@@ -143,17 +159,7 @@ class DedupClustersSpec extends AnyFunSuite {
           .map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
         rnd.shuffle(core ++ extra :+ (base + 999L, base + 999L))
       }
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      for ((a, b) <- edges if a != b) {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expect = parent.keys.toList.map(x => x -> find(x)).toMap
-      assert(cc(edges: _*) == expect)
+      assert(cc(edges: _*) == unionFind(edges))
     })
 
     test(s"ccAppend(build(even), odd) equals the full rebuild exactly$suffix")(under {
@@ -166,7 +172,9 @@ class DedupClustersSpec extends AnyFunSuite {
       val base = Dedup.connectedComponents(even.toDF("id_a", "id_b"))
       val got = Dedup.ccAppend(base, odd.toDF("id_a", "id_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == cc(all: _*))
+      val expect = unionFind(all)
+      assert(cc(all: _*) == expect)
+      assert(got == expect)
       // sanity: the append DID merge (fewer components than the even build)
       val evenReps = base.select("rep").distinct().count()
       assert(got.values.toSet.size < evenReps)

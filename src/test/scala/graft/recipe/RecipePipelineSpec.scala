@@ -77,17 +77,30 @@ class RecipePipelineSpec extends AnyFunSuite {
     })
   }
 
-  /** The parent recipe of [[ratioDag]] plans over its child's cache leaf:
-    * each query reading the child frame reaches it only through an
-    * `InMemoryRelation`, and no relation scanning the child's files
-    * appears in its analyzed plan (plan only, no job). */
-  private def assertChildAsLeaf(queries: Seq[QueryExecution]): Unit = {
-    val parents = queries.filter(qe => stamps(qe.analyzed, "child", inCache = true))
-    // the ratio-base collect and the final collect at least
+  /** Whether leaf `p` holds the child frame of [[ratioDag]]: a cache
+    * entry whose plan stamps it, or a local relation whose `File` column
+    * carries the stamp as data (the child's collected rows). */
+  private def childLeaf(p: LogicalPlan): Boolean = p match {
+    case m: InMemoryRelation => stamps(m.cacheBuilder.logicalPlan, "child", inCache = true)
+    case l: LocalRelation =>
+      val i = l.output.indexWhere(_.name == "File")
+      i >= 0 && l.data.exists(r => !r.isNullAt(i) && r.getUTF8String(i).toString == "child")
+    case _ => false
+  }
+
+  /** The parent recipe of [[ratioDag]] plans over its child's leaf, of
+    * class `leaf` (`InMemoryRelation` in the distributed layout,
+    * `LocalRelation` in the one-partition one): each query reading the
+    * child frame reaches it only through such a leaf, and no relation
+    * scanning the child's files appears in its analyzed plan (plan only,
+    * no job). */
+  private def assertChildAsLeaf(queries: Seq[QueryExecution], leaf: Class[_ <: LogicalPlan]): Unit = {
+    val parents = queries.filter(_.analyzed.exists(n => leaf.isInstance(n) && childLeaf(n)))
+    // the ratio group's pin and the final collect at least
     assert(parents.size >= 2, s"${parents.size} parent queries of ${queries.size}")
     for (qe <- parents) {
       val scans = qe.analyzed.collectLeaves().filterNot(l =>
-        l.isInstanceOf[InMemoryRelation] || l.isInstanceOf[LocalRelation])
+        leaf.isInstance(l) || l.isInstanceOf[LocalRelation])
       assert(scans.isEmpty && !stamps(qe.analyzed, "child", inCache = false),
         s"the child's lineage in the parent's plan:\n${qe.analyzed}")
     }
@@ -881,7 +894,7 @@ class RecipePipelineSpec extends AnyFunSuite {
         assert(nodes.isEmpty, s"${nodes.mkString(", ")} in\n${qe.executedPlan}")
       }
       assert(bench.onePartition)
-      assertChildAsLeaf(queries)
+      assertChildAsLeaf(queries, classOf[LocalRelation])
       // same golden values as the one-level ratio_of case
       assert(ratios(rows) == Map(("native", 100L) -> 1.0, ("intel", 100L) -> 2.0,
         ("native", 200L) -> 1.0, ("intel", 200L) -> 0.5))
@@ -907,7 +920,7 @@ class RecipePipelineSpec extends AnyFunSuite {
     val (rows, queries) = queriesOf(bench.getAggregatedData().collect())
     try {
       assert(!bench.onePartition)
-      assertChildAsLeaf(queries)
+      assertChildAsLeaf(queries, classOf[InMemoryRelation])
       // the inference aggregates and the final aggregate are adaptive plans
       assert(queries.count(qe => distributedNodes(qe.executedPlan).contains("AdaptiveSparkPlan")) >= 2,
         queries.map(_.executedPlan.nodeName).mkString(", "))
@@ -929,8 +942,9 @@ class RecipePipelineSpec extends AnyFunSuite {
     try {
       assert(rows.length == 4)
       assert(queries.exists(_.sparkSession ne spark), "no query ran in the layout's session")
-      assert(queries.exists(_.executedPlan.collectFirst {
-        case m: InMemoryTableScanExec => m }.nonEmpty), "no query read the child cache")
+      assert(queries.exists(qe => (qe.sparkSession ne spark) &&
+        qe.analyzed.exists(n => n.isInstanceOf[LocalRelation] && childLeaf(n))),
+        "no query of the layout's session read the child's local relation")
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     } finally bench.unpersist()
   }

@@ -17,6 +17,23 @@ import graft.TestSpark
 class ThreeLayerDagSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** The RDD blocks the block manager stored while `f` ran. */
+  private def rddBlocksStoredBy(f: => Unit): Seq[String] = {
+    val stored = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onBlockUpdated(e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
+        if (e.blockUpdatedInfo.blockId.isRDD && e.blockUpdatedInfo.storageLevel.isValid)
+          stored.add(e.blockUpdatedInfo.blockId.name)
+    }
+    org.apache.spark.GraftBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.GraftBusDrain(spark.sparkContext)
+      stored.toArray(Array.empty[String]).toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("raw -> indicators -> summary DAG with geomean rollup") {
     val dir: Path = Files.createTempDirectory("graft_dag")
     def w(name: String, content: String): Unit = {
@@ -95,24 +112,91 @@ class ThreeLayerDagSpec extends AnyFunSuite {
     assert(indM(("base", "erf")) == 1.0 && indM(("base", "exp")) == 1.0)
   }
 
-  test("one evaluation of the corpus summary DAG reads every frame it pinned from its cache") {
-    // q46's DAG: sibling indicators share memoized raw children (daal4py
-    // and sklearn both read raw/sklearn). A parent plan that misses a
-    // pinned frame's cache entry recomputes the frame's lineage inside its
-    // own jobs and leaves the entry unfilled
-    val root = graft.corpus.ReferenceCorpus.ensure(spark, TestSpark.sfDir)
-    val bench = Benchmark(spark, s"$root/summary_indicators.yml")
+  test("one evaluation of a distributed-layout recipe DAG reads every frame it pinned from its cache") {
+    // two sibling indicators share one memoized raw child, as q46's
+    // daal4py and sklearn indicators share raw/sklearn; the raw log is
+    // above the one-partition size rule, so the DAG pins its frames in
+    // the cache. A parent plan that misses a pinned frame's cache entry
+    // recomputes the frame's lineage inside its own jobs and leaves the
+    // entry unfilled
+    val dir: Path = Files.createTempDirectory("graft_dag_big")
+    val log = new StringBuilder
+    var i = 0
+    while (log.length < (5 << 18)) { // 1.25 MB
+      log.append(s"RESULT op=op${i % 7} n=${100 * (1 + i % 3)} mops=${1 + i % 11}.0\n")
+      i += 1
+    }
+    for ((env, prefix) <- Seq("env1" -> "base", "env2" -> "fast")) {
+      Files.createDirectories(dir.resolve(s"runs/$env"))
+      Files.writeString(dir.resolve(s"runs/$env/bench.out"), log.toString)
+      Files.writeString(dir.resolve(s"runs/$env/bench.out.meta"), s"Prefix: $prefix\n")
+    }
+    Files.writeString(dir.resolve("raw_mops.yml"),
+      s"""input:
+         |  path: "$dir/runs/*/*.out"
+         |  csv-header: "op, n, mops"
+         |  filter:
+         |    'RESULT op=(\\w+) n=(\\d+) mops=([\\d.]+)': '\\1,\\2,\\3'
+         |aggregation: mean
+         |values: [mops]
+         |series: [Prefix]
+         |axis: [op, n]
+         |""".stripMargin)
+    for ((name, fn) <- Seq("ratio" -> "ratio_of", "percent" -> "percent_of"))
+      Files.writeString(dir.resolve(s"$name.yml"),
+        s"""input:
+           |  config: [raw_mops.yml]
+           |aggregation: mean
+           |precomputed:
+           |  Ratio: "$fn('mops', Prefix='base')"
+           |values: [Ratio]
+           |series: [Prefix]
+           |axis: [op, n]
+           |""".stripMargin)
+    Files.writeString(dir.resolve("summary.yml"),
+      """input:
+        |  config: [ratio.yml, percent.yml]
+        |aggregation: geomean
+        |values: [Ratio]
+        |series: [Prefix]
+        |""".stripMargin)
+    val bench = Benchmark(spark, dir.resolve("summary.yml").toString)
     try {
-      assert(bench.getAggregatedData().collect().nonEmpty)
+      // every log line of both environments has the same mops: each
+      // ratio is 1 and each percentage 100, so the geomean over both
+      // indicators' rows is 10 for either prefix
+      var rows: Array[org.apache.spark.sql.Row] = null
+      val stored = rddBlocksStoredBy { rows = bench.getAggregatedData().collect() }
+      val m = rows.map(r => r.getAs[Any]("Prefix").toString -> r.getAs[Double]("Ratio")).toMap
+      assert(stored.nonEmpty)
+      assert(m.keySet == Set("base", "fast") && m.values.forall(v => math.abs(v - 10.0) < 1e-9),
+        m.toString)
+      assert(!bench.onePartition)
       val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sharedState.cacheManager
       val pinned = bench.pinnedFrames
       val unread = pinned.filterNot(f =>
         cache.lookupCachedData(f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
           .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded))
-      assert(pinned.size > 24, s"${pinned.size} pinned frames")
+      // the raw parse, the raw child frame (once, shared), two indicator
+      // frames and their two ratio groups
+      assert(pinned.size >= 6, s"${pinned.size} pinned frames")
       assert(unread.isEmpty, s"${unread.size} of ${pinned.size} pinned frames never filled:\n" +
         unread.map(_.columns.mkString(", ")).mkString("\n"))
+    } finally bench.unpersist()
+  }
+
+  test("one evaluation of the corpus summary DAG in the one-partition layout stores no RDD block") {
+    // q46's DAG is below the size rule: its materializations are local
+    // relations on the driver, so nothing is cached and no block is
+    // written, where the distributed layout pins 48 frames
+    val root = graft.corpus.ReferenceCorpus.ensure(spark, TestSpark.sfDir)
+    val bench = Benchmark(spark, s"$root/summary_indicators.yml")
+    try {
+      val stored = rddBlocksStoredBy(assert(bench.getAggregatedData().collect().nonEmpty))
+      assert(bench.onePartition)
+      assert(bench.pinnedFrames.isEmpty, s"${bench.pinnedFrames.size} frames pinned in the cache")
+      assert(stored.isEmpty, s"RDD blocks stored: ${stored.mkString(", ")}")
     } finally bench.unpersist()
   }
 }
